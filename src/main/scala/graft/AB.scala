@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Alternating A/B harness — the q71-fusion / ds65-spool protocol
   * (PROF_r14 §3b, PROF_r16) as a committed tool: run one named query
   * under two values of a SQL conf, ALTERNATING passes in ONE JVM so
@@ -14,15 +12,7 @@ object AB {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, name, key, va, vb) = args.take(5)
     val passes = if (args.length > 5) args(5).toInt else 6
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val fn = SparkEntry.queries(name)
     val times = Map("A" -> scala.collection.mutable.ArrayBuffer.empty[Double],
                     "B" -> scala.collection.mutable.ArrayBuffer.empty[Double])
@@ -33,7 +23,7 @@ object AB {
       val dt = (System.nanoTime() - t0) / 1e9
       times(arm) += dt
       println(f"[ab] $name $arm($key=$v) pass$i: $dt%.3f s")
-      spark.sharedState.cacheManager.clearCache()
+      Harness.hygiene(spark)
     }
     for ((arm, ts) <- times.toSeq.sortBy(_._1))
       println(f"[ab] $name $arm min(passes 2+): ${ts.drop(1).min}%.3f s  all: " +

@@ -2,27 +2,20 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Benchmark main: times every SparkEntry query at the SF dir given by
-  * SPARK_GRAFT_SF_DIR and emits ONE JSON line (stdout + bench_out.json).
+/** The one session and session-state discipline every main and the test
+  * fixture share, so a profile, an A/B, a plan dump and the bench all
+  * plan each query under the same state.
   *
-  * Measurement notes (fixes from round-1 verdict):
-  *  - `df.count()` lets Catalyst prune every unreferenced projection, so
-  *    expression-heavy queries were largely unmeasured. We instead run the
-  *    query's OWN executed plan to completion via `queryExecution.toRdd`
-  *    (RDD count does not re-optimize the logical plan, so all projected
-  *    columns are actually computed, codegen included).
-  *  - Failures are NOT swallowed into -1s: a failing query records
-  *    "error" and the process exits nonzero so the driver sees it.
-  *  - The JSON line is also written to a file: stdout capture truncated
-  *    in round 1 ("parsed": null).
+  * It lives beside [[Bench]] because `perfbench/run.py` reads the
+  * session's literal `.config(key, value)` pairs from this file to
+  * check that its own session matches the bench's.
   */
-object Bench {
-  def main(args: Array[String]): Unit = {
-    val loadStart =
-      try java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
-      catch { case _: Throwable => -1.0 }
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+object Harness {
+  /** `$SPARK_GRAFT_CPUS`, the cores (and shuffle partitions) of a main's
+    * session. */
+  def envCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  def session(cpus: String = envCpus): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -38,52 +31,96 @@ object Bench {
       .config("spark.sql.codegen.cache.maxEntries", "4000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Build-once derived data (partitioned/bucketed tables, statistics,
+    * ER base state, i17/i18's persisted span state): DDL that runs
+    * outside any timed or fingerprinted query, like any CREATE TABLE.
+    * A failing step is reported but not fatal — the query that reads it
+    * then fails on its own — and saying so keeps a broken step from
+    * silently charging its cost to the first query. The closing
+    * [[hygiene]] undoes what the steps set on the session (Stats.ensure
+    * turns CBO on, Bucketed.ensure pins autoBucketedScan off), so no
+    * query plans under build-once state. */
+  def prepare(spark: SparkSession, sf: String): Unit =
+    try {
+      operators.Partitioned.ordersByMonth(spark, sf)
+      operators.Partitioned.ordersByRegionMonth(spark, sf)
+      operators.Partitioned.monthDimTable(spark, sf)
+      operators.Bucketed.ensure(spark, sf)
+      operators.Stats.ensure(spark, sf)
+      operators.EntityResolution.ensureBaseState(spark, sf)
+      operators.Dedup.ensureSpanState(spark, sf, baseSlice = true)
+      operators.Dedup.ensureSpanState(spark, sf, baseSlice = false)
+    } catch {
+      case e: Throwable => System.err.println(s"[harness] build-once failed (non-fatal): ${e.getMessage}")
+    } finally hygiene(spark)
+
+  /** Per-query session hygiene (r5 verdict #2/#5): queries spool shared
+    * streams via localCheckpoint/cache; left persisted, the blocks
+    * accumulate across a 190+-query loop until the BlockManager fills
+    * and later families pay eviction + GC — three r5 runs of identical
+    * code measured 126/338/674 s. Drop each query's blocks before the
+    * next one, and reset the session state queries flip on, so no query
+    * runs under another query's state:
+    *  - x01 turns CBO + join reorder on, x03 the eager-agg rule;
+    *  - Bucketed.ensure pins autoBucketedScan off for b-family reads;
+    *    restore the default so non-b queries plan as in a fresh session
+    *    regardless of order (r8 advice);
+    *  - x07 registers an RLS policy;
+    *  - i03/i04/i10 enable the AQUMV rewrite and register matviews (the
+    *    r11 x11 lesson). */
+  def hygiene(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    spark.conf.set("spark.sql.cbo.enabled", "false")
+    spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
+    spark.conf.set(rules.EagerAggRule.EnabledConf, "false")
+    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
+    rules.RlsRule.clearPolicies(spark)
+    spark.conf.set(rules.AqumvRule.EnabledConf, "false")
+    rules.AqumvRule.clear()
+  }
+
+  /** The box's 1-minute load average, -1 where the OS doesn't report it.
+    * Environment audit trail (r4–r6: official runs measured 2-3.5× the
+    * committed runs of identical code): load before a JVM's own work
+    * tells an auditor whether the box was already contended, the end
+    * value whether contention appeared mid-run. loadavg >> core count ⇒
+    * the artifact measured the sandbox, not the plans. */
+  def loadAvg: Double =
+    try java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
+    catch { case _: Throwable => -1.0 }
+}
+
+/** Benchmark main: times every SparkEntry query at the SF dir given by
+  * SPARK_GRAFT_SF_DIR. Its output is ONE JSON line — per-query times,
+  * both raw sweeps and the environment — written to bench_out.json and
+  * printed as the last stdout line.
+  *
+  * Measurement notes (fixes from round-1 verdict):
+  *  - `df.count()` lets Catalyst prune every unreferenced projection, so
+  *    expression-heavy queries were largely unmeasured. We instead run the
+  *    query's OWN executed plan to completion via `queryExecution.toRdd`
+  *    (RDD count does not re-optimize the logical plan, so all projected
+  *    columns are actually computed, codegen included).
+  *  - Failures are NOT swallowed into -1s: a failing query records
+  *    "error" and the process exits nonzero so the driver sees it.
+  */
+object Bench {
+  def main(args: Array[String]): Unit = {
+    val loadStart = Harness.loadAvg
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = Harness.envCpus
+    val spark = Harness.session(cpus)
     // JVM/codegen warmup on the smallest query so the first measured
     // query doesn't absorb one-time session costs.
-    try {
-      SparkEntry.queries.get("q13_region_nation_matrix")
-        .foreach(fn => fn(spark, sfDir).queryExecution.toRdd.count())
-      // build-once derived data (partitioned table DDL) happens outside
-      // the timed loop, like any CREATE TABLE
-      operators.Partitioned.ordersByMonth(spark, sfDir)
-      operators.Partitioned.ordersByRegionMonth(spark, sfDir)
-      operators.Partitioned.monthDimTable(spark, sfDir)
-      operators.Bucketed.ensure(spark, sfDir)
-      operators.Stats.ensure(spark, sfDir)
-      operators.EntityResolution.ensureBaseState(spark, sfDir)
-      // i17/i18's persisted span state (r15): state build is DDL — the
-      // measured windows contain only the O(Δ) probe / retraction
-      operators.Dedup.ensureSpanState(spark, sfDir, baseSlice = true)
-      operators.Dedup.ensureSpanState(spark, sfDir, baseSlice = false)
-    } catch { // warmup only; the measured loop reports errors — but say so,
-      // or a broken build-once step silently charges its cost to the
-      // first measured query
-      case e: Throwable => System.err.println(s"[bench] warmup failed (non-fatal): ${e.getMessage}")
-    }
+    try SparkEntry.queries.get("q13_region_nation_matrix")
+      .foreach(fn => fn(spark, sfDir).queryExecution.toRdd.count())
+    catch { case e: Throwable => System.err.println(s"[bench] warmup failed (non-fatal): ${e.getMessage}") }
+    Harness.prepare(spark, sfDir)
     var failed = List.empty[String]
-    // Session hygiene (r5 verdict #2/#5): queries spool shared streams
-    // via localCheckpoint/cache; left persisted, the blocks accumulate
-    // across the 190+-query loop until the BlockManager fills and later
-    // families pay eviction + GC — three r5 runs of identical code
-    // measured 126/338/674 s. Drop each query's blocks before the next
-    // measurement, and reset the optimizer confs x01/x03 flip on so no
-    // query runs under another query's session state.
-    def hygiene(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      spark.conf.set("spark.sql.cbo.enabled", "false")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-      spark.conf.set("spark.graft.eageragg.enabled", "false")
-      // Bucketed.ensure pins this off for b-family reads; restore the
-      // default so non-b queries are measured under a fresh-session plan
-      // regardless of sweep order (r8 advice)
-      spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
-      graft.rules.RlsRule.clearPolicies(spark)
-        // i03/i04/i10 enable the AQUMV rewrite and register matviews;
-        // no later query may plan under them (the r11 x11 lesson)
-        spark.conf.set(graft.rules.AqumvRule.EnabledConf, "false")
-        graft.rules.AqumvRule.clear()
-    }
     // Every query is timed in TWO FULL SWEEPS over the whole set, and the
     // official per-query number is the MIN of its two sweep times (r6
     // verdict #1): the sandbox the driver benches in suffers transient
@@ -107,7 +144,7 @@ object Bench {
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             failed ::= name
             name -> -1.0
-        } finally hygiene() // cleanup cost excluded: t1 computed inside try
+        } finally Harness.hygiene(spark) // cleanup cost excluded: t1 computed inside try
       }.toMap
     val s1 = sweep()
     val s2 = sweep()
@@ -122,16 +159,7 @@ object Bench {
     val raw1 = jmap(_._3)
     val raw2 = jmap(_._4)
     val total = results.collect { case (_, v, _, _) if v >= 0 => v }.sum
-    // Environment audit trail (r4–r6: official runs measured 2-3.5× the
-    // committed runs of identical code): system load BEFORE this JVM's
-    // own work is charged to it tells an auditor whether the box was
-    // already contended, and the end value whether contention appeared
-    // mid-run. loadavg >> JVM core count ⇒ the artifact measured the
-    // sandbox, not the plans.
-    def loadAvg: Double =
-      try java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
-      catch { case _: Throwable => -1.0 }
-    val loadEnd = loadAvg
+    val loadEnd = Harness.loadAvg
     // env.cpus = the REQUESTED $SPARK_GRAFT_CPUS (r18 verdict #1: the
     // driver's 8-cpu scaling run recorded cpus:32 because this reported
     // availableProcessors, making the artifact look like the env var was
@@ -141,14 +169,6 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","n_failed":${failed.distinct.size},"timing":"min_of_2_passes","queries_pass1":$raw1,"queries_pass2":$raw2,"env":{"cpus":$cpus,"available_processors":${Runtime.getRuntime.availableProcessors},"load_avg_start":$loadStart,"load_avg_end":$loadEnd}}"""
     Files.writeString(Paths.get("bench_out.json"), line + "\n")
     println(line)
-    // The full line above is ~15 KB at 350+ queries; a driver that keeps
-    // only a tail of stdout truncates it mid-JSON and records
-    // "parsed": null (r9 verdict). Emit a SHORT, self-contained summary
-    // as the LAST line so any last-line / tail parser gets valid JSON,
-    // with a pointer to the per-query file it should ingest instead.
-    val summary =
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${results.size},"n_failed":${failed.distinct.size},"timing":"min_of_2_passes","queries_file":"bench_out.json"}"""
-    println(summary)
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

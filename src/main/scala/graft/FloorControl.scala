@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Exchange-floor control — the PROF_r14 §2 measurement, committed as
@@ -31,16 +31,10 @@ object FloorControl {
     val passes = if (args.length > 1) args(1).toInt else 5
     val rows = if (args.length > 2) args(2).toLong else 260000L
     val keys = if (args.length > 3) args(3).toInt else 27000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the control's join must exchange like a real fact join would,
-      // not collapse to a broadcast
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
+    // the control's join must exchange like a real fact join would,
+    // not collapse to a broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     // X1: fact-cardinality groupBy; X2..: key-remapped re-aggregations
     // (each remap forces a fresh hash exchange); then a non-broadcast
     // join (both sides' exchanges counted by the plan audit) and a

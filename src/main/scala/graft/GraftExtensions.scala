@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** Library entry point for `SparkSession.builder().withExtensions(new
+/** Library entry point for a session builder's `.withExtensions(new
   * GraftExtensions)`: installs the PG function-compat layer and the
   * AQUMV optimizer rule into every session built from the builder —
   * the `CbSession` wiring SURVEY.md §7.1 describes.

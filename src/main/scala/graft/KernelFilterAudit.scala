@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Committed audit for the f09 defect class (PROF_r16): predicate
   * pushdown substitutes non-cheap derived columns into Filter
   * conditions (and scan DataFilters) regardless of cost — only
@@ -69,12 +67,7 @@ object KernelFilterAudit {
     val showLines = args.contains("--lines")
     val dir = args.filterNot(_.startsWith("--")).headOption
       .getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- auditedNames) {
       try {
@@ -95,11 +88,7 @@ object KernelFilterAudit {
             println(s"  | ${l.trim.take(400)}"))
       } catch { case e: Throwable =>
         println(s"[audit] $n SKIP: ${e.getMessage.take(80)}")
-      } finally {
-        // x07 registers an RLS policy; later audited queries (er01/er02
-        // read customer) must not run under it — the Verify discipline
-        graft.rules.RlsRule.clearPolicies(spark)
-      }
+      } finally Harness.hygiene(spark) // no query plans under another's state
     }
     spark.stop()
   }

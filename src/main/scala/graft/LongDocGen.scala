@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Long-document corpus generator for the document-LENGTH scaling axis
@@ -25,14 +24,7 @@ object LongDocGen {
     val dst = args.lift(1).getOrElse("testdata_longdoc")
     val factor = args.lift(2).map(_.toInt).getOrElse(64)
     val heapsDst = args.lift(3).getOrElse("testdata_longdoc_heaps")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val docs = Tables.df(spark, src, "documents")
     val kept = docs.filter(col("doc_id") % factor === 0)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
@@ -92,25 +91,10 @@ object PlanDump {
     // optional comma-separated subset for quick re-checks of named rows
     val subset: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     // same build-once DDL the bench runs outside its timed loop
-    try {
-      operators.Partitioned.ordersByMonth(spark, dir)
-      operators.Partitioned.ordersByRegionMonth(spark, dir)
-      operators.Partitioned.monthDimTable(spark, dir)
-      operators.Bucketed.ensure(spark, dir)
-      operators.Stats.ensure(spark, dir)
-      operators.EntityResolution.ensureBaseState(spark, dir)
-      operators.Dedup.ensureSpanState(spark, dir, baseSlice = true)
-      operators.Dedup.ensureSpanState(spark, dir, baseSlice = false)
-    } catch { case e: Throwable => System.err.println(s"[plandump] warmup: ${e.getMessage}") }
+    Harness.prepare(spark, dir)
     val sb = new StringBuilder("{\n  \"sf\": \"").append(dir).append("\",\n  \"queries\": {\n")
     var first = true
     var nFailed = 0
@@ -129,10 +113,7 @@ object PlanDump {
       } catch { case e: Throwable =>
         nFailed += 1
         System.err.println(s"[plandump] $n FAILED: ${e.getMessage.take(120)}")
-      } finally {
-        // x07 registers an RLS policy; no later query may plan under it
-        graft.rules.RlsRule.clearPolicies(spark)
-      }
+      } finally Harness.hygiene(spark) // no query plans under another's state
     }
     sb.append("\n  }\n}\n")
     java.nio.file.Files.write(java.nio.file.Paths.get(out),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graft.ListenerBus
 import java.nio.file.{Files, Paths}
 
 /** Dump `.explain("formatted")` for named SparkEntry queries to files —
@@ -9,12 +9,12 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: runMain graft.PlanExplain <sfDir> <outDir> <suffix> <q1,q2,...>
   *
-  * Writes <outDir>/<query>_<suffix>.txt. Uses the same session confs as
-  * Bench so the plans match what the bench executes. The formatted plan
-  * is the INITIAL plan (AQE isFinalPlan=false) plus, appended, the
-  * post-execution final plan string — both shapes matter: the initial
-  * one shows join strategy / pushdown decisions, the final one shows
-  * what AQE actually ran.
+  * Writes <outDir>/<query>_<suffix>.txt. Uses Bench's session, build-once
+  * step and per-query hygiene, so the plans match what the bench
+  * executes. The formatted plan is the INITIAL plan (AQE
+  * isFinalPlan=false) plus, appended, the post-execution final plan
+  * string — both shapes matter: the initial one shows join strategy /
+  * pushdown decisions, the final one shows what AQE actually ran.
   */
 object PlanExplain {
   def main(args: Array[String]): Unit = {
@@ -22,25 +22,8 @@ object PlanExplain {
     val outDir = args(1)
     val suffix = args(2)
     val names = args(3).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      operators.Partitioned.ordersByMonth(spark, sfDir)
-      operators.Partitioned.ordersByRegionMonth(spark, sfDir)
-      operators.Partitioned.monthDimTable(spark, sfDir)
-      operators.Bucketed.ensure(spark, sfDir)
-      operators.Stats.ensure(spark, sfDir)
-      operators.EntityResolution.ensureBaseState(spark, sfDir)
-      operators.Dedup.ensureSpanState(spark, sfDir, baseSlice = true)
-      operators.Dedup.ensureSpanState(spark, sfDir, baseSlice = false)
-    } catch { case e: Throwable => System.err.println(s"[plan] warmup: ${e.getMessage}") }
+    val spark = Harness.session()
+    Harness.prepare(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     // r18 verdict #6: changes upstream of a localCheckpoint were invisible
     // in the dumped final plan (the spool truncates lineage — the ds64 and
@@ -58,11 +41,14 @@ object PlanExplain {
     }
     spark.listenerManager.register(listener)
     names.foreach { name =>
+      // listener events are delivered async on the listener bus: drain it
+      // so earlier work's events (build-once, the previous query) are
+      // dropped, and again so every build-phase action has landed before
+      // snapshotting
+      ListenerBus.drain(spark.sparkContext)
       spoolPlans.clear()
       val df = SparkEntry.queries(name)(spark, sfDir)
-      // listener events are delivered async on the listener bus; give the
-      // build-phase actions time to land before snapshotting
-      Thread.sleep(1000)
+      ListenerBus.drain(spark.sparkContext)
       val built = {
         import scala.jdk.CollectionConverters._
         spoolPlans.asScala.toVector
@@ -81,8 +67,7 @@ object PlanExplain {
           s"== executed plan after AQE ==\n$finalPlan\n" + buildSection)
       println(s"[plan] wrote $outDir/${name}_$suffix.txt" +
         (if (built.nonEmpty) s" (+${built.size} build-phase plans)" else ""))
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Harness.hygiene(spark)
     }
     spark.listenerManager.unregister(listener)
     spark.stop()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query profiler: times one named SparkEntry query N times at a
   * given SF dir and prints the executed plan, so a slow bench entry can
   * be attributed to plan cost vs environment noise without a full sweep.
@@ -19,28 +17,11 @@ object Prof {
     val name = args(1)
     val passes = args.drop(2).find(!_.startsWith("--")).map(_.toInt).getOrElse(3)
     val showPlan = args.contains("--plan")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val names = name.split(",").toSeq
     val fns = names.map(n => n -> SparkEntry.queries(n))
     // same build-once DDL the bench runs outside its timed loop
-    try {
-      operators.Partitioned.ordersByMonth(spark, sfDir)
-      operators.Partitioned.ordersByRegionMonth(spark, sfDir)
-      operators.Partitioned.monthDimTable(spark, sfDir)
-      operators.Bucketed.ensure(spark, sfDir)
-      operators.Stats.ensure(spark, sfDir)
-      operators.EntityResolution.ensureBaseState(spark, sfDir)
-      operators.Dedup.ensureSpanState(spark, sfDir, baseSlice = true)
-      operators.Dedup.ensureSpanState(spark, sfDir, baseSlice = false)
-    } catch { case e: Throwable => System.err.println(s"[prof] warmup: ${e.getMessage}") }
+    Harness.prepare(spark, sfDir)
     val times = scala.collection.mutable.Map.empty[String, List[Double]]
     for (i <- 1 to passes; (n, fn) <- fns) {
       val t0 = System.nanoTime()
@@ -48,14 +29,14 @@ object Prof {
       val dt = (System.nanoTime() - t0) / 1e9
       times(n) = times.getOrElse(n, Nil) :+ dt
       println(f"[prof] $n pass$i: $dt%.3f s")
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Harness.hygiene(spark)
     }
     for (n <- names; ts <- times.get(n); if ts.size > 1)
       println(f"[prof] $n idle_min_p2plus: ${ts.drop(1).min}%.3f s  raw: ${ts.map(t => f"$t%.3f").mkString("/")}")
     if (showPlan) fns.foreach { case (n, fn) =>
       println(s"== plan: $n ==")
       println(fn(spark, sfDir).queryExecution.executedPlan.toString)
+      Harness.hygiene(spark)
     }
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Scale-up sweep, two axes.
@@ -138,34 +137,8 @@ object Scaling {
     val outPath = args.lift(2).getOrElse("SCALING_r10.json")
     val longDir = args.lift(3).getOrElse("testdata_longdoc")
     val heapsDir = args.lift(4).getOrElse("testdata_longdoc_heaps")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def loadAvg: Double =
-      try java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
-      catch { case _: Throwable => -1.0 }
-    val loadStart = loadAvg
-
-    def hygiene(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      spark.conf.set("spark.sql.cbo.enabled", "false")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-      spark.conf.set("spark.graft.eageragg.enabled", "false")
-      spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
-      graft.rules.RlsRule.clearPolicies(spark)
-        // i03/i04/i10 enable the AQUMV rewrite and register matviews;
-        // no later query may plan under them (the r11 x11 lesson)
-        spark.conf.set(graft.rules.AqumvRule.EnabledConf, "false")
-        graft.rules.AqumvRule.clear()
-    }
+    val spark = Harness.session()
+    val loadStart = Harness.loadAvg
 
     // warmup (codegen + JVM) on a small query at each dir; i17/i18's
     // persisted span state builds here too (state build is DDL — the
@@ -180,7 +153,7 @@ object Scaling {
         warmDerived(dir)
       }
       catch { case e: Throwable => System.err.println(s"[scaling] warmup $dir failed: ${e.getMessage}") }
-      hygiene()
+      Harness.hygiene(spark)
     }
 
     var failed = List.empty[String]
@@ -195,7 +168,7 @@ object Scaling {
             System.err.println(s"[scaling] $name @ $dir FAILED: ${e.getMessage}")
             failed ::= s"$name@$dir"
             name -> -1.0
-        } finally hygiene()
+        } finally Harness.hygiene(spark)
       }.toMap
 
     // two separated sweeps per scale, alternating scales so the two
@@ -222,7 +195,7 @@ object Scaling {
       warmDerived(longDir)
     }
     catch { case e: Throwable => System.err.println(s"[scaling] warmup $longDir failed: ${e.getMessage}") }
-    hygiene()
+    Harness.hygiene(spark)
     val lenShort1 = sweep(smallDir, LenTargets)
     val lenLong1 = sweep(longDir, LenTargets)
     val lenShort2 = sweep(smallDir, LenTargets)
@@ -238,7 +211,7 @@ object Scaling {
     // HEAPS axis: short (sf0.1) vs vocabulary-growing long-doc corpus
     try SparkEntry.queries("t21_word_entropy")(spark, heapsDir).queryExecution.toRdd.count()
     catch { case e: Throwable => System.err.println(s"[scaling] warmup $heapsDir failed: ${e.getMessage}") }
-    hygiene()
+    Harness.hygiene(spark)
     val hShort1 = sweep(smallDir, HeapsTargets)
     val hLong1 = sweep(heapsDir, HeapsTargets)
     val hShort2 = sweep(smallDir, HeapsTargets)
@@ -274,7 +247,7 @@ object Scaling {
       s""""queries":$heapsJson,""" +
       s""""superlinear":[${heapsSuper.map("\"" + _ + "\"").mkString(",")}]},""" +
       s""""n_failed":${failed.distinct.size},"timing":"min_of_2_alternating_sweeps",""" +
-      s""""env":{"cpus":${Runtime.getRuntime.availableProcessors},"load_avg_start":$loadStart,"load_avg_end":$loadAvg}}"""
+      s""""env":{"cpus":${Runtime.getRuntime.availableProcessors},"load_avg_start":$loadStart,"load_avg_end":${Harness.loadAvg}}}"""
     Files.writeString(Paths.get(outPath), line + "\n")
     println(line)
     spark.stop()

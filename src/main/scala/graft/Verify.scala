@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -21,16 +20,7 @@ object Verify {
     // optional: query names to restrict to (local iteration only; the
     // driver always runs the full set)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // hold every generated class of the full suite (see Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -39,25 +29,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally {
-        // same per-query session hygiene as Bench: drop spooled blocks,
-        // reset the optimizer confs x01/x03 set, so no query's dump runs
-        // under another query's session state
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        spark.conf.set("spark.sql.cbo.enabled", "false")
-        spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-        spark.conf.set("spark.graft.eageragg.enabled", "false")
-        // Bucketed.ensure pins this off for b-family reads; restore the
-        // default so later queries' plans don't depend on run order
-        spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
-        // x07 registers an RLS policy; no later query may run under it
-        graft.rules.RlsRule.clearPolicies(spark)
-        // i03/i04/i10 enable the AQUMV rewrite and register matviews;
-        // no later query may plan under them (the r11 x11 lesson)
-        spark.conf.set(graft.rules.AqumvRule.EnabledConf, "false")
-        graft.rules.AqumvRule.clear()
-      }
+      } finally Harness.hygiene(spark) // no dump runs under another query's session state
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -32,8 +32,8 @@ object Bucketed {
     // also forfeits bucket PRUNING on key-equality probes (b03's whole
     // point). Pin layout reads on while a b-family plan is built and
     // executed; because execution is lazy the restore can't live here —
-    // every runner (Bench/Verify hygiene, QueriesSpec/PlanShapeSpec
-    // finallys) resets this conf to its default after each query, so a
+    // every runner (Harness.hygiene, in every main and test fixture)
+    // resets this conf to its default after each query, so a
     // b-query can't leak layout-pinning into later plans (r8 advice).
     s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     val (ot, lt) = (s"orders_bucketed_${tag(dir)}", s"lineitem_bucketed_${tag(dir)}")

@@ -271,10 +271,8 @@ object AqumvRule {
 
   def clear(): Unit = entries.clear()
 
-  private[rules] def debugEntries(): Seq[MvEntry] = {
-    import scala.jdk.CollectionConverters._
-    entries.values.asScala.toSeq
-  }
+  /** True when no matview is registered. */
+  def isEmpty: Boolean = entries.isEmpty
 
   /** The file-source root paths under an aggregate input, looking through
     * column-pruning projections. */

@@ -37,11 +37,7 @@ class KernelFilterSpec extends AnyFunSuite {
         val df = SparkEntry.queries(n)(spark, Sf)
         df.queryExecution.toRdd.count() // settle AQE
         df.queryExecution.executedPlan.toString
-      } finally {
-        // x07 registers an RLS policy; no later query (in ANY suite
-        // sharing this session) may run under it — the Verify discipline
-        graft.rules.RlsRule.clearPolicies(spark)
-      }
+      } finally Harness.hygiene(spark) // no later query (in ANY suite) runs under its state
       if (KernelFilterAudit.hasSignature(p)) {
         allow.get(n) match {
           case Some(reason) => info(s"allowlisted: $reason")

@@ -41,11 +41,11 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(p.contains("EqualTo(c_mktsegment,BUILDING)"),
         s"policy qual must reach PushedFilters:\n$p")
       // and with no policy registered, the same query plans WITHOUT it
-      graft.rules.RlsRule.clearPolicies(spark)
+      Harness.hygiene(spark)
       val bare = finalPlan(
         graft.operators.Stats.queries("x07_rls_policy")(spark, Sf))
       // (the query closure re-registers the policy, so build a copy w/o it)
-      graft.rules.RlsRule.clearPolicies(spark)
+      Harness.hygiene(spark)
       val df = graft.Tables.df(spark, Sf, "customer")
         .join(graft.Tables.df(spark, Sf, "nation"),
           org.apache.spark.sql.functions.col("c_nationkey") ===
@@ -54,7 +54,7 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(!finalPlan(df).contains("c_mktsegment"),
         "without a policy the qual must not appear")
       assert(bare.contains("EqualTo(c_mktsegment,BUILDING)"))
-    } finally graft.rules.RlsRule.clearPolicies(spark)
+    } finally Harness.hygiene(spark)
   }
 
   test("q05: star join uses broadcast hash joins, no sort-merge on dims") {
@@ -1200,11 +1200,18 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("partial_sum"), s"pre-agg must split partial/final:\n$p")
   }
 
-  test("ds65: the per-(store,item) aggregate is spooled — its re-aggregation and join read no parquet") {
+  test("ds65: one fact pass; the per-nat totals are a Window over the per-(nat, part) aggregate") {
+    // r19: the spec's spool + re-aggregate + join-back is one window
+    // partitioned by the aggregate's own key (TpcDs.Ds65Window)
     val p = plan("ds65_underperforming").split("== Initial Plan ==")(0)
-    val scans = "Scan parquet|FileScan parquet".r.findAllIn(p).length
-    assert(scans == 0, s"both references must read the spool, got $scans parquet scans:\n$p")
-    assert(p.contains("ExistingRDD"), s"expected the checkpointed item_rev spool:\n$p")
+    val lines = p.linesIterator.toSeq
+    val factScans = lines.count(l => l.contains("Scan parquet") && l.contains("lineitem"))
+    assert(factScans == 1, s"expected one pass over lineitem, got $factScans scans:\n$p")
+    val winIdx = lines.indexWhere(_.matches(".*\\bWindow\\b.*"))
+    assert(winIdx >= 0, s"no Window in:\n$p")
+    assert(lines.drop(winIdx + 1).exists(_.contains("HashAggregate")),
+      s"the window must run over the per-(nat, part) HashAggregate:\n$p")
+    assert(!p.contains("ExistingRDD"), s"ds65 must not spool:\n$p")
     assert(!p.contains("CartesianProduct"), s"ds65 went cartesian:\n$p")
   }
 

@@ -11,13 +11,7 @@ object SparkSuite {
   val Sf: String = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Harness.session("8")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
