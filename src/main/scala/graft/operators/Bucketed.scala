@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Derived, Tables}
 
 /** Distribution metadata — `DISTRIBUTED BY` ≙ bucketed tables
   * (`src/include/catalog/gp_distribution_policy.h:86-111`, SURVEY §1.2,
@@ -19,8 +19,6 @@ object Bucketed {
 
   private val NumBuckets = 8
 
-  private def tag(dir: String) = dir.replaceAll("[^A-Za-z0-9]", "_")
-
   /** Build-once per session: register orders/lineitem bucketed by their
     * join key (the session catalog is in-memory, so each JVM re-writes
     * into the shared warehouse directory — CREATE TABLE ... DISTRIBUTED
@@ -36,21 +34,8 @@ object Bucketed {
     // resets this conf to its default after each query, so a
     // b-query can't leak layout-pinning into later plans (r8 advice).
     s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    val (ot, lt) = (s"orders_bucketed_${tag(dir)}", s"lineitem_bucketed_${tag(dir)}")
-    def create(table: String, src: String, key: String): Unit =
-      if (!s.catalog.tableExists(table)) {
-        // a previous JVM may have left the managed location behind while
-        // the in-memory catalog entry died with it — clear the location
-        // so CREATE TABLE succeeds (re-running the DDL)
-        val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-        val loc = new java.io.File(wh, table.toLowerCase)
-        if (loc.exists()) {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete()
-          }
-          rm(loc)
-        }
+    def create(base: String, src: String, key: String): String =
+      Derived.table(s, dir, base) { table =>
         // repartition on the bucket key with numPartitions == numBuckets:
         // Spark's repartition hash (Murmur3 pmod n) IS the bucket-id hash,
         // so each task holds exactly one bucket → ONE file per bucket.
@@ -63,9 +48,8 @@ object Bucketed {
           .write.mode("overwrite").bucketBy(NumBuckets, key)
           .sortBy(key).format("parquet").saveAsTable(table)
       }
-    create(ot, "orders", "o_orderkey")
-    create(lt, "lineitem", "l_orderkey")
-    (ot, lt)
+    (create("orders_bucketed", "orders", "o_orderkey"),
+      create("lineitem_bucketed", "lineitem", "l_orderkey"))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Derived, Tables}
 
 /** Deduplication operators for training-data pipelines: exact
   * (hash-groupBy), n-gram Jaccard via inverted-index join, MinHash+LSH
@@ -636,97 +636,33 @@ object Dedup {
   private[graft] final case class SpanState(
     wins: DataFrame, census: DataFrame, ntok: DataFrame)
 
-  /** Build-and-persist the span state as parquet, idempotent per
-    * (warehouse, SF dir, slice): the window index (the big relation,
-    * 8 B/token keys) writes once, and the census derives from the
-    * WRITTEN index, so the corpus text is fingerprinted exactly once
-    * ever. `baseSlice` selects i17's base corpus (doc_id % 4 ≠ 0, what
-    * the append probe runs against) vs the full corpus (i18's
-    * retraction state). Bench/Prof/Scaling build it in warmup like any
-    * other derived table (er02's ensureBaseState discipline). */
+  /** Build-and-persist the span state as parquet, once per (SF dir,
+    * slice) and again when documents.parquet changes ([[Derived]]): the
+    * window index (the big relation, 8 B/token keys) writes once, and the
+    * census derives from the WRITTEN index. `baseSlice` selects i17's base
+    * corpus (doc_id % 4 ≠ 0, what the append probe runs against) vs the
+    * full corpus (i18's retraction state). Bench/Prof/Scaling build it in
+    * warmup like any other derived table; PlanShapeSpec greps the probe
+    * plans for the `span_base_` / `span_full_` leaves. */
   private[graft] def ensureSpanState(s: SparkSession, dir: String,
                                      baseSlice: Boolean): SpanState = {
-    // The derived-path stem carries the SOURCE corpus fingerprint
-    // (mtime, size of documents.parquet — the Tables.df schema-memo
-    // key, r15 advice finding): a documents.parquet regenerated in
-    // place gets a fresh path and rebuilds, instead of the _SUCCESS
-    // check silently serving span state for the old corpus. The
-    // fingerprint compresses to 8 hex chars IN THE LEAF name (not the
-    // tag) so the full path stays under plan-string location
-    // truncation — PlanShapeSpec greps the probe plan for the
-    // span_base_/span_full_ leaf.
-    val src = new java.io.File(s"$dir/documents.parquet")
-    // a missing source would fingerprint as (0, 0) and proceed to build
-    // state from an empty read — fail fast instead
-    require(src.exists, s"ensureSpanState: no documents.parquet under $dir")
-    // (mtime, length) alone can collide: a corpus regenerated in place
-    // within the same millisecond at the same byte length would
-    // silently serve stale state (r16 advice). Fold the parquet FOOTER
-    // bytes (last ≤64 KiB per file — row-group metadata + column
-    // stats, which change with any content change) into a 64-bit
-    // FNV-1a; 16 hex chars still keeps the leaf name under plan-string
-    // truncation. The corpus can be a single parquet FILE (the driver
-    // testdata) or a Spark-written DIRECTORY of part files (the
-    // scaling corpora) — the walk covers both, mixing every child's
-    // name/mtime/length so added or renamed parts also re-key.
-    val fp = {
-      var h = 0xcbf29ce484222325L
-      def mix(b: Long): Unit = { h ^= b; h *= 0x100000001b3L }
-      def footer(f: java.io.File): Unit = {
-        val in = new java.io.RandomAccessFile(f, "r")
-        try {
-          val n = math.min(f.length, 65536L).toInt
-          in.seek(f.length - n)
-          val buf = new Array[Byte](n)
-          in.readFully(buf)
-          buf.foreach(b => mix(b & 0xffL))
-        } finally in.close()
-      }
-      def walk(f: java.io.File): Unit = {
-        f.getName.foreach(c => mix(c.toLong))
-        mix(f.lastModified); mix(f.length)
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty)
-            .sortBy(_.getName).foreach(walk)
-        else if (f.getName.endsWith(".parquet") && f.length > 0) footer(f)
-      }
-      walk(src)
-      f"$h%016x"
-    }
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = if (baseSlice) "span_base" else "span_full"
-    val stem = s"${base}_$fp"
-    // retire SIBLING fingerprints of the same slice: each in-place
-    // regeneration of the corpus would otherwise leave its three
-    // derived dirs behind forever (unbounded disk growth across rounds)
-    Option(new java.io.File(s"target/derived/$tag").listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(base + "_")
-        && !f.getName.startsWith(stem))
-      .foreach { stale =>
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete()
-        }
-        rm(stale)
-      }
-    val (wp, cp, np) = (s"target/derived/$tag/${stem}_wins",
-      s"target/derived/$tag/${stem}_census", s"target/derived/$tag/${stem}_ntok")
-    val done = Seq(wp, cp, np).forall(p => new java.io.File(p, "_SUCCESS").exists())
-    if (!done) {
-      val t0 = System.nanoTime()
-      graft.functions.PgFunctions.register(s)
-      val all = graft.Tables.df(s, dir, "documents")
-      val docs = if (baseSlice) all.filter(col("doc_id") % 4 =!= 0) else all
-      positionalWindowsOf(docs).write.mode("overwrite").parquet(wp)
-      s.read.parquet(wp).groupBy(col("fp"))
-        .agg(count_distinct(col("doc_id")).as("nd"), max(col("doc_id")).as("m"))
-        .select(col("fp"), col("nd"), when(col("nd") === 1, col("m")).as("solo"))
-        .write.mode("overwrite").parquet(cp)
-      ntokOf(docs).write.mode("overwrite").parquet(np)
-      // one-line build log: the DDL cost is visible and attributable
-      // (it runs in warmup / first use, never inside a measured window)
-      println(f"[span-state] built $stem at $dir in ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    val stem = if (baseSlice) "span_base" else "span_full"
+    val Seq(wp, cp, np) = Derived.onceAll(dir,
+        Seq(s"${stem}_wins", s"${stem}_census", s"${stem}_ntok"), "documents") {
+      case Seq(winsOut, censusOut, ntokOut) =>
+        val t0 = System.nanoTime()
+        graft.functions.PgFunctions.register(s)
+        val all = graft.Tables.df(s, dir, "documents")
+        val docs = if (baseSlice) all.filter(col("doc_id") % 4 =!= 0) else all
+        positionalWindowsOf(docs).write.mode("overwrite").parquet(winsOut)
+        s.read.parquet(winsOut).groupBy(col("fp"))
+          .agg(count_distinct(col("doc_id")).as("nd"), max(col("doc_id")).as("m"))
+          .select(col("fp"), col("nd"), when(col("nd") === 1, col("m")).as("solo"))
+          .write.mode("overwrite").parquet(censusOut)
+        ntokOf(docs).write.mode("overwrite").parquet(ntokOut)
+        // one-line build log: the DDL cost is visible and attributable
+        // (it runs in warmup / first use, never inside a measured window)
+        println(f"[span-state] built $stem at $dir in ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     SpanState(s.read.parquet(wp), s.read.parquet(cp), s.read.parquet(np))
   }

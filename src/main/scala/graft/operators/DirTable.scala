@@ -6,7 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Derived, Tables}
 
 /** Directory tables — Cloudberry's managed-file-catalog relation
   * (`src/backend/catalog/pg_directory_table.c`, the feature's own
@@ -90,7 +90,7 @@ object DirTable {
   private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def rootFor(dir: String): String =
-    s"target/derived/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/dirtable_doc_store"
+    Derived.path(dir, "dirtable_doc_store")
 
   /** The table's file store as a FULLY-QUALIFIED Hadoop path (scheme
     * included), plus its FileSystem — executors re-resolve the same URI

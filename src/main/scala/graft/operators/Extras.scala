@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Derived, Tables}
 
 /** Remaining native-API inventory rows (VERDICT round-1 "small gaps"):
   * INTERSECT ALL (nodeSetOp.c multiset mode), FETCH ... WITH TIES
@@ -349,12 +349,10 @@ object Extras {
     // -- external table (readable): JSON-lines landing file read through
     //    schema-on-read (`url_file.c` / gpfdist analog; FDW surface) --
     "q67_external_json" -> { (s, dir) =>
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val path = s"target/derived/$tag/docs_external_json"
-      if (!new java.io.File(path + "/_SUCCESS").exists()) {
+      val path = Derived.once(dir, "docs_external_json", "documents") { p =>
         Tables.df(s, dir, "documents")
           .select(col("doc_id"), col("lang"), col("n_chars"))
-          .write.mode("overwrite").json(path)
+          .write.mode("overwrite").json(p)
       }
       s.read.json(path) // schema inferred from the external file
         .groupBy(col("lang"))

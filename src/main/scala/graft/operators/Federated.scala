@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Derived, Tables}
 
 /** Federated / remote-table reads — the `postgres_fdw` + `dblink`
   * surface (`contrib/postgres_fdw/postgres_fdw.c` plans foreign scans
@@ -40,10 +40,10 @@ object Federated {
 
   private def setup(s: SparkSession, dir: String): String =
     built.computeIfAbsent(dir, { _ =>
-      val home = new java.io.File("target/derived/derby_home").getAbsolutePath
+      val home = new java.io.File(Derived.path("derby_home")).getAbsolutePath
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(home))
       System.setProperty("derby.system.home", home)
-      val db = s"fed_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val db = s"fed_${Derived.tag(dir)}"
       val url = s"jdbc:derby:$db;create=true"
       // "CREATE SERVER" load: the operational DB owns the nation dim.
       // VARCHAR column types (not the dialect's CLOB default) so the

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Derived, Tables}
 
 /** GP DDL text front-end — the `CREATE TABLE … DISTRIBUTED BY (k)
   * PARTITION BY RANGE (c) (START … END … EVERY …)` surface a Cloudberry
@@ -110,17 +110,7 @@ object GpDdl {
     * (dir-tagged so SFs don't collide). Build-once per session. */
   def create(s: SparkSession, ddl: String, source: DataFrame, tag: String): String = {
     val td = parse(ddl)
-    val table = s"${td.name}_${tag.replaceAll("[^A-Za-z0-9.]", "_").replace(".", "_")}"
-    if (!s.catalog.tableExists(table)) {
-      val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      val loc = new java.io.File(wh, table.toLowerCase)
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(loc)
-      }
+    Derived.table(s, tag, td.name) { table =>
       val projected = source.select(td.cols.map(c => col(c._1)): _*)
       val routed = td.part match {
         case Some(p) => projected.withColumn(s"${p.col}_prt", routeExpr(p))
@@ -136,7 +126,6 @@ object GpDdl {
           .sortBy(td.distKeys.head, td.distKeys.tail: _*)
       w.saveAsTable(table)
     }
-    table
   }
 
   // ---------------------------------------------------------------
@@ -203,9 +192,8 @@ object GpDdl {
   def createDynamicTable(s: SparkSession, ddl: String, tag: String)
       : (graft.streaming.DynamicTable, graft.streaming.RefreshScheduler, DynamicTableDef) = {
     val dt = parseDynamicTable(ddl)
-    val path =
-      s"target/derived/${tag.replaceAll("[^A-Za-z0-9.]", "_")}/ddl06_${dt.name}"
-    val table = new graft.streaming.DynamicTable(s, path, () => s.sql(dt.selectSql))
+    val table = new graft.streaming.DynamicTable(s, Derived.path(tag, s"ddl06_${dt.name}"),
+      () => s.sql(dt.selectSql))
     val sched = new graft.streaming.RefreshScheduler(table,
       scheduleIntervalMs(dt.schedule))
     (table, sched, dt)
@@ -387,18 +375,14 @@ object GpDdl {
       route: String => String, stages: Map[String, DataFrame] = Map.empty): AlterOp = {
     val op = parseAlter(ddl)
     val dirF = new java.io.File(basePath, s"$partCol=${route(op.forValue)}")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
     op match {
       case _: AddPart => dirF.mkdirs()
       case _: DropPart =>
         require(dirF.exists(), s"ddl: partition for '${op.forValue}' does not exist")
-        rm(dirF)
+        Derived.delete(dirF)
       case _: TruncatePart =>
         require(dirF.exists(), s"ddl: partition for '${op.forValue}' does not exist")
-        dirF.listFiles().foreach(rm)
+        Option(dirF.listFiles()).getOrElse(Array.empty).foreach(Derived.delete)
       case ExchangePart(_, _, w) =>
         val stage = stages.getOrElse(w, throw new IllegalArgumentException(
           s"ddl: EXCHANGE references unknown table '$w'"))
@@ -476,10 +460,6 @@ object GpDdl {
     * crash states directly. */
   def recoverInterruptedSplits(basePath: String): Int = {
     val base = new java.io.File(basePath)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete()
-    }
     val all = Option(base.listFiles()).getOrElse(Array.empty)
     val stages = all.filter(f => f.isDirectory && f.getName.startsWith(SplitTmpPrefix))
     // Belt to the DSYNC marker write's braces: if ANY tombstone exists
@@ -503,15 +483,15 @@ object GpDdl {
         // so the source is still intact under its own name and the
         // stage is discardable staging garbage (the r14-advice fix:
         // this used to require-fail and wedge every later split).
-        rm(tmp)
+        Derived.delete(tmp)
       } else {
         val srcName = new String(java.nio.file.Files.readAllBytes(marker.toPath),
           java.nio.charset.StandardCharsets.UTF_8).trim
         val src = new java.io.File(base, srcName)
         val tomb = new java.io.File(base, s"$SplitRmPrefix$srcName")
-        if (src.exists() && !tomb.exists()) rm(tmp) // state (a)
+        if (src.exists() && !tomb.exists()) Derived.delete(tmp) // state (a)
         else { // state (b): complete the publish
-          if (tomb.exists()) rm(tomb)
+          Derived.delete(tomb)
           val dstName = tmp.getName.stripPrefix(SplitTmpPrefix)
           val dst = new java.io.File(base, dstName)
           if (dst.exists()) {
@@ -548,7 +528,7 @@ object GpDdl {
     }
     Option(base.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith(SplitRmPrefix))
-      .foreach(rm)
+      .foreach(Derived.delete)
     stages.length
   }
 
@@ -576,10 +556,6 @@ object GpDdl {
     val srcDirName = s"$partCol=${route(op.forValue)}"
     val dirF = new java.io.File(basePath, srcDirName)
     require(dirF.exists(), s"ddl: partition for '${op.forValue}' does not exist")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete()
-    }
     val rows = s.read.parquet(dirF.getAbsolutePath).localCheckpoint(true)
     val pred = belowAt(op.atValue)
     val stages = Seq((op.firstName, pred), (op.secondName, !pred)).map {
@@ -623,7 +599,7 @@ object GpDdl {
     val tomb = new java.io.File(basePath, s"$SplitRmPrefix$srcDirName")
     require(dirF.renameTo(tomb),
       s"ddl: could not retire source partition $srcDirName")
-    rm(tomb)
+    Derived.delete(tomb)
     stages.foreach { case (tmp, dst) =>
       require(tmp.renameTo(dst),
         s"ddl: could not publish split partition ${dst.getName}")
@@ -706,10 +682,8 @@ object GpDdl {
   /** Build-once CSV behind ddl02's LOCATION: orders rendered as text
     * with a deterministic malformed-cents rule (c01's discipline), so
     * the sreh accounting is oracle-checkable. */
-  private def externalCsvPath(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/derived/$tag/ext_orders_csv"
-    if (!new java.io.File(path + "/_SUCCESS").exists()) {
+  private def externalCsvPath(s: SparkSession, dir: String): String =
+    Derived.once(dir, "ext_orders_csv", "orders") { path =>
       Tables.df(s, dir, "orders").select(concat_ws(",",
         col("o_orderkey"),
         when(col("o_orderkey") % 10 === 3, lit("notanumber"))
@@ -717,8 +691,6 @@ object GpDdl {
         col("o_orderstatus")).as("value"))
         .coalesce(1).write.mode("overwrite").text(path)
     }
-    path
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // -- ddl02: external-table DDL text (gram.y:7195) — LOCATION +
@@ -752,8 +724,7 @@ object GpDdl {
     //    declared months changed and every other partition's bytes were
     //    never touched --
     "ddl03_partition_maintenance" -> { (s, dir) =>
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/derived/$tag/ddl03_orders"
+      val base = Derived.path(dir, "ddl03_orders")
       val monthOf: String => String = d => d.substring(0, 7)
       // rebuild the scratch table (fresh every run → idempotent script);
       // scoped to the maintenance window the script touches/reports, and
@@ -794,8 +765,7 @@ object GpDdl {
     //    halves and every untouched month are all visible to the
     //    oracle, which re-derives the labels from the raw dates --
     "ddl07_split_partition" -> { (s, dir) =>
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/derived/$tag/ddl07_orders"
+      val base = Derived.path(dir, "ddl07_orders")
       val monthOf: String => String = d => d.substring(0, 7)
       Tables.df(s, dir, "orders")
         .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
@@ -832,9 +802,8 @@ object GpDdl {
     //    breaks the compare. At 100 TB: one scan + one write of the
     //    surviving fraction; untouched generations are never read --
     "ddl05_vacuum_compact" -> { (s, dir) =>
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/derived/$tag/ddl05_orders"
-      val gen2 = s"target/derived/$tag/ddl05_orders_gen2"
+      val base = Derived.path(dir, "ddl05_orders")
+      val gen2 = Derived.path(dir, "ddl05_orders_gen2")
       // build the fragmented AO relation (fresh each run → idempotent)
       Tables.df(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Derived, Tables}
 import graft.streaming.{DynamicTable, IvmMatview}
 
 /** Incremental-layer queries: the correctness gate runs the REFRESH
@@ -75,8 +75,7 @@ object Incremental {
 
     // -- dynamic table: scheduled refresh re-materializes the definition --
     "i02_dynamic_table" -> { (s, dir) =>
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val dt = new DynamicTable(s, s"target/derived/$tag/dt_daily_revenue",
+      val dt = new DynamicTable(s, Derived.path(dir, "dt_daily_revenue"),
         () => Tables.df(s, dir, "orders")
           .groupBy(date_trunc("day", col("o_orderdate")).as("day"))
           .agg(count(lit(1)).as("n_orders"),
@@ -288,13 +287,7 @@ object Incremental {
     // -- AQUMV: the optimizer answers the aggregate from the matview --
     "i03_aqumv" -> { (s, dir) =>
       val defDf = aqumvDefinition(s, dir)
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val path = s"target/derived/$tag/mv_status_revenue"
-      if (!new java.io.File(path + "/_SUCCESS").exists())
-        defDf.write.mode("overwrite").parquet(path)
-      graft.rules.AqumvRule.install(s)
-      graft.rules.AqumvRule.register(defDf, path)
-      s.conf.set(graft.rules.AqumvRule.EnabledConf, "true")
+      enableMatview(s, dir, "mv_status_revenue", defDf)
       // the user's query: the matching aggregate + post-processing; the
       // AqumvRule swaps the aggregate for the matview scan at optimize
       // time (asserted in PlanShapeSpec)
@@ -311,14 +304,7 @@ object Incremental {
     //    (aqumv.c's wider answerable set; asserted in PlanShapeSpec) --
     "i04_aqumv_rollup" -> { (s, dir) =>
       val defDf = aqumvRollupDefinition(s, dir)
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      // _v2: the layout gained the count component for avg decomposition
-      val path = s"target/derived/$tag/mv_status_prio_revenue_v2"
-      if (!new java.io.File(path + "/_SUCCESS").exists())
-        defDf.write.mode("overwrite").parquet(path)
-      graft.rules.AqumvRule.install(s)
-      graft.rules.AqumvRule.register(defDf, path)
-      s.conf.set(graft.rules.AqumvRule.EnabledConf, "true")
+      enableMatview(s, dir, RollupMatview, defDf)
       // the user's coarser query, written against the BASE table; the avg
       // is answerable only through the sum/count decomposition
       Tables.df(s, dir, "orders")
@@ -332,6 +318,20 @@ object Incremental {
         .orderBy(col("o_orderpriority"))
     }
   )
+
+  /** Materialize the matview `defDf` (over orders) once as derived data,
+    * register it with the AQUMV rewrite and enable the rewrite. */
+  private def enableMatview(s: SparkSession, dir: String, name: String,
+      defDf: DataFrame): Unit = {
+    val path = Derived.once(dir, name, "orders")(defDf.write.mode("overwrite").parquet(_))
+    graft.rules.AqumvRule.install(s)
+    graft.rules.AqumvRule.register(defDf, path)
+    s.conf.set(graft.rules.AqumvRule.EnabledConf, "true")
+  }
+
+  /** i04/i10's matview; _v2: the layout gained the count component for
+    * avg decomposition. */
+  private val RollupMatview = "mv_status_prio_revenue_v2"
 
   /** The matview definition, memoized per (session, dir): AQUMV matching
     * is canonicalized-subtree equality, and separate `spark.read` calls
@@ -357,14 +357,7 @@ object Incremental {
     * materialization before re-aggregating it (aqumv.c's WHERE
     * matching). A filter on a measure column would kill the rewrite. */
   private def aqumvFilterQuery(s: SparkSession, dir: String): DataFrame = {
-    val defDf = aqumvRollupDefinition(s, dir)
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/derived/$tag/mv_status_prio_revenue_v2"
-    if (!new java.io.File(path + "/_SUCCESS").exists())
-      defDf.write.mode("overwrite").parquet(path)
-    graft.rules.AqumvRule.install(s)
-    graft.rules.AqumvRule.register(defDf, path)
-    s.conf.set(graft.rules.AqumvRule.EnabledConf, "true")
+    enableMatview(s, dir, RollupMatview, aqumvRollupDefinition(s, dir))
     Tables.df(s, dir, "orders")
       .filter(col("o_orderstatus") === "F")
       .groupBy(col("o_orderpriority"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Derived, Tables}
 
 /** COPY-FROM with row-error diversion as a query (`copy.c` + `cdbsreh.c`
   * semantics — see graft.sources.CsvSreh for the file-based API, which
@@ -55,7 +55,7 @@ object Ingest {
     //    semantics — one partition per URL, each streamed executor-side
     //    from a gpfdist-style daemon (url_curl.c / src/bin/gpfdist) --
     "c05_http_source" -> { (s, _) =>
-      val root = "target/derived/gpfdist_root"
+      val root = Derived.path("gpfdist_root")
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
       def shard(name: String, lo: Int, hi: Int): Unit =
         java.nio.file.Files.write(
@@ -84,7 +84,7 @@ object Ingest {
     //    int16 field count + int32-length-prefixed big-endian fields,
     //    NULL = -1) --
     "c06_copy_binary" -> { (s, _) =>
-      val dir = "target/derived/pgcopy_bin"
+      val dir = Derived.path("pgcopy_bin")
       val src = s.range(1L, 301L).select(
         col("id").as("i"),
         (col("id") * 0.5).as("v"),
@@ -110,7 +110,7 @@ object Ingest {
     //    byte-identical. The oracle builds the same payloads and asserts
     //    roundtrip_ok = 1, so any quoting bug hash-mismatches --
     "c07_csv_quoting" -> { (s, _) =>
-      val out = "target/derived/csv_quoting"
+      val out = Derived.path("csv_quoting")
       val src = s.range(1L, 201L).select(col("id"),
         concat(lit("x,\"y\"\nz\\"), col("id").cast("string"), lit("\tend")).as("payload"))
       src.write.mode("overwrite")
@@ -138,8 +138,7 @@ object Ingest {
     //    the oracle aggregates the source table, so a decompression or
     //    parse fault hash-mismatches --
     "c11_gzip_csv" -> { (s, dir) =>
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = s"target/derived/$tag/gzip_csv"
+      val out = Derived.path(dir, "gzip_csv")
       Tables.df(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
@@ -275,8 +274,7 @@ object Ingest {
     //    base table with the generation predicate, so the check proves
     //    the union-by-name read is lossless and NULL-backfilled --
     "c10_schema_evolution" -> { (s, dir) =>
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/derived/$tag/schema_evo"
+      val base = Derived.path(dir, "schema_evo")
       val orders = Tables.df(s, dir, "orders")
       orders.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -292,8 +290,7 @@ object Ingest {
     },
 
     "c08_orc_roundtrip" -> { (s, dir) =>
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/derived/$tag/orc_roundtrip"
+      val base = Derived.path(dir, "orc_roundtrip")
       Tables.df(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("price_cents"))
@@ -317,7 +314,6 @@ object Ingest {
     //    read-back aggregate; configs are independent (at scale they
     //    run as parallel jobs against the same source snapshot). --
     "c09_storage_sweep" -> { (s, dir) =>
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val src = Tables.df(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("n_chars"))
       val configs = Seq(
@@ -325,7 +321,7 @@ object Ingest {
         ("snappy", 32 * 1024 * 1024),
         ("zstd", 128 * 1024 * 1024))
       val audits = configs.map { case (codec, blockBytes) =>
-        val path = s"target/derived/$tag/storage_sweep/$codec"
+        val path = Derived.path(dir, s"storage_sweep/$codec")
         src.write.mode("overwrite")
           .option("compression", codec)
           .option("parquet.block.size", blockBytes.toString)
@@ -352,8 +348,7 @@ object Ingest {
     * a silently dropped row would fail the oracle. */
   def copyToSreh(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"target/derived/$tag/copy_to"
+    val base = Derived.path(dir, "copy_to")
     val docs = Tables.df(s, dir, "documents")
       .withColumn("err",
         when(!col("lang").isin("en", "es", "fr", "de"), lit("lang_not_in_sink_dictionary"))

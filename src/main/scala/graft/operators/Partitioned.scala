@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Derived, Tables}
 
 /** Partitioned tables + dynamic partition pruning (DPP).
   *
@@ -18,51 +18,37 @@ import graft.Tables
   * directories are read.
   *
   * At 100 TB the fact table IS partitioned (by day/month) — this module
-  * materializes that layout once per SF under target/derived (build-once
-  * derived data, the repo's scratch space) and runs the canonical
+  * materializes that layout once per SF as [[Derived]] data (build-once,
+  * rebuilt when the source tables change) and runs the canonical
   * star-join against it. Static pruning (p01) and dynamic pruning (p02)
   * both produce plans that read a fraction of the partitions; the
   * ScalaTest plan asserts pin DynamicPruningExpression presence.
   */
 object Partitioned {
 
-  /** Root for derived partitioned copies, keyed by SF so sf0.001 tests
-    * and sf0.01 verification don't collide. */
-  private def derivedDir(sfDir: String): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"target/derived/$tag"
-  }
-
   /** Build-once: orders partitioned by month (hive-style directories).
     * o_month is a derived partition column, the GP
     * `PARTITION BY RANGE (o_orderdate) (START ... EVERY '1 month')`
     * translation (`src/backend/parser/gram.y:6610,6652`). */
-  def ordersByMonth(s: SparkSession, sfDir: String): DataFrame = {
-    val path = s"${derivedDir(sfDir)}/orders_by_month"
-    val marker = new java.io.File(path + "/_SUCCESS")
-    if (!marker.exists()) {
+  def ordersByMonth(s: SparkSession, sfDir: String): DataFrame =
+    s.read.parquet(Derived.once(sfDir, "orders_by_month", "orders") { path =>
       Tables.df(s, sfDir, "orders")
         .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
         .write.mode("overwrite")
         .partitionBy("o_month")
         .parquet(path)
-    }
-    s.read.parquet(path)
-  }
+    })
 
   /** Build-once month dimension (parquet-backed so filters survive to the
     * physical plan and can seed DPP). */
   def monthDimTable(s: SparkSession, sfDir: String): DataFrame = {
     import s.implicits._
-    val path = s"${derivedDir(sfDir)}/month_dim"
-    val marker = new java.io.File(path + "/_SUCCESS")
-    if (!marker.exists()) {
+    s.read.parquet(Derived.once(sfDir, "month_dim") { path =>
       (1 to 12).map { m =>
         (f"1997-$m%02d", if (m >= 6 && m <= 8) "peak" else "offpeak")
       }.toDF("m_month", "season")
         .coalesce(1).write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
+    })
   }
 
   /** Build-once: orders two-level partitioned — region LIST at level 1,
@@ -71,10 +57,9 @@ object Partitioned {
     * RANGE (o_orderdate)` (`src/backend/parser/gram.y:6610,6652`); the
     * region comes through customer→nation→region, denormalized into the
     * layout exactly like a distribution-key choice at 100 TB. */
-  def ordersByRegionMonth(s: SparkSession, sfDir: String): DataFrame = {
-    val path = s"${derivedDir(sfDir)}/orders_by_region_month"
-    val marker = new java.io.File(path + "/_SUCCESS")
-    if (!marker.exists()) {
+  def ordersByRegionMonth(s: SparkSession, sfDir: String): DataFrame =
+    s.read.parquet(Derived.once(sfDir, "orders_by_region_month",
+        "orders", "customer", "nation", "region") { path =>
       Tables.df(s, sfDir, "orders")
         .join(Tables.df(s, sfDir, "customer"), col("o_custkey") === col("c_custkey"))
         .join(broadcast(Tables.df(s, sfDir, "nation")), col("c_nationkey") === col("n_nationkey"))
@@ -85,9 +70,7 @@ object Partitioned {
         .write.mode("overwrite")
         .partitionBy("o_region", "o_month")
         .parquet(path)
-    }
-    s.read.parquet(path)
-  }
+    })
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // -- static partition pruning: filter on the partition column --
@@ -130,8 +113,7 @@ object Partitioned {
     //    untouched — would mismatch. The mode is a WRITE OPTION, not a
     //    session conf, so no global state leaks between queries --
     "p04_partition_overwrite" -> { (s, dir) =>
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/derived/$tag/part_overwrite"
+      val base = Derived.path(dir, "part_overwrite")
       val orders = Tables.df(s, dir, "orders")
       orders.write.mode("overwrite")
         .partitionBy("o_orderstatus").parquet(base)
@@ -172,9 +154,8 @@ object Partitioned {
     "p05_partition_retention" -> { (s, dir) =>
       val cutoff = "1997-07"
       val base = ordersByMonth(s, dir)
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val live = s"target/derived/$tag/retention_live"
-      val arch = s"target/derived/$tag/retention_archive"
+      val live = Derived.path(dir, "retention_live")
+      val arch = Derived.path(dir, "retention_archive")
       // r19: the r18 two-driver-thread overlap (guide §2.6) is REVERTED
       // to sequential writes. A one-JVM alternating A/B (graft.AB over
       // a temporary conf gate, 8 passes, idle box) read threaded 1.927 s

@@ -536,6 +536,7 @@ object Recursive {
     var stable = false
     while (round <= KcoreRounds) {
       if (!stable) {
+        val (prevEdges, prevDeg) = (edges, deg)
         val keep = deg.filter(col("d") >= K).select(col("node"))
         edges = edges
           .join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
@@ -544,6 +545,9 @@ object Recursive {
           .localCheckpoint(eager = false)
         deg = degOf(edges)
         val (nn2, ne2) = statsOf(deg)
+        // that action materialized this round's spools, so the previous
+        // round's are dead: release them now, not at the query's end
+        Seq(prevEdges, prevDeg).foreach(unspool)
         stable = ne2 == ne
         nn = nn2; ne = ne2
         // once stable, the remaining rounds repeat the fixpoint counts
@@ -557,6 +561,13 @@ object Recursive {
       .select(col("round"), col("n_nodes"), col("n_edges"))
       .orderBy(col("round"))
   }
+
+  /** Unpersist a localCheckpoint spool's blocks. */
+  private def unspool(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   private[graft] def pagerankEdges(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val nRow = docs.agg(count(lit(1)).as("nn"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Derived, Tables}
 
 /** Statistics + cost-based optimization (SURVEY §2's optimizer-parity
   * story; the r2-verdict "missing" item 2). The reference maintains table
@@ -26,61 +26,33 @@ import graft.Tables
   */
 object Stats {
 
-  private def tag(dir: String) = dir.replaceAll("[^A-Za-z0-9]", "_")
-
   /** Build-once per session: persist customer/orders/lineitem as catalog
     * tables (stats need a catalog entry to live in) and ANALYZE them —
     * table-level rowCount/size plus column NDV/min/max histograms for the
     * join keys and the filter column. Also flips the CBO confs on, once. */
   def ensure(s: SparkSession, dir: String): (String, String, String) = {
-    val t = tag(dir)
-    val (ct, ot, lt) = (s"customer_stats_$t", s"orders_stats_$t", s"lineitem_stats_$t")
-    def create(table: String, src: String, cols: String): Unit =
-      if (!s.catalog.tableExists(table)) {
-        // a previous JVM may have left the managed location behind while
-        // the in-memory catalog entry died with it (same recovery as
-        // Bucketed.ensure)
-        val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-        val loc = new java.io.File(wh, table.toLowerCase)
-        if (loc.exists()) {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete()
-          }
-          rm(loc)
-        }
+    def create(src: String, cols: String): String =
+      Derived.table(s, dir, s"${src}_stats") { table =>
         Tables.df(s, dir, src).write.mode("overwrite").format("parquet").saveAsTable(table)
         s.sql(s"ANALYZE TABLE $table COMPUTE STATISTICS")
         s.sql(s"ANALYZE TABLE $table COMPUTE STATISTICS FOR COLUMNS $cols")
       }
-    create(ct, "customer", "c_custkey, c_nationkey, c_mktsegment")
-    create(ot, "orders", "o_orderkey, o_custkey, o_orderpriority")
-    create(lt, "lineitem", "l_orderkey, l_quantity, l_extendedprice, l_discount")
+    val tables = (create("customer", "c_custkey, c_nationkey, c_mktsegment"),
+      create("orders", "o_orderkey, o_custkey, o_orderpriority"),
+      create("lineitem", "l_orderkey, l_quantity, l_extendedprice, l_discount"))
     s.conf.set("spark.sql.cbo.enabled", "true")
     s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    (ct, ot, lt)
+    tables
   }
 
   /** Twin tables with NO statistics — the red side of the red/green
     * demonstration. Identical rows; the only difference is ANALYZE. */
   def ensureUnanalyzed(s: SparkSession, dir: String): (String, String, String) = {
-    val t = tag(dir)
-    val (ct, ot, lt) = (s"customer_nostats_$t", s"orders_nostats_$t", s"lineitem_nostats_$t")
-    def create(table: String, src: String): Unit =
-      if (!s.catalog.tableExists(table)) {
-        val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-        val loc = new java.io.File(wh, table.toLowerCase)
-        if (loc.exists()) {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete()
-          }
-          rm(loc)
-        }
+    def create(src: String): String =
+      Derived.table(s, dir, s"${src}_nostats") { table =>
         Tables.df(s, dir, src).write.mode("overwrite").format("parquet").saveAsTable(table)
       }
-    create(ct, "customer"); create(ot, "orders"); create(lt, "lineitem")
-    (ct, ot, lt)
+    (create("customer"), create("orders"), create("lineitem"))
   }
 
   /** The deliberately bad-order 3-way chain join: the highly selective

@@ -49,4 +49,13 @@ class HarnessSpec extends AnyFunSuite {
     Harness.prepare(spark, Sf)
     assertBenchState()
   }
+
+  test("r07 releases each peel round's spools once the next round's are built") {
+    Harness.hygiene(spark)
+    try {
+      SparkEntry.queries("r07_kcore")(spark, Sf)
+      val live = spark.sparkContext.getPersistentRDDs.size
+      assert(live <= 2, s"$live spools live after r07's builder: every round's edges/deg kept")
+    } finally Harness.hygiene(spark)
+  }
 }

@@ -270,8 +270,7 @@ class IngestSpec extends AnyFunSuite {
     assert(audit.getLong(1) > 0 && audit.getInt(2) == 1)
     // the reject file carries machine-readable error reasons (cdbsreh
     // error-table contract)
-    val tag = SparkSuite.Sf.replaceAll("[^A-Za-z0-9.]", "_")
-    val reasons = spark.read.json(s"target/derived/$tag/copy_to/rej")
+    val reasons = spark.read.json(Derived.path(SparkSuite.Sf, "copy_to/rej"))
       .select("err").distinct().collect().map(_.getString(0)).toSet
     assert(reasons == Set("lang_not_in_sink_dictionary", "row_too_wide"), reasons)
   }
@@ -284,9 +283,8 @@ class IngestSpec extends AnyFunSuite {
       .distinct.length == 1, "all storage configs must hold identical content")
     // the codec option actually reaches the files: zstd strictly smaller
     // than uncompressed on text-heavy data
-    val tag = SparkSuite.Sf.replaceAll("[^A-Za-z0-9.]", "_")
     def bytes(codec: String): Long = {
-      val d = new java.io.File(s"target/derived/$tag/storage_sweep/$codec")
+      val d = new java.io.File(Derived.path(SparkSuite.Sf, s"storage_sweep/$codec"))
       d.listFiles().filter(_.getName.endsWith(".parquet")).map(_.length()).sum
     }
     val (z, u) = (bytes("zstd"), bytes("uncompressed"))

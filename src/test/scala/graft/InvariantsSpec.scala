@@ -128,7 +128,7 @@ class InvariantsSpec extends AnyFunSuite {
     // sequence(1, 0) in Spark is DESCENDING [1, 0] — an unguarded gram
     // generator crashes on any doc with < 8 tokens (the oracle's
     // generate_series(1, 0) is empty). Real corpora are full of short docs.
-    val dir = "target/derived/test/shortdocs"
+    val dir = Derived.path("test", "shortdocs")
     val docs = Seq(
       (1L, ""), (2L, "one two three"), (3L, "a b c d e f g"),
       (4L, "a b c d e f g h"), (5L, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"))
@@ -152,7 +152,7 @@ class InvariantsSpec extends AnyFunSuite {
     // doc on one core. The explode → count → max plan is O(tokens); a
     // 20k-token doc with 10k distinct tokens must come back promptly
     // (the quadratic form does 2×10⁸ interpreted-lambda compares here).
-    val dir = "target/derived/test/longdoc"
+    val dir = Derived.path("test", "longdoc")
     val longText = (1 to 10000).map(i => s"tok$i tok$i").mkString(" ") // 20k toks, each twice
     spark.createDataFrame(Seq((1L, longText), (2L, "a a a b")))
       .toDF("doc_id", "text")

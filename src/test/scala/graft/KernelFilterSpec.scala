@@ -42,9 +42,7 @@ class KernelFilterSpec extends AnyFunSuite {
         allow.get(n) match {
           case Some(reason) => info(s"allowlisted: $reason")
           case None =>
-            val lines = KernelFilterAudit.filterKernelCounts(p)
-              .filter { case (k, c, _) =>
-                c >= 2 && KernelFilterAudit.Derivation.contains(k) }
+            val lines = KernelFilterAudit.filterKernelCounts(p).filter(_._2 >= 2)
               .map { case (k, c, l) => s"$k x$c in: ${l.trim.take(300)}" }
             fail(s"f09 substitution signature (re-evaluated text kernel " +
               s"in a pushed filter) — bind the derived column once " +

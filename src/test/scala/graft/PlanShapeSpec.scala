@@ -437,7 +437,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val mvDef = graft.Tables.df(spark, Sf, "orders")
       .groupBy(col("o_orderstatus"), col("o_orderpriority"))
       .agg(expr(s"sum($dec)").as("dmv_sum"), expr(s"count($dec)").as("dmv_cnt"))
-    val path = "target/derived/test/mv_decimal_avg"
+    val path = Derived.path("test", "mv_decimal_avg")
     mvDef.write.mode("overwrite").parquet(path)
     graft.rules.AqumvRule.install(spark)
     graft.rules.AqumvRule.register(mvDef, path)
@@ -1603,9 +1603,8 @@ class PlanShapeSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       // run the redistribution, then compile the new-key join fresh
       SparkEntry.queries("ddl04_set_distributed")(spark, Sf).queryExecution.toRdd.count()
-      val tag = Sf.replaceAll("[^A-Za-z0-9.]", "_").replace(".", "_")
-      val joined = spark.table(s"orders_redist_$tag")
-        .join(spark.table(s"customer_gp_$tag"),
+      val joined = spark.table(Derived.tableName("orders_redist", Sf))
+        .join(spark.table(Derived.tableName("customer_gp", Sf)),
           org.apache.spark.sql.functions.col("o_custkey") ===
             org.apache.spark.sql.functions.col("c_custkey"))
       val p = finalPlan(joined)
