@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Derived, Tables}
+import graft.{Derived, Spool, Tables}
 
 /** GP DDL text front-end — the `CREATE TABLE … DISTRIBUTED BY (k)
   * PARTITION BY RANGE (c) (START … END … EVERY …)` surface a Cloudberry
@@ -558,7 +558,7 @@ object GpDdl {
     require(dirF.exists(), s"ddl: partition for '${op.forValue}' does not exist")
     val rows = s.read.parquet(dirF.getAbsolutePath).localCheckpoint(true)
     val pred = belowAt(op.atValue)
-    val stages = Seq((op.firstName, pred), (op.secondName, !pred)).map {
+    val stages = try Seq((op.firstName, pred), (op.secondName, !pred)).map {
       case (name, p) =>
         val tmp = new java.io.File(basePath, s"$SplitTmpPrefix$partCol=$name")
         rows.filter(p).write.mode("overwrite").parquet(tmp.getAbsolutePath)
@@ -584,7 +584,7 @@ object GpDdl {
           java.nio.file.StandardOpenOption.DSYNC)
         fsyncDir(tmp.toPath)
         (tmp, new java.io.File(basePath, s"$partCol=$name"))
-    }
+    } finally Spool.release(rows)
     // validate BOTH destinations are free before touching the source —
     // a name collision must fail while the source is still intact and
     // the stages still carry their markers (recovery then discards the

@@ -2,23 +2,24 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Spool, Tables}
 
 /** Recursive CTE (`WITH RECURSIVE`, reference nodeRecursiveunion.c /
-  * nodeWorktablescan.c). Two renditions, both exercised:
+  * nodeWorktablescan.c). Three renditions, each where it fits:
   *
-  *  - r03 uses Spark 4's NATIVE SQL surface — `spark.sql("WITH
-  *    RECURSIVE ...")` parses and executes as a recursive union (the
-  *    UnionLoop operator, SPARK-24497), with the SQL text shared
-  *    verbatim with the DuckDB oracle, exactly like the reference's
-  *    RecursiveUnion + WorkTableScan pair.
-  *  - r01/r02 are driver-side fixpoint loops that union per-iteration
-  *    DataFrames (SURVEY.md §7.3): the *data* stays distributed — the
-  *    driver only orchestrates one plan per step. This remains the
-  *    scale-right shape for iterate-to-convergence algorithms (label
-  *    propagation) where the per-round frontier must be checkpointed
-  *    and the stop condition is a data-dependent fixpoint, not a
-  *    syntactic UNION emptiness test.
+  *  - r03, r08, r09, r10 and cb01 run Spark 4's NATIVE `WITH RECURSIVE`
+  *    (the UnionLoop operator, SPARK-24497) on SQL text shared verbatim
+  *    with the DuckDB oracle, like the reference's RecursiveUnion +
+  *    WorkTableScan pair.
+  *  - r01 and r05 are ONE lazy plan with no driver step between levels:
+  *    r01's recursion is linear (a row's successor depends on that row
+  *    alone), so it unfolds per row; r05 has a fixed round count, so its
+  *    rounds unroll into a plan whose size is linear in the count.
+  *  - r02 and r07 are driver loops with a spool per round (SURVEY.md
+  *    §7.3). That shape is right only when the step joins other data AND
+  *    the stop is data-dependent (r02's changed-label count, r07's stable
+  *    trajectory); each round then costs an action, ~0.15 s of fixed
+  *    scheduling at sf0.1, which a loop needing neither must not pay.
   */
 object Recursive {
 
@@ -26,25 +27,21 @@ object Recursive {
 
   /** Collatz descent seeded from order keys: the recursive step is pure
     * arithmetic so the DuckDB oracle (a genuine WITH RECURSIVE) computes
-    * the identical rows. */
+    * the identical rows. Each seed's chain unfolds inside its own row —
+    * `aggregate` extends it while the last value is > 1, `inline` emits
+    * one (step, val) row per level. */
   private def collatzChain(s: SparkSession, dir: String): DataFrame = {
     val seeds = Tables.df(s, dir, "orders")
       .filter(col("o_orderkey") <= 100)
       .select(col("o_orderkey").as("seed")).distinct()
-    val base = seeds.select(col("seed"), lit(0).as("step"), col("seed").as("val"))
-      .localCheckpoint()
-    // fixpoint loop ≙ RecursiveUnion: frontier_{i+1} = f(frontier_i).
-    // Each frontier is checkpointed to cut lineage — without this the
-    // k-th iteration's plan nests k copies of the whole chain (quadratic
-    // plan size, the classic iterative-algorithm failure mode at scale).
-    val frames = Iterator.iterate(base) { frontier =>
-      frontier
-        .filter(col("val") > 1 && col("step") < maxDepth)
-        .select(col("seed"), (col("step") + 1).as("step"),
-          when(col("val") % 2 === 0, expr("val div 2")).otherwise(col("val") * 3 + 1).as("val"))
-        .localCheckpoint()
-    }.take(maxDepth + 1).toSeq
-    frames.reduce(_ union _)
+    val last = "element_at(acc, -1).val"
+    seeds.select(col("seed"), inline(expr(s"""
+      aggregate(sequence(1, $maxDepth),
+        array(named_struct('step', 0, 'val', CAST(seed AS BIGINT))),
+        (acc, i) -> CASE WHEN $last > 1
+          THEN concat(acc, array(named_struct('step', i,
+            'val', CASE WHEN $last % 2 = 0 THEN $last div 2 ELSE $last * 3 + 1 END)))
+          ELSE acc END)""")))
   }
 
   /** Max label-propagation rounds for r02 (components converge in
@@ -262,28 +259,23 @@ object Recursive {
 
     // -- r05: bounded-hop min-cost path (Bellman-Ford relaxation) over
     //    r04's deterministic multigraph with weight (src+dst)%17+1 —
-    //    the "cheapest route within K hops" shape. Each round relaxes
-    //    the WHOLE frontier in one edge equi-join + one min aggregate
-    //    (both map-side combinable), dist carried as exact BIGINT; K
-    //    rounds = K shuffles, never a path enumeration. The oracle IS a
-    //    path enumeration (WITH RECURSIVE ≤K hops then min) — tractable
-    //    there because out-degree is 3, while the relaxation form is the
-    //    one that scales: state is |reached nodes|, not |paths| --
+    //    the "cheapest route within K hops" shape. A zero-weight self-loop
+    //    per node (doc ids are 0..N-1, so every dst is one) makes a
+    //    round's min(dist ∪ relax(dist)) ONE edge join + min aggregate
+    //    reading dist once: K rounds = one plan linear in K, no spool,
+    //    never a path enumeration. The oracle IS one (≤K hops then min),
+    //    tractable there because out-degree is 3; the relaxation form
+    //    scales: state is |reached nodes|, not |paths| --
     "r05_shortest_path" -> { (s, dir) =>
       val docs = Tables.df(s, dir, "documents").select(col("doc_id"))
       val edges = pagerankEdges(docs)
-        .withColumn("w", expr("(src + dst) % 17 + 1"))
-        .localCheckpoint()
+        .select(col("src"), col("dst"), expr("(src + dst) % 17 + 1").as("w"))
+        .unionAll(docs.select(col("doc_id"), col("doc_id"), lit(0L)))
       var dist = docs.filter(col("doc_id") === 0)
         .select(col("doc_id"), lit(0L).as("d"))
-      for (_ <- 1 to 3) {
-        val relax = edges.join(dist, col("src") === col("doc_id"))
-          .select(col("dst").as("doc_id"), (col("d") + col("w")).as("d"))
-        dist = dist.select(col("doc_id"), col("d")).unionAll(relax)
-          .groupBy(col("doc_id")).agg(min(col("d")).as("dist_cost"))
-          .withColumnRenamed("dist_cost", "d")
-          .localCheckpoint()
-      }
+      for (_ <- 1 to 3)
+        dist = edges.join(dist, col("src") === col("doc_id"))
+          .groupBy(col("dst").as("doc_id")).agg(min(col("d") + col("w")).as("d"))
       dist.select(col("doc_id"), col("d").as("dist_cost"))
         .orderBy(col("doc_id"))
     },
@@ -492,7 +484,7 @@ object Recursive {
     * them, until stable. Spark-first shape: each round is ONE degree
     * aggregate (map-side combined) + one semi-join of the edge set
     * against surviving nodes — both linear shuffles; the frontier is
-    * checkpointed per round like r01/r02 so plans don't nest. Rounds
+    * checkpointed per round like r02 so plans don't nest. Rounds
     * are capped at KcoreRounds with early-exit on stability; the output is the
     * per-round (n_nodes, n_edges) TRAJECTORY, so the oracle (the same
     * peeling rounds unrolled as CTEs) verifies every intermediate
@@ -547,7 +539,7 @@ object Recursive {
         val (nn2, ne2) = statsOf(deg)
         // that action materialized this round's spools, so the previous
         // round's are dead: release them now, not at the query's end
-        Seq(prevEdges, prevDeg).foreach(unspool)
+        Seq(prevEdges, prevDeg).foreach(Spool.release)
         stable = ne2 == ne
         nn = nn2; ne = ne2
         // once stable, the remaining rounds repeat the fixpoint counts
@@ -561,13 +553,6 @@ object Recursive {
       .select(col("round"), col("n_nodes"), col("n_edges"))
       .orderBy(col("round"))
   }
-
-  /** Unpersist a localCheckpoint spool's blocks. */
-  private def unspool(df: DataFrame): Unit =
-    df.queryExecution.logical.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ =>
-    }
 
   private[graft] def pagerankEdges(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val nRow = docs.agg(count(lit(1)).as("nn"))

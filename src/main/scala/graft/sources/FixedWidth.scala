@@ -103,10 +103,8 @@ object FixedWidth {
     fw.rejectLimit.foreach { case (limit, isPercent) =>
       val over = if (isPercent) nBad * 100 > nTotal * limit else nBad > limit
       if (over) {
-        // the throw path returns no ParseResult, so nothing downstream
-        // unpersists the spool — drop it here or it stays pinned for
-        // the session (r18 advice)
-        flagged.unpersist(blocking = false)
+        // nothing downstream sees the spool on the throw path
+        graft.Spool.release(flagged)
         throw new CsvSreh.RejectLimitExceeded(nBad, limit)
       }
     }

@@ -14,7 +14,7 @@ import graft.rules.BindExpensiveFilterRule
   * bit-identical to the unbound plan including NULL-text rows, cheap
   * conjuncts still reach PushedFilters, and single-occurrence filters
   * are left untouched. */
-class BindExpensiveFilterSpec extends AnyFunSuite {
+class BindExpensiveFilterSpec extends AnyFunSuite with TempDirs {
   import SparkSuite._
 
   private val chain = "filter(split(lower(text), ' '), x -> x <> '')"
@@ -24,7 +24,7 @@ class BindExpensiveFilterSpec extends AnyFunSuite {
   // runtime Filter to bind
   private lazy val corpusPath: String = {
     val s = spark; import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bind").toString
+    val dir = tempDir("graft_bind").toString
     Seq(
       (1L, "merge vector merge"), (2L, "vector stream"),
       (3L, "merge"), (4L, null.asInstanceOf[String]),

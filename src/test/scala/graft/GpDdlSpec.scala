@@ -7,7 +7,7 @@ import graft.operators.GpDdl
 /** GP DDL front-end: grammar subset parsing + partition routing
   * semantics (gram.y START inclusive / END exclusive / EVERY windows /
   * DEFAULT PARTITION / no-partition-found error). */
-class GpDdlSpec extends AnyFunSuite {
+class GpDdlSpec extends AnyFunSuite with TempDirs {
   import SparkSuite._
 
   test("parser: CREATE … DISTRIBUTED BY … PARTITION BY RANGE START/END/EVERY/DEFAULT") {
@@ -190,7 +190,7 @@ class GpDdlSpec extends AnyFunSuite {
   test("SPLIT PARTITION: one-directory surgery, row conservation, loud errors") {
     import org.apache.spark.sql.functions.{col, date_format, expr}
     // scratch two-month table
-    val base = java.nio.file.Files.createTempDirectory("graft_ddl_split").toString
+    val base = tempDir("graft_ddl_split").toString
     Tables.df(spark, Sf, "orders")
       .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
       .filter(col("o_month").isin("1997-05", "1997-06"))
@@ -203,11 +203,13 @@ class GpDdlSpec extends AnyFunSuite {
     }
     val mayBefore = files("1997-05")
     val juneRows = spark.read.parquet(s"$base/o_month=1997-06").count()
+    Harness.hygiene(spark)
     val op = GpDdl.applySplit(spark,
       """ALTER TABLE t SPLIT PARTITION FOR ('1997-06-15') AT ('1997-06-16')
          INTO (PARTITION h1, PARTITION h2)""",
       base, "o_month", _.substring(0, 7),
       at => col("o_orderdate") < expr(s"TIMESTAMP '$at 00:00:00'"))
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty, "the split's source spool outlived it")
     assert(op == GpDdl.SplitPart("t", "1997-06-15", "1997-06-16", "h1", "h2"))
     // the source partition is gone; the two halves conserve its rows
     assert(files("1997-06").isEmpty, "source partition must be removed")
@@ -254,7 +256,7 @@ class GpDdlSpec extends AnyFunSuite {
 
   test("SPLIT PARTITION crash recovery: hidden stages repair both interrupt states") {
     import org.apache.spark.sql.functions.{col, date_format}
-    val base = java.nio.file.Files.createTempDirectory("graft_ddl_split_cr").toString
+    val base = tempDir("graft_ddl_split_cr").toString
     Tables.df(spark, Sf, "orders")
       .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
       .filter(col("o_month") === "1997-07")
@@ -316,7 +318,7 @@ class GpDdlSpec extends AnyFunSuite {
 
   test("SPLIT PARTITION crash recovery: a mid-delete tombstone never masquerades as an intact source") {
     import org.apache.spark.sql.functions.{col, date_format}
-    val base = java.nio.file.Files.createTempDirectory("graft_ddl_split_tomb").toString
+    val base = tempDir("graft_ddl_split_tomb").toString
     Tables.df(spark, Sf, "orders")
       .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
       .filter(col("o_month") === "1997-07")
@@ -355,7 +357,7 @@ class GpDdlSpec extends AnyFunSuite {
 
   test("SPLIT PARTITION: destination collision fails BEFORE the source is touched, and recovery unwedges") {
     import org.apache.spark.sql.functions.{col, date_format, expr}
-    val base = java.nio.file.Files.createTempDirectory("graft_ddl_split_coll").toString
+    val base = tempDir("graft_ddl_split_coll").toString
     Tables.df(spark, Sf, "orders")
       .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
       .filter(col("o_month").isin("1997-06", "1997-07"))
@@ -364,6 +366,7 @@ class GpDdlSpec extends AnyFunSuite {
     val juneRows = spark.read.parquet(s"$base/o_month=1997-06").count()
     // pre-create a colliding destination name for the second half
     new java.io.File(base, "o_month=h2").mkdirs()
+    Harness.hygiene(spark)
     intercept[IllegalArgumentException] {
       GpDdl.applySplit(spark,
         """ALTER TABLE t SPLIT PARTITION FOR ('1997-06-15') AT ('1997-06-16')
@@ -371,6 +374,7 @@ class GpDdlSpec extends AnyFunSuite {
         base, "o_month", _.substring(0, 7),
         at => col("o_orderdate") < expr(s"TIMESTAMP '$at 00:00:00'"))
     }
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty, "the failed split kept its source spool")
     // the source was never touched — no data loss, no partial delete
     assert(spark.read.parquet(s"$base/o_month=1997-06").count() == juneRows)
     // and the leftover stages still carry markers, so the next entry's

@@ -7,11 +7,11 @@ import graft.sources.CsvSreh
 /** File-based COPY/sreh semantics (`copy.c:412-434`, `cdbsreh.c`):
   * PERMISSIVE load diverts malformed rows, reject limit aborts. Drives a
   * real CSV on disk through graft.sources.CsvSreh. */
-class IngestSpec extends AnyFunSuite {
+class IngestSpec extends AnyFunSuite with TempDirs {
   import SparkSuite._
 
   private def writeCsv(lines: Seq[String]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toFile
+    val dir = tempDir("graft_csv").toFile
     val f = new java.io.File(dir, "data.csv")
     val w = new java.io.PrintWriter(f)
     lines.foreach(w.println)
@@ -48,7 +48,7 @@ class IngestSpec extends AnyFunSuite {
 
   test("c04 exec source: malformed lines divert to reject files within the limit") {
     import org.apache.spark.sql.functions._
-    val rejDir = java.nio.file.Files.createTempDirectory("graft_exec_rej").toString
+    val rejDir = tempDir("graft_exec_rej").toString
     // every partition emits 10 good rows and 2 bad ones (one wrong arity,
     // one non-numeric) — within the per-partition limit of 2
     val df = spark.read.format("graft.sources.ExecSource")
@@ -93,7 +93,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   private def gpfdistFixture(): (String, Int) = {
-    val root = java.nio.file.Files.createTempDirectory("graft_gpfdist").toString
+    val root = tempDir("graft_gpfdist").toString
     (root, graft.sources.GpfdistLite.ensure(root))
   }
 
@@ -116,7 +116,7 @@ class IngestSpec extends AnyFunSuite {
 
   test("c05 http source: malformed lines divert to reject files within the limit") {
     val (root, port) = gpfdistFixture()
-    val rejDir = java.nio.file.Files.createTempDirectory("graft_http_rej").toString
+    val rejDir = tempDir("graft_http_rej").toString
     writeShard(root, "mixed.dat",
       (1 to 10).map(i => s"$i|ok") ++ Seq("only_one_field", "NaNish|x"))
     val df = spark.read.format("graft.sources.HttpSource")
@@ -177,7 +177,7 @@ class IngestSpec extends AnyFunSuite {
     * NULL), so tests can craft wrong-width fields byte-exactly. */
   private def writePgCopy(tuples: Seq[Seq[Option[Array[Byte]]]],
                           corruptSignature: Boolean = false): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pgcopy")
+    val dir = tempDir("graft_pgcopy")
     val bos = new java.io.ByteArrayOutputStream()
     val out = new java.io.DataOutputStream(bos)
     val sig = graft.sources.PgCopyBinary.Signature.clone()
@@ -201,7 +201,7 @@ class IngestSpec extends AnyFunSuite {
 
   test("c06 pgcopy: writeDf -> read roundtrip preserves values, nulls, and row count") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pgcopy_rt").toString + "/shards"
+    val dir = tempDir("graft_pgcopy_rt").toString + "/shards"
     val src = spark.range(1L, 101L).select(
       col("id").as("i"), (col("id") * 0.25).as("v"),
       when(col("id") % 7 === 0, lit(null).cast("string"))
@@ -220,7 +220,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("c06 pgcopy: wrong-width fixed field rejects the tuple, stream stays in sync") {
-    val rejDir = java.nio.file.Files.createTempDirectory("graft_pgcopy_rej").toString
+    val rejDir = tempDir("graft_pgcopy_rej").toString
     val dir = writePgCopy(Seq(
       Seq(i8(1), txt("a")),
       Seq(Some(Array[Byte](0, 0, 0, 42)), txt("bad-int4")), // 4-byte int where int8 declared
@@ -297,7 +297,7 @@ class IngestSpec extends AnyFunSuite {
     // (slow listings). maxRecordsPerFile is the per-file ceiling —
     // every parquet part must respect it, and the row total must
     // survive exactly.
-    val out = java.nio.file.Files.createTempDirectory("graft_sizing").toString
+    val out = tempDir("graft_sizing").toString
     val src = Tables.df(spark, Sf, "orders").select("o_orderkey", "o_custkey")
     src.coalesce(2).write.option("maxRecordsPerFile", "200")
       .mode("overwrite").parquet(out)
@@ -313,11 +313,11 @@ class IngestSpec extends AnyFunSuite {
   test("directory table storage ops round-trip through the Hadoop FileSystem API") {
     import org.apache.hadoop.fs.Path
     import graft.operators.DirTable
-    val root = java.nio.file.Files.createTempDirectory("graft_dirtable").toString + "/dt"
+    val root = tempDir("graft_dirtable").toString + "/dt"
     val name = DirTable.exec(spark, root, "CREATE DIRECTORY TABLE t1")
     assert(name == "t1")
     // stage a source file, COPY it in, then read it back via Hadoop FS
-    val stageDir = java.nio.file.Files.createTempDirectory("graft_dt_stage")
+    val stageDir = tempDir("graft_dt_stage")
     val stage = stageDir.resolve("hello.bin")
     java.nio.file.Files.write(stage, "hadoop fs round trip\n".getBytes("UTF-8"))
     DirTable.exec(spark, root,
@@ -346,7 +346,7 @@ class IngestSpec extends AnyFunSuite {
     // files; repartitioning on the partition column first collapses
     // that to one file per partition — the compaction-friendly layout.
     import org.apache.spark.sql.functions._
-    val out = java.nio.file.Files.createTempDirectory("graft_onefile").toString
+    val out = tempDir("graft_onefile").toString
     Tables.df(spark, Sf, "orders")
       .withColumn("status", col("o_orderstatus"))
       .repartition(col("status"))
@@ -397,6 +397,7 @@ class IngestSpec extends AnyFunSuite {
       "4   more  6    ").toDF("line"), fw)
     assert(short.nBad == 1 && short.nGood == 3)
     // past the limit: 2/4 = 50% > 25% → loud abort, cdbsreh's contract
+    Harness.hygiene(spark)
     val e = intercept[CsvSreh.RejectLimitExceeded] {
       FixedWidth.parse(Seq(
         "1   alpha 42   ",
@@ -405,6 +406,8 @@ class IngestSpec extends AnyFunSuite {
         "4   more  6    ").toDF("line"), fw)
     }
     assert(e.nBad == 2)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      "the aborted parse left its spool pinned until hygiene")
     // parser is loud on a missing width
     intercept[IllegalArgumentException] {
       GpDdl.parseFixedWidth("""
@@ -433,7 +436,7 @@ class IngestSpec extends AnyFunSuite {
     // (missing columns surface as nulls); the (path, mtime, size) key
     // makes the rewrite visible
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_schema_memo").toString
+    val dir = tempDir("graft_schema_memo").toString
     Seq((1L, "a")).toDF("k", "v1").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/region.parquet")
     assert(Tables.df(spark, dir, "region").columns.toSeq == Seq("k", "v1"))

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Cross-query semantic invariants — relations that must hold between
@@ -483,6 +484,70 @@ class InvariantsSpec extends AnyFunSuite {
       val w = (0L + v) % 17 + 1
       assert(d(v) <= w, s"direct neighbor $v must cost at most its edge weight $w")
     }
+  }
+
+  // Reference renditions of r01 and r05 as driver loops with an eager
+  // spool per round: the one-plan forms must equal them row for row
+  private def collatzByRounds(): DataFrame = {
+    val seeds = Tables.df(spark, Sf, "orders").filter(col("o_orderkey") <= 100)
+      .select(col("o_orderkey").as("seed")).distinct()
+    val base = seeds.select(col("seed"), lit(0).as("step"), col("seed").as("val"))
+      .localCheckpoint()
+    Iterator.iterate(base) { frontier =>
+      frontier.filter(col("val") > 1 && col("step") < 10)
+        .select(col("seed"), (col("step") + 1).as("step"),
+          when(col("val") % 2 === 0, expr("val div 2")).otherwise(col("val") * 3 + 1).as("val"))
+        .localCheckpoint()
+    }.take(11).toSeq.reduce(_ union _)
+  }
+
+  private def shortestPathByRounds(): DataFrame = {
+    val docs = Tables.df(spark, Sf, "documents").select(col("doc_id"))
+    val edges = operators.Recursive.pagerankEdges(docs)
+      .withColumn("w", expr("(src + dst) % 17 + 1"))
+      .localCheckpoint()
+    var dist = docs.filter(col("doc_id") === 0).select(col("doc_id"), lit(0L).as("d"))
+    for (_ <- 1 to 3) {
+      val relax = edges.join(dist, col("src") === col("doc_id"))
+        .select(col("dst").as("doc_id"), (col("d") + col("w")).as("d"))
+      dist = dist.unionAll(relax).groupBy(col("doc_id")).agg(min(col("d")).as("d"))
+        .localCheckpoint()
+    }
+    dist.select(col("doc_id"), col("d").as("dist_cost"))
+  }
+
+  test("r01 and r05 equal their per-round spooled loops row for row") {
+    try {
+      val r01 = q("r01_recursive_collatz").collect().toSeq
+      assert(r01.size > 100 && r01.map(_.getInt(1)).max == 10, "collatz must reach the depth cap")
+      assert(r01 == collatzByRounds().orderBy("seed", "step").collect().toSeq)
+      val r05 = q("r05_shortest_path").collect().toSeq
+      assert(r05.size > 13, "3 hops from node 0 must reach past its 2-hop ball")
+      assert(r05 == shortestPathByRounds().orderBy("doc_id").collect().toSeq)
+    } finally Harness.hygiene(spark)
+  }
+
+  test("r01 and r05 build without a Spark job and run without a spool") {
+    import org.apache.spark.graft.ListenerBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val names = Seq("r01_recursive_collatz", "r05_shortest_path")
+    names.foreach(q) // first reads of a table may list its files
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counter)
+    val dfs = try names.map(q) finally {
+      ListenerBus.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(counter)
+    }
+    assert(jobs.get == 0, s"building r01/r05 launched ${jobs.get} jobs: a per-round action is back")
+    try for ((n, df) <- names.zip(dfs)) {
+      df.queryExecution.toRdd.count()
+      val fp = PlanDump.fingerprint(df.queryExecution.executedPlan)
+      assert(!fp.contains("scan.local"), s"$n reads a spool: $fp")
+    } finally Harness.hygiene(spark)
   }
 
   test("d08: every representative belongs to its cluster and has its max length") {

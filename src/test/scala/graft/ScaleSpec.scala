@@ -8,7 +8,7 @@ import graft.operators.SkewUtils
 /** Scale-machinery specs: Z-order clustering, salted skew joins, and
   * stateful streaming sessionization (the operators whose value only
   * shows at 100 TB, tested here for correctness of the machinery). */
-class ScaleSpec extends AnyFunSuite {
+class ScaleSpec extends AnyFunSuite with TempDirs {
   import SparkSuite._
 
   test("z-order interleave: reference values and engine agreement") {
@@ -22,7 +22,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("z-order clustered write: files cover disjoint compact z-ranges") {
-    val path = java.nio.file.Files.createTempDirectory("graft_z").toString + "/parts"
+    val path = tempDir("graft_z").toString + "/parts"
     ZOrder.clusteredWrite(
       Tables.df(spark, Sf, "part").select(col("p_partkey"), col("p_size")),
       "p_partkey % 256", "p_size % 256", 8, path, numFiles = 4)
@@ -203,7 +203,7 @@ class ScaleSpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
     import spark.implicits._
     Tables.configure(spark)
-    val landing = java.nio.file.Files.createTempDirectory("graft_sess")
+    val landing = tempDir("graft_sess")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$Sf/events.parquet"),
       landing.resolve("batch0.parquet"))

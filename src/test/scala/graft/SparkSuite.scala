@@ -23,3 +23,17 @@ object SparkSuite {
     df.queryExecution.executedPlan.toString
   }
 }
+
+/** Temp directories a suite creates, deleted when the suite ends. */
+trait TempDirs extends org.scalatest.BeforeAndAfterAll { this: org.scalatest.Suite =>
+  private val dirs = scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
+
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    dirs += d
+    d
+  }
+
+  override def afterAll(): Unit =
+    try dirs.foreach(d => Derived.delete(d.toFile)) finally super.afterAll()
+}

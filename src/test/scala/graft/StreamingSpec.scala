@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.Trigger
   * analog: drain all available input, update the materialization, stop.
   * Correctness condition, same as IVM: streaming result ≡ batch result.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   import SparkSuite._
   import StreamingSpec.E
 
@@ -18,7 +18,7 @@ class StreamingSpec extends AnyFunSuite {
     Tables.configure(spark)
     // stage the event file into a landing directory (file stream sources
     // watch directories, the COPY-from-gpfdist analog)
-    val landing = java.nio.file.Files.createTempDirectory("graft_stream")
+    val landing = tempDir("graft_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$Sf/events.parquet"),
       landing.resolve("batch0.parquet"))
@@ -58,7 +58,7 @@ class StreamingSpec extends AnyFunSuite {
     // on the streamed result exactly as in batch.
     Tables.configure(spark)
     import spark.implicits._
-    val landing = java.nio.file.Files.createTempDirectory("graft_mg_stream")
+    val landing = tempDir("graft_mg_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$Sf/documents.parquet"),
       landing.resolve("batch0.parquet"))
@@ -199,7 +199,7 @@ class StreamingSpec extends AnyFunSuite {
     val ev = Tables.df(spark, Sf, "events")
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
     val cut = ev.agg(expr("percentile_approx(CAST(ts AS LONG), 0.5)")).head.getLong(0)
-    val landing = java.nio.file.Files.createTempDirectory("graft_ewma")
+    val landing = tempDir("graft_ewma")
     ev.filter(expr(s"CAST(ts AS LONG) <= $cut")).coalesce(1)
       .write.parquet(landing.resolve("b0").toString)
     ev.filter(expr(s"CAST(ts AS LONG) > $cut")).coalesce(1)
@@ -490,8 +490,8 @@ class StreamingSpec extends AnyFunSuite {
     // exactly-once: replaying a batch (same batchId) must not change the
     // folded state; a NEW batchId must fold in.
     Tables.configure(spark)
-    val target = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val landing = java.nio.file.Files.createTempDirectory("graft_sink_in")
+    val target = tempDir("graft_sink").toString
+    val landing = tempDir("graft_sink_in")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$Sf/events.parquet"), landing.resolve("batch0.parquet"))
     val sink = new graft.streaming.PartialStateSink(spark, target)
@@ -501,7 +501,7 @@ class StreamingSpec extends AnyFunSuite {
       .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) => sink.upsertBatch(df, id))
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_sink_ck").toString)
+        tempDir("graft_sink_ck").toString)
       .start()
     q.awaitTermination(120000)
     assert(!q.isActive)
@@ -530,7 +530,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("scheduler drives dynamic-table refreshes; missed ticks catch up in one run") {
     import graft.streaming.{DynamicTable, RefreshScheduler}
-    val base = java.nio.file.Files.createTempDirectory("graft_sched")
+    val base = tempDir("graft_sched")
     val src = base.toString + "/src"
     val dst = base.toString + "/dt"
     def appendBatch(tag: Int, rows: Seq[(Long, Long)]): Unit =
@@ -565,7 +565,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.RefreshScheduler
     import org.apache.spark.sql.streaming.Trigger
     Tables.configure(spark)
-    val base = java.nio.file.Files.createTempDirectory("graft_dtstream")
+    val base = tempDir("graft_dtstream")
     val landing = base.resolve("in"); java.nio.file.Files.createDirectories(landing)
     val ckpt = base.resolve("ckpt").toString
     java.nio.file.Files.copy(
@@ -610,7 +610,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("dynamic table refresh is idempotent and atomic-overwrite") {
     import graft.streaming.DynamicTable
-    val path = java.nio.file.Files.createTempDirectory("graft_dt").toString + "/dt"
+    val path = tempDir("graft_dt").toString + "/dt"
     val dt = new DynamicTable(spark, path,
       () => Tables.df(spark, Sf, "nation").groupBy(col("n_regionkey"))
         .agg(count(lit(1)).as("n")))
@@ -638,7 +638,7 @@ class StreamingSpec extends AnyFunSuite {
     val docs = Tables.df(spark, Sf, "documents")
     val delta = docs.filter(isDelta)
     val median = delta.selectExpr("percentile(doc_id, 0.5)").head.getDouble(0)
-    val landing = java.nio.file.Files.createTempDirectory("graft_i11_stream").toString
+    val landing = tempDir("graft_i11_stream").toString
     delta.filter(col("doc_id") <= median).coalesce(1).write.parquet(s"$landing/b0")
     delta.filter(col("doc_id") > median).coalesce(1).write.parquet(s"$landing/b1")
     val verdicts = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Option[Long])]
@@ -690,7 +690,7 @@ class StreamingSpec extends AnyFunSuite {
     val delta = docs.filter(col("doc_id") % 4 === 0)
     var state = Dedup.buildSpanState(base)
     val median = delta.selectExpr("percentile(doc_id, 0.5)").head.getDouble(0)
-    val landing = java.nio.file.Files.createTempDirectory("graft_i17_stream").toString
+    val landing = tempDir("graft_i17_stream").toString
     delta.filter(col("doc_id") <= median).coalesce(1).write.parquet(s"$landing/b0")
     delta.filter(col("doc_id") > median).coalesce(1).write.parquet(s"$landing/b1")
     val composed = scala.collection.mutable.Map.empty[Long, Seq[Any]]
@@ -751,7 +751,7 @@ class StreamingSpec extends AnyFunSuite {
     val deleted = docs.filter(col("doc_id") % 5 === 3).select("doc_id")
     var state = Dedup.buildSpanState(docs)
     val median = deleted.selectExpr("percentile(doc_id, 0.5)").head.getDouble(0)
-    val landing = java.nio.file.Files.createTempDirectory("graft_i18_stream").toString
+    val landing = tempDir("graft_i18_stream").toString
     deleted.filter(col("doc_id") <= median).coalesce(1).write.parquet(s"$landing/b0")
     deleted.filter(col("doc_id") > median).coalesce(1).write.parquet(s"$landing/b1")
     val composed = scala.collection.mutable.Map.empty[Long, Seq[Any]]
