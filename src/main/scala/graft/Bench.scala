@@ -31,6 +31,7 @@ object Harness {
       .config("spark.sql.codegen.cache.maxEntries", "4000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    Tables.configure(spark)
     spark
   }
 

@@ -61,9 +61,13 @@ object SparkEntry {
     (operators.Federated.queries, operators.Federated.oracle)
   )
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.iterator.flatMap(_._1).toMap
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * wires its session first (`Tables.configure`, a conf check once
+    * done), so a plain session a caller built itself runs every query. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    modules.iterator.flatMap(_._1).map { case (name, q) =>
+      name -> { (spark: SparkSession, sf: String) => Tables.configure(spark); q(spark, sf) }
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a rows-only check. */

@@ -25,9 +25,13 @@ object Tables {
     * DISTRIBUTED REPLICATED policy, `gp_distribution_policy.h:86-111`). */
   val replicated: Set[String] = Set("region", "nation")
 
-  /** Session confs every graft session needs. Applied once per session
-    * (guarded), not per-read — a reader function must not mutate global
-    * session state on every call.
+  /** The one place a graft session is wired (SURVEY.md §7.1's session
+    * object): the confs, the PG function-compat layer, the graft UDAFs
+    * and the optimizer rules every query may use. Applied once per
+    * session (guarded), not per-read or per-query — no query registers
+    * or installs anything itself. Reached from [[df]], from
+    * `Harness.session` and from every `SparkEntry.queries` entry, so a
+    * plain session is wired before its first query builds.
     *  - nanosAsLong: `events.ts` is parquet TIMESTAMP(NANOS), which the
     *    vectorized reader rejects; read nanos as long and truncate to
     *    microseconds (DuckDB's TIMESTAMP is microseconds too, so the
@@ -70,13 +74,40 @@ object Tables {
         case None => inferRule
       }
       spark.conf.set("spark.sql.optimizer.excludedRules", excluded)
-      // the engine-level single-binding rewrite for the OTHER face of
-      // the class — repeated expensive kernels in pushed Filter
-      // conditions (fires nowhere in the current repo, which is at
-      // zero KernelFilterSpec signatures; defends future queries)
-      graft.rules.BindExpensiveFilterRule.install(spark)
+      val registry = spark.sessionState.functionRegistry
+      functions.PgFunctions.builders.foreach { case (name, builder) =>
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+      }
+      udafs.foreach { case (name, agg) => spark.udf.register(name, agg) }
+      // every graft rule, in one fixed order, in the post-main-batch
+      // `extraOptimizations` slot. Each is a no-op until a query turns
+      // it on: AQUMV and eager-agg behind their EnabledConf, RLS with no
+      // policy set. BindExpensiveFilterRule is the engine-level
+      // single-binding rewrite for the OTHER face of the class —
+      // repeated expensive kernels in pushed Filter conditions (fires
+      // nowhere in the current repo, which is at zero KernelFilterSpec
+      // signatures; defends future queries).
+      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations ++ Seq(
+        graft.rules.BindExpensiveFilterRule,
+        new graft.rules.RlsRule(spark),
+        new graft.rules.AqumvRule(spark),
+        new graft.rules.EagerAggRule(spark))
       spark.conf.set("spark.graft.configured", "true")
     }
+
+  /** The graft UDAFs, one name per aggregator. */
+  private def udafs: Seq[(String, org.apache.spark.sql.expressions.UserDefinedFunction)] = {
+    import org.apache.spark.sql.functions.udaf
+    import graft.functions._
+    Seq(
+      "top3_pairs" -> udaf(new TopKPairs(3)),
+      "top5_pairs" -> udaf(new TopKPairs(5)),
+      "top8_pairs" -> udaf(new TopKPairs(8)),
+      "mg64" -> udaf(new MisraGries(64)),
+      "hyp_rank" -> udaf(HypRank),
+      "hyp_percent_rank" -> udaf(HypPercentRank),
+      "hyp_cume_dist" -> udaf(HypCumeDist))
+  }
 
   /** Per-path memo of the inferred parquet SCHEMA (not the DataFrame).
     * `spark.read.parquet` re-reads footers for schema inference on every

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 
@@ -9,9 +8,9 @@ import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
   * varlena.c) re-expressed as native Catalyst expressions and
   * registrations, never UDFs, so everything stays codegen'd.
   *
-  * Functions are registered into the session's FunctionRegistry (the
-  * `CREATE FUNCTION` catalog analog); `register` is idempotent and safe
-  * to call from every query entry.
+  * `builders` are registered into the session's FunctionRegistry (the
+  * `CREATE FUNCTION` catalog analog) once per session, by
+  * `graft.Tables.configure`.
   */
 object PgFunctions {
 
@@ -298,14 +297,4 @@ object PgFunctions {
       }
     }
   )
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.conf.getOption("spark.graft.pgfunctions").contains("true")) {
-      val registry = spark.sessionState.functionRegistry
-      builders.foreach { case (name, builder) =>
-        registry.createOrReplaceTempFunction(name, builder, "built-in")
-      }
-      spark.conf.set("spark.graft.pgfunctions", "true")
-    }
 }

@@ -134,7 +134,6 @@ object Bucketed {
     //    recursive CTE over HUGEINTs (mod-2^64 arithmetic spelled out),
     //    so per-segment counts — not just the invariant — cross-check --
     "b05_jump_consistent_hash" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       Tables.df(s, dir, "orders")
         .select(col("o_orderkey"),
           expr("jump_hash(o_orderkey, 16)").as("seg16"),

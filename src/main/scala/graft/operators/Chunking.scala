@@ -50,7 +50,6 @@ object Chunking {
     * < 8 tokens emit no grams (the empty-series semantics the md5 form
     * guarded by hand). */
   private def grams(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.PgFunctions.register(s)
     Tables.df(s, dir, "documents")
       .select(col("doc_id"), explode(expr("word_grams31(text, 8, true)")).as("gram"))
   }
@@ -401,7 +400,6 @@ object Chunking {
     //    sketch-only |sources|² join that never touches text. The full
     //    matrix (zero estimates included) is the honest audit output --
     "t24_source_overlap" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       val P = 16
       // r13 (the d-family kernel follow-through): shingles are
       // word_grams31 BIGINT fps (one hash per corpus character) and the

@@ -99,7 +99,6 @@ object Crypto {
     //    row. Pure per-row expression pipeline: no shuffle before the
     //    presentation sort.
     "cr04_pgp_sym" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       // SP 800-38A F.3.13 CFB128-AES128.Encrypt, segment 1:
       // E(key=2b7e..., iv=000102...) over the canonical plaintext block
       val vecOk = expr(
@@ -120,7 +119,6 @@ object Crypto {
     },
 
     "cr03_armor" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       Tables.df(s, dir, "documents")
         .withColumn("payload",
           expr("regexp_replace(substring(text, 1, 120), '[^ -~]', '')"))

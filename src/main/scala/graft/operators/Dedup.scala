@@ -57,7 +57,6 @@ object Dedup {
     * Per-token hashes vote on each bit; bands are the halves. */
   private[graft] def simhashDf(s: SparkSession, dir: String, bits: Int = 24): DataFrame = {
     require(bits % 2 == 0 && bits >= 2 && bits <= 48, s"unsupported simhash width $bits")
-    graft.functions.PgFunctions.register(s)
     // per-bit vote sums fold in ONE aggregation pass (`bits` sum()
     // columns over the token rows) instead of exploding tokens ×bits —
     // the map-side partial sums collapse each partition to |docs| rows.
@@ -103,9 +102,35 @@ object Dedup {
     * fingerprints as its raw text's rolling hash (`false` = d02-family
     * short-doc semantics), as before. */
   private[graft] def shingleFpsOf(docs: DataFrame): DataFrame = {
-    graft.functions.PgFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       explode(expr("word_grams31(text, 3, false)")).as("fp"))
+  }
+
+  /** The capped posting-list pipeline shared by d02, d09, d10 and d13:
+    * (doc_id, fp) rows in, one row per fingerprint out carrying
+    * `dsz = sort_array([(doc, sz)])`, where `sz` is the doc's count of
+    * rare fingerprints. One shuffle groups the index by fingerprint;
+    * collect_set gives the per-fp doc set directly (no separate
+    * `.distinct()` shuffle); the frequency cap is a size() filter on
+    * the posting list ([[StopShingleCap]]). The spool (ShareInputScan)
+    * feeds both the doc-size census and the pair path. Each list is
+    * then re-keyed with its docs' sizes — one narrow |fps|-row shuffle
+    * (linear, any scale) — so the compiled pair-emit kernels carry both
+    * sizes in the group key and the caller's pair path needs no size
+    * joins at all. Lists of one doc emit no pair and are dropped. */
+  private def sizedPostings(fps: DataFrame): DataFrame = {
+    val lists = fps
+      .groupBy(col("fp"))
+      .agg(sort_array(collect_set(col("doc_id"))).as("ds"))
+      .filter(size(col("ds")) <= StopShingleCap)
+      .localCheckpoint()
+    val exploded = lists
+      .select(col("fp"), size(col("ds")).as("lsz"), explode(col("ds")).as("doc_id"))
+    val sizes = exploded.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
+    exploded.filter(col("lsz") >= 2)
+      .join(sizes, Seq("doc_id"))
+      .groupBy(col("fp"))
+      .agg(sort_array(collect_list(struct(col("doc_id").as("doc"), col("sz")))).as("dsz"))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -142,15 +167,10 @@ object Dedup {
     // defined over the capped shingle universe: sizes and intersections
     // both exclude stop-shingles, identically in the DuckDB oracle.
     "d02_ngram_jaccard" -> { (s, dir) =>
-      // Posting-list formulation: one shuffle groups the index by
-      // fingerprint; the frequency cap is a size() filter on the posting
-      // list; candidate pairs are emitted PARTITION-LOCALLY from each
-      // list (sorted, so a_id < b_id by construction) instead of a
-      // self-join — one less shuffle of the widest data. collect_set
-      // (not _list) gives the per-fp doc set directly, absorbing the
-      // dedup that used to be a separate `.distinct()` shuffle. The
-      // spool (ShareInputScan) feeds both the doc sizes and the pair
-      // emission.
+      // Posting-list formulation ([[sizedPostings]]): candidate pairs
+      // are emitted PARTITION-LOCALLY from each capped list (sorted, so
+      // a_id < b_id by construction) instead of a self-join — one less
+      // shuffle of the widest data.
       //
       // r8 shape (judge's d02 item): the pair exchange used to carry
       // 1.27M raw pair occurrences → 1.13M mostly-unique (a,b) keys,
@@ -162,22 +182,7 @@ object Dedup {
       // (b) carries both sizes in the group key (functional dep of the
       // ids), so the jaccard is computable straight off the aggregate —
       // zero joins after the count.
-      val lists = shingleFps(s, dir)
-        .groupBy(col("fp"))
-        .agg(sort_array(collect_set(col("doc_id"))).as("ds"))
-        .filter(size(col("ds")) <= StopShingleCap)
-        .localCheckpoint() // spool feeds the size count and the pair path
-      val exploded = lists
-        .select(col("fp"), size(col("ds")).as("lsz"), explode(col("ds")).as("doc_id"))
-      val sizes = exploded.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      // re-key each posting entry with its doc's rare-shingle count:
-      // one narrow |fps|-row shuffle (linear, any scale), after which
-      // the pair path needs no size joins at all
-      val sized = exploded.filter(col("lsz") >= 2)
-        .join(sizes, Seq("doc_id"))
-        .groupBy(col("fp"))
-        .agg(sort_array(collect_list(struct(col("doc_id").as("doc"), col("sz")))).as("dsz"))
-      sized
+      sizedPostings(shingleFps(s, dir))
         .select(explode(expr(s"pair_emit_sized(dsz, $StopShingleCap)")).as("p"))
         .groupBy(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"),
           col("p.a_sz").as("a_sz"), col("p.b_sz").as("b_sz"))
@@ -291,19 +296,7 @@ object Dedup {
     //    directions are evaluated per unordered pair; a pair appears
     //    when EITHER direction reaches the threshold --
     "d09_containment" -> { (s, dir) =>
-      val lists = shingleFps(s, dir)
-        .groupBy(col("fp"))
-        .agg(sort_array(collect_set(col("doc_id"))).as("ds"))
-        .filter(size(col("ds")) <= StopShingleCap)
-        .localCheckpoint()
-      val exploded = lists
-        .select(col("fp"), size(col("ds")).as("lsz"), explode(col("ds")).as("doc_id"))
-      val sizes = exploded.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      val sized = exploded.filter(col("lsz") >= 2)
-        .join(sizes, Seq("doc_id"))
-        .groupBy(col("fp"))
-        .agg(sort_array(collect_list(struct(col("doc_id").as("doc"), col("sz")))).as("dsz"))
-      sized
+      sizedPostings(shingleFps(s, dir))
         .select(explode(expr(s"pair_emit_sized_all(dsz, $StopShingleCap)")).as("p"))
         // sizes are functional deps of the ids — carrying them IN the
         // group key (d02's shape) measured 20% faster than min() agg
@@ -339,21 +332,9 @@ object Dedup {
     //    Reference analog: tuning runs over hash/band parameters in
     //    dedup curation (minhash_lsh family, SURVEY §2 pipeline ops) --
     "d10_lsh_recall_audit" -> { (s, dir) =>
-      val lists = shingleFps(s, dir)
-        .groupBy(col("fp"))
-        .agg(sort_array(collect_set(col("doc_id"))).as("ds"))
-        .filter(size(col("ds")) <= StopShingleCap)
-        .localCheckpoint() // spool: feeds both the size census and the pair path
-      val exploded = lists
-        .select(col("fp"), size(col("ds")).as("lsz"), explode(col("ds")).as("doc_id"))
-      val sizes = exploded.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      val sized = exploded.filter(col("lsz") >= 2)
-        .join(sizes, Seq("doc_id"))
-        .groupBy(col("fp"))
-        .agg(sort_array(collect_list(struct(col("doc_id").as("doc"), col("sz")))).as("dsz"))
       // exact ground truth: every co-occurring pair with its (inter, union)
       // carried as integers — the unpruned sized kernel, as in d09
-      val truth = sized
+      val truth = sizedPostings(shingleFps(s, dir))
         .select(explode(expr(s"pair_emit_sized_all(dsz, $StopShingleCap)")).as("p"))
         .groupBy(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"))
         .agg(count(lit(1)).as("inter"),
@@ -397,22 +378,9 @@ object Dedup {
     //    Overlap is containment-style (shared / smaller set): a short
     //    excerpt inside a long doc is the signal, so no length prune.
     "d13_winnowing" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       val fps = Tables.df(s, dir, "documents")
         .select(col("doc_id"), explode(expr("winnow_fps(text, 8, 8)")).as("fp"))
-      val lists = fps
-        .groupBy(col("fp"))
-        .agg(sort_array(collect_set(col("doc_id"))).as("ds"))
-        .filter(size(col("ds")) <= StopShingleCap)
-        .localCheckpoint() // spool: feeds both the size census and the pair path
-      val exploded = lists
-        .select(col("fp"), size(col("ds")).as("lsz"), explode(col("ds")).as("doc_id"))
-      val sizes = exploded.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      val sized = exploded.filter(col("lsz") >= 2)
-        .join(sizes, Seq("doc_id"))
-        .groupBy(col("fp"))
-        .agg(sort_array(collect_list(struct(col("doc_id").as("doc"), col("sz")))).as("dsz"))
-      sized
+      sizedPostings(fps)
         .select(explode(expr(s"pair_emit_sized_all(dsz, $StopShingleCap)")).as("p"))
         .groupBy(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"),
           col("p.a_sz").as("a_sz"), col("p.b_sz").as("b_sz"))
@@ -440,7 +408,6 @@ object Dedup {
     //    emission, so no hot-shingle quadratic and no cap needed); run
     //    windows partition per doc, bounded by doc length. --
     "d14_substring_span_dedup" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       spanDedupOf(Tables.df(s, dir, "documents"))
     },
 
@@ -454,7 +421,6 @@ object Dedup {
     //    is content-addressed (md5 of the rebuilt text) so the oracle
     //    compare proves byte-identical reassembly cross-engine. --
     "d15_span_cut_rewrite" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       spanCutOf(Tables.df(s, dir, "documents"))
     },
 
@@ -478,7 +444,6 @@ object Dedup {
     //    read is the delta slice itself (pushed doc_id filter);
     //    PlanShapeSpec pins that base text is never rescanned. --
     "i17_span_dedup_incremental" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       val st = ensureSpanState(s, dir, baseSlice = true)
       spanDedupProbe(st, Tables.df(s, dir, "documents").filter(col("doc_id") % 4 === 0))
     },
@@ -498,7 +463,6 @@ object Dedup {
     //    is the retraction probe alone, and every scan in its plan reads
     //    a state table, never documents.parquet. --
     "i18_span_dedup_retract" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       val st = ensureSpanState(s, dir, baseSlice = false)
       spanDedupRetract(st, st.ntok.filter(col("doc_id") % 5 === 3).select("doc_id"))
     }
@@ -651,7 +615,6 @@ object Dedup {
         Seq(s"${stem}_wins", s"${stem}_census", s"${stem}_ntok"), "documents") {
       case Seq(winsOut, censusOut, ntokOut) =>
         val t0 = System.nanoTime()
-        graft.functions.PgFunctions.register(s)
         val all = graft.Tables.df(s, dir, "documents")
         val docs = if (baseSlice) all.filter(col("doc_id") % 4 =!= 0) else all
         positionalWindowsOf(docs).write.mode("overwrite").parquet(winsOut)
@@ -877,7 +840,6 @@ object Dedup {
     * pairs out) so ScaleSpec can assert the bound on a synthetic hot
     * cluster. */
   private[graft] def minhashPairs(bands: DataFrame): DataFrame = {
-    graft.functions.PgFunctions.register(bands.sparkSession)
     bands
     .groupBy(col("band"), col("band_key"))
     .agg(sort_array(collect_list(col("doc_id"))).as("ds"))

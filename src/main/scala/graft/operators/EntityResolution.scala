@@ -54,7 +54,6 @@ object EntityResolution {
       // exchange pair and ONE join. Names are non-null non-empty, so
       // every key value is non-null (no null-key join semantics in
       // play). Idle A/B at sf0.1 + oracle hash prove equivalence.
-      graft.functions.PgFunctions.register(s)
       // defensive null-key guard (r18 advice): struct equality treats
       // null fields as EQUAL, so a future nullable key value would
       // silently cross-match one giant null block — unlike the old

@@ -237,7 +237,6 @@ object Extras {
     //    min over rows. Asserts the CMS one-sided guarantee
     //    (estimate >= exact) in-row --
     "q101_count_min" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       val wc = Tables.df(s, dir, "documents")
         .select(explode(expr("filter(split(text, ' '), x -> x <> '')")).as("word"))
         .groupBy(col("word")).agg(count(lit(1)).as("n"))
@@ -339,7 +338,6 @@ object Extras {
     //    invariant itself (tid == doc_id, dense, zero-based) so a layout
     //    change fails loudly rather than silently shifting the oracle. --
     "q66_tid_scan" -> { (s, dir) =>
-      graft.Tables.configure(s)
       s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("lang"), col("_metadata.row_index").as("tid"))
         .filter(col("tid") < 100)

@@ -38,8 +38,10 @@ object Federated {
   /** One remote-DB load per (JVM, sf dir). */
   private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private def setup(s: SparkSession, dir: String): String =
-    built.computeIfAbsent(dir, { _ =>
+  /** The load is per JVM, but the catalog registration is a session
+    * conf, so every session that reads the server sets it. */
+  private def setup(s: SparkSession, dir: String): String = {
+    val url = built.computeIfAbsent(dir, { _ =>
       val home = new java.io.File(Derived.path("derby_home")).getAbsolutePath
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(home))
       System.setProperty("derby.system.home", home)
@@ -56,15 +58,17 @@ object Federated {
         .option("dbtable", "NATION_REMOTE")
         .option("createTableColumnTypes", "n_name VARCHAR(32)")
         .save()
-      // "CREATE SERVER": register the V2 catalog for this remote DB
-      s.conf.set("spark.sql.catalog.fed",
-        "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog")
-      s.conf.set("spark.sql.catalog.fed.url", url)
-      s.conf.set("spark.sql.catalog.fed.driver", "org.apache.derby.jdbc.EmbeddedDriver")
-      s.conf.set("spark.sql.catalog.fed.pushDownAggregate", "true")
-      s.conf.set("spark.sql.catalog.fed.pushDownLimit", "true")
       url
     })
+    // "CREATE SERVER": register the V2 catalog for this remote DB
+    s.conf.set("spark.sql.catalog.fed",
+      "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog")
+    s.conf.set("spark.sql.catalog.fed.url", url)
+    s.conf.set("spark.sql.catalog.fed.driver", "org.apache.derby.jdbc.EmbeddedDriver")
+    s.conf.set("spark.sql.catalog.fed.pushDownAggregate", "true")
+    s.conf.set("spark.sql.catalog.fed.pushDownLimit", "true")
+    url
+  }
 
   /** The foreign table via the V2 catalog (FDW foreign scan). */
   def remoteNation(s: SparkSession, dir: String): DataFrame = {

@@ -243,7 +243,6 @@ object FullText {
     * lexize work codegen'd HOFs, rank a per-row formula. */
   private def configRank(s: SparkSession, cfg: FtsConfig.TsConfig,
       corpus: DataFrame, queryTerm: String): DataFrame = {
-    graft.functions.PgFunctions.register(s)
     val qlex = cfg.queryLex(queryTerm) // chain-resolved at PLAN time
     val tfExpr = qlex.map(q => s"size(filter(lex, x -> x = '$q'))").mkString(" + ")
     corpus
@@ -275,7 +274,6 @@ object FullText {
     //    so any vocabulary drift fails the row count loudly rather than
     //    silently passing --
     "f14_porter_stems" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       val sufArr = StemSuffixes.map("'" + _ + "'").mkString("array(", ",", ")")
       Tables.df(s, dir, "documents")
         .select(explode(expr(toks)).as("w"))
@@ -301,7 +299,6 @@ object FullText {
     //    dictionary (generated by the unit-tested implementation) and
     //    re-derives the same ranks --
     "f15_stemmed_rank" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       // query-side stemming happens at PLAN time with the same function
       val qstems = Seq("merging", "vectors")
         .map(graft.functions.PorterStem.stem) // -> merg, vector
@@ -392,7 +389,6 @@ object FullText {
     //    same truncation arithmetic. Config-data-only, zero pipeline
     //    changes (the same generated chain text f17/f18/f19 run) --
     "f20_intdict_config" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       val cfg = FtsConfig("english")
         .withIntDict(FtsConfig.IntDict(maxlen = 6, absval = true))
       Tables.df(s, dir, "orders")

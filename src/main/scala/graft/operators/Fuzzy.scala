@@ -65,7 +65,6 @@ object Fuzzy {
     //    algorithm fidelity is pinned separately by FunctionsSpec
     //    vectors hand-audited against the C's control flow --
     "fz06_metaphone" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       Tables.df(s, dir, "part")
         .select(explode(split(lower(org.apache.spark.sql.functions.col("p_name")), "[^a-z0-9]+")).as("word"))
         .filter(col("word") =!= "")
@@ -92,7 +91,6 @@ object Fuzzy {
     //    FunctionsSpec). Oracle: frozen (word, code) dict, the f14
     //    discipline --
     "fz07_daitch_mokotoff" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       Tables.df(s, dir, "part")
         .select(explode(split(lower(org.apache.spark.sql.functions.col("p_name")), "[^a-z0-9]+")).as("word"))
         .filter(col("word") =!= "")

@@ -61,7 +61,6 @@ object Geo {
     // both engines rank identical keys); ties break on c_custkey via the
     // aggregator's (score DESC, id ASC) order = (dist ASC, id ASC).
     "g02_anchor_knn" -> { (s, dir) =>
-      s.udf.register("geo_top3", udaf(new graft.functions.TopKPairs(3)))
       val anchors = Tables.df(s, dir, "region").select(
         col("r_name"),
         expr("(r_regionkey * 173) % 1000").as("ax"),
@@ -71,7 +70,7 @@ object Geo {
         .withColumn("dist_r", expr(
           "round(sqrt(pow(px - ax, 2) + pow(py - ay, 2)), 4)"))
         .groupBy(col("r_name"))
-        .agg(expr("geo_top3(-dist_r, c_custkey)").as("top"))
+        .agg(expr("top3_pairs(-dist_r, c_custkey)").as("top"))
         .select(col("r_name"), posexplode(col("top")).as(Seq("pos", "p")))
         .select(col("r_name"), (col("pos") + 1).cast("long").as("rnk"),
           col("p._2").as("c_custkey"), round(-col("p._1"), 4).as("dist"))

@@ -232,7 +232,6 @@ object Incremental {
     //    Output: per-list occupancy census with base/delta provenance —
     //    the index-health report a vector store surfaces --
     "i16_ivf_maintain" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       val emb = Tables.df(s, dir, "embeddings")
       val centroids = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
@@ -324,7 +323,6 @@ object Incremental {
   private def enableMatview(s: SparkSession, dir: String, name: String,
       defDf: DataFrame): Unit = {
     val path = Derived.once(dir, name, "orders")(defDf.write.mode("overwrite").parquet(_))
-    graft.rules.AqumvRule.install(s)
     graft.rules.AqumvRule.register(defDf, path)
     s.conf.set(graft.rules.AqumvRule.EnabledConf, "true")
   }

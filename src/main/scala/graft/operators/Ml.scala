@@ -205,7 +205,6 @@ object Ml {
     //    query — nothing super-linear anywhere.
     "ml06_knn_classify" -> { (s, dir) =>
       import org.apache.spark.sql.functions._
-      graft.functions.PgFunctions.register(s)
       val emb = Tables.df(s, dir, "embeddings")
       val queriesDf = emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
@@ -213,13 +212,12 @@ object Ml {
       val corpus = emb.filter(col("vec_id") >= 50)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
           col("label").as("c_label"))
-      s.udf.register("topk_pairs", udaf(new graft.functions.TopKPairs(5)))
       val top = corpus.join(broadcast(queriesDf), col("q_id") =!= col("c_id"))
         .withColumn("cosine", round(
           expr("vec_dot(q_emb, c_emb)") /
             (expr("sqrt(vec_dot(q_emb, q_emb))") * expr("sqrt(vec_dot(c_emb, c_emb))")), 9))
         .groupBy(col("q_id"), col("true_label"))
-        .agg(expr("topk_pairs(cosine, c_id)").as("top"))
+        .agg(expr("top5_pairs(cosine, c_id)").as("top"))
         .select(col("q_id"), col("true_label"), explode(col("top")).as("p"))
         .select(col("q_id"), col("true_label"), col("p._2").as("c_id"))
       val votes = top

@@ -208,7 +208,6 @@ object Multimodal {
     //    loop. Scale shape: one explode (O(bytes/16) rows), the island
     //    window partitions by doc_id, two partial-agg rollups. --
     "m06_energy_segments" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("doc_id")).orderBy(col("f"))
       // frame_energy materializes the codepoint array ONCE per doc and
@@ -248,7 +247,6 @@ object Multimodal {
     //    Output is the per-label filter report (kept counts + score
     //    range) a curation run would log --
     "m07_clipscore_filter" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       val emb = Tables.df(s, dir, "embeddings")
       val cent = emb
         .select(col("label"), posexplode(col("embedding")))
@@ -293,7 +291,6 @@ object Multimodal {
     //    re-walked the string per frame — O(L²/16) per doc, quadratic
     //    in document length, the r9 verdict's named scale hazard) --
     "m08_scene_cuts" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("doc_id")).orderBy(col("f"))
       val frames = Tables.df(s, dir, "documents")
@@ -330,7 +327,6 @@ object Multimodal {
     //    engines replay. Same scale shape as m08: doc-partitioned
     //    windows, one explode, one equi-join --
     "m09_scene_frame_sample" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("doc_id")).orderBy(col("f"))
       val frames = Tables.df(s, dir, "documents")

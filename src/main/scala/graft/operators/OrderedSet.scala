@@ -29,10 +29,6 @@ object OrderedSet {
 
     // -- hypothetical rank(25) WITHIN GROUP (ORDER BY l_quantity) --
     "q58_hypothetical_rank" -> { (s, dir) =>
-      if (!s.conf.getOption("spark.graft.hyprank").contains("true")) {
-        s.udf.register("hyp_rank", udaf(graft.functions.HypRank))
-        s.conf.set("spark.graft.hyprank", "true")
-      }
       Tables.register(s, dir)
       s.sql("""
         SELECT l_returnflag,
@@ -49,11 +45,6 @@ object OrderedSet {
     //    combinefunc story as q58); dense_rank(h) = 1 + |{distinct v :
     //    v < h}| runs as a single-DQA rewrite, the TupleSplit path --
     "q86_hypothetical_dist" -> { (s, dir) =>
-      if (!s.conf.getOption("spark.graft.hypdist").contains("true")) {
-        s.udf.register("hyp_percent_rank", udaf(graft.functions.HypPercentRank))
-        s.udf.register("hyp_cume_dist", udaf(graft.functions.HypCumeDist))
-        s.conf.set("spark.graft.hypdist", "true")
-      }
       Tables.register(s, dir)
       s.sql("""
         SELECT l_returnflag,

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
-import graft.functions.PgFunctions
 
 /** PG function-compat queries exercising the custom Catalyst expressions
   * in graft.functions (SURVEY.md §2.9, build-plan step 3): numeric
@@ -64,7 +63,6 @@ object PgCompat {
 
     // -- to_char numeric templates (formatting.c) --
     "q51_to_char" -> { (s, dir) =>
-      PgFunctions.register(s)
       Tables.register(s, dir)
       s.sql("""
         SELECT o_orderkey,
@@ -83,7 +81,6 @@ object PgCompat {
     //    formatting anywhere); negative-exponent rendering is covered by
     //    PG's documented examples in FunctionsSpec --
     "q131_to_char_rn_eeee" -> { (s, dir) =>
-      PgFunctions.register(s)
       Tables.register(s, dir)
       s.sql("""
         SELECT o_orderkey,
@@ -101,7 +98,6 @@ object PgCompat {
     //    currency marks skipped, sign honored). The oracle renders the
     //    same text with DuckDB's fmt-style format() and strips it back --
     "q88_to_number" -> { (s, dir) =>
-      PgFunctions.register(s)
       Tables.register(s, dir)
       s.sql("""
         SELECT o_orderkey, price_txt,
@@ -317,7 +313,6 @@ object PgCompat {
 
     // -- age(): symbolic calendar interval (timestamp.c timestamp_age) --
     "q52_age" -> { (s, dir) =>
-      PgFunctions.register(s)
       Tables.register(s, dir)
       s.sql("""
         SELECT o_orderkey,
@@ -329,7 +324,6 @@ object PgCompat {
 
     // -- generate_series as an SRF in the target list (nodeProjectSet.c) --
     "q53_generate_series" -> { (s, dir) =>
-      PgFunctions.register(s)
       s.sql("""
         SELECT i, i * i AS sq
         FROM (SELECT generate_series(1L, 1000L) AS i)
@@ -338,7 +332,6 @@ object PgCompat {
 
     // -- to_char datetime templates (formatting.c DCH keywords) --
     "q68_to_char_date" -> { (s, dir) =>
-      PgFunctions.register(s)
       Tables.register(s, dir)
       s.sql("""
         SELECT o_orderkey,
@@ -358,7 +351,6 @@ object PgCompat {
     //    and rt_ok audits parse∘format = id inside the hash-compared
     //    result. Per-row codegen'd expressions, no shuffle --
     "q117_to_timestamp" -> { (s, dir) =>
-      PgFunctions.register(s)
       Tables.register(s, dir)
       s.sql("""
         WITH src AS (
@@ -392,7 +384,6 @@ object PgCompat {
     //    %L→NULL branches are exercised; t_<lower(status)> stays
     //    unquoted while 'Col <status>' forces %I's double-quoting --
     "q119_pg_format" -> { (s, dir) =>
-      PgFunctions.register(s)
       Tables.register(s, dir)
       s.sql("""
         SELECT o_orderkey,
@@ -465,7 +456,6 @@ object PgCompat {
 
     // -- string_to_array with the PG empty-input nuance --
     "q54_string_to_array" -> { (s, dir) =>
-      PgFunctions.register(s)
       Tables.register(s, dir)
       s.sql("""
         SELECT o_orderkey,
@@ -868,7 +858,6 @@ object PgCompat {
     //    identical md5s — the canonical-equivalence property itself is
     //    what the hash-compare checks. Pure per-row map, no shuffle --
     "q134_unicode_normalize" -> { (s, dir) =>
-      PgFunctions.register(s)
       Tables.df(s, dir, "part")
         .filter(col("p_partkey") <= 500)
         // NOTE: the two branches differ ONLY at the byte level — THEN is

@@ -380,7 +380,6 @@ object Recursive {
       // (sorted_intersect_count) — same distinct-count semantics,
       // zero allocation, whole-stage codegen. Idle A/B + oracle hash
       // below; SortedIntersectSpec pins equivalence property-style.
-      graft.functions.PgFunctions.register(s)
       val tri = oe
         .join(adj.select(col("s").as("s"), col("nbrs").as("na")), Seq("s"))
         .join(adj.select(col("s").as("t"), col("nbrs").as("nb")), Seq("t"))
@@ -473,9 +472,9 @@ object Recursive {
     labels
   }
 
-  /** r04's deterministic out-degree-3 multigraph: targets (2u+1)%N,
-    * (3u+2)%N, (u+7)%N. N enters as a broadcast scalar, not a driver
-    * action, so the edge relation is a pure function of the node set. */
+  /** peel rounds for r07 (shared by the query and the generated oracle) */
+  private val KcoreRounds = 5
+
   /** k-core decomposition (k=5) of the deterministic doc link graph —
     * the degeneracy-ordering building block for community detection and
     * graph sparsification (MADlib graph / Apache AGE territory, like
@@ -489,9 +488,6 @@ object Recursive {
     * per-round (n_nodes, n_edges) TRAJECTORY, so the oracle (the same
     * peeling rounds unrolled as CTEs) verifies every intermediate
     * state, not just the fixpoint. */
-  /** peel rounds for r07 (shared by the query and the generated oracle) */
-  private val KcoreRounds = 5
-
   private def kcoreQuery(s: SparkSession, dir: String): DataFrame = {
     val K = 5
     val docs = Tables.df(s, dir, "documents").select(col("doc_id"))
@@ -509,8 +505,14 @@ object Recursive {
     // separate counts() pass — a second endpoint union + countDistinct
     // (its own Expand + exchange) over every round's edge set — is gone:
     // each edge set's endpoints are now aggregated ONCE, not twice. The
-    // lazy checkpoints make that single action also materialize the
-    // round's frontier (edges + deg) in the same job.
+    // checkpoints are lazy, but under AQE a `localCheckpoint(eager =
+    // false)` over an exchange still runs that exchange's shuffle-map
+    // stage while the DataFrame is being built: the checkpoint asks for
+    // the plan's RDD, and an adaptive plan hands out its RDD only after
+    // its query stages have run. So the frontier's shuffles are jobs of
+    // their own, launched at build time, and the statsOf action reads
+    // the finished shuffle output; it does not materialize the frontier
+    // in the same job.
     def degOf(e: DataFrame): DataFrame =
       e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("d"))
@@ -554,6 +556,9 @@ object Recursive {
       .orderBy(col("round"))
   }
 
+  /** r04's deterministic out-degree-3 multigraph: targets (2u+1)%N,
+    * (3u+2)%N, (u+7)%N. N enters as a broadcast scalar, not a driver
+    * action, so the edge relation is a pure function of the node set. */
   private[graft] def pagerankEdges(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val nRow = docs.agg(count(lit(1)).as("nn"))
     docs.crossJoin(broadcast(nRow))

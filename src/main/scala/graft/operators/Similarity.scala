@@ -50,7 +50,7 @@ object Similarity {
     * CodegenFallback (interpreted per-element lambdas + boxing), while
     * vec_dot is one static primitive loop inside whole-stage codegen.
     * Same accumulation order and precision as the HOF formulation, so
-    * the oracle is unchanged. Callers must run PgFunctions.register. */
+    * the oracle is unchanged. */
   private val dotExpr = "vec_dot(q_emb, c_emb)"
   private def normExpr(c: String) = s"sqrt(vec_dot($c, $c))"
 
@@ -62,17 +62,15 @@ object Similarity {
     // ships ≤5 pairs per key across the shuffle (the r2-verdict's s01
     // note, now closed).
     "s01_cosine_topk" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       val emb = Tables.df(s, dir, "embeddings")
       val queriesDf = emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
       val corpus = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-      s.udf.register("topk_pairs", udaf(new graft.functions.TopKPairs(5)))
       corpus.join(broadcast(queriesDf), col("q_id") =!= col("c_id"))
         .withColumn("cosine", round(
           expr(dotExpr) / (expr(normExpr("q_emb")) * expr(normExpr("c_emb"))), 9))
         .groupBy(col("q_id"))
-        .agg(expr("topk_pairs(cosine, c_id)").as("top"))
+        .agg(expr("top5_pairs(cosine, c_id)").as("top"))
         .select(col("q_id"), posexplode(col("top")))
         .select(col("q_id"), col("col._2").as("c_id"), col("col._1").as("cosine"),
           (col("pos") + 1).as("rn"))
@@ -131,7 +129,6 @@ object Similarity {
     //    second scan exists anywhere. At 100 TB: broadcast queries +
     //    centroids, map-side-combined bounded aggregate, |q| rows out --
     "s13_filtered_ann" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       val emb = Tables.df(s, dir, "embeddings")
       val centroids = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
@@ -148,7 +145,6 @@ object Similarity {
       val queries = assigned("q_id", "q_emb", "q_label").filter(col("q_id") < 10)
         .withColumn("t_label", col("q_id") % 4)
       val corpus = assigned("c_id", "c_emb", "c_label")
-      s.udf.register("top3f_pairs", udaf(new graft.functions.TopKPairs(3)))
       corpus.join(broadcast(queries),
           col("c_label") === col("t_label") && col("q_id") =!= col("c_id"))
         .withColumn("cosine", round(
@@ -158,8 +154,8 @@ object Similarity {
         .agg(first(col("t_label")).as("t_label"),
           count(lit(1)).as("n_filtered"),
           sum(when(col("in_list"), 1L).otherwise(0L)).as("n_list"),
-          expr("top3f_pairs(cosine, c_id)").as("etop"),
-          expr("top3f_pairs(CASE WHEN in_list THEN cosine ELSE -2D END, c_id)").as("itop_raw"))
+          expr("top3_pairs(cosine, c_id)").as("etop"),
+          expr("top3_pairs(CASE WHEN in_list THEN cosine ELSE -2D END, c_id)").as("itop_raw"))
         .withColumn("itop", expr("filter(itop_raw, t -> t._1 > -1.5)"))
         .select(col("q_id"), col("t_label"), col("n_filtered"), col("n_list"),
           expr("CAST(size(array_intersect(transform(etop, t -> t._2), transform(itop, t -> t._2))) AS BIGINT)")
@@ -180,7 +176,6 @@ object Similarity {
     // O(N²/buckets) (the r2-verdict scale-killer). ScaleSpec proves the
     // bound on a synthetic degenerate cluster.
     "s03_embedding_near_dup" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       embeddingCandidates(bucketedDf(s, dir, NearDupPlanes))
         .withColumn("cosine", round(
           expr(dotExpr) / (expr(normExpr("q_emb")) * expr(normExpr("c_emb"))), 9))
@@ -219,7 +214,6 @@ object Similarity {
     // scales with sqrt(N), but the plan (broadcast assign → equi-join on
     // list id → per-list top-k) is unchanged.
     "s04_ivf_ann" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       val emb = Tables.df(s, dir, "embeddings")
       val centroids = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
@@ -242,7 +236,6 @@ object Similarity {
       val queries = assigned("q_id", "q_emb").filter(col("q_id") < 20)
       val corpus = assigned("c_id", "c_emb")
       // per-list top-3 via the bounded aggregate (same rationale as s01)
-      s.udf.register("top3_pairs", udaf(new graft.functions.TopKPairs(3)))
       queries.join(corpus,
           col("q_id_list") === col("c_id_list") && col("q_id") =!= col("c_id"))
         .withColumn("cosine", round(
@@ -265,7 +258,6 @@ object Similarity {
     // reports recall@3 of the quantized ranking against the exact float
     // ranking per query — the audit every quantized ANN deployment runs.
     "s06_quantized_ann" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       val quant = Tables.df(s, dir, "embeddings")
         .withColumn("m", expr(
           "greatest(aggregate(embedding, 0D, (a, x) -> greatest(a, abs(CAST(x AS DOUBLE)))), 1e-30)"))
@@ -278,7 +270,6 @@ object Similarity {
           col("qv").as("q_qv"), col("qnorm").as("q_qnorm"))
       val c = quant.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
         col("qv").as("c_qv"), col("qnorm").as("c_qnorm"))
-      s.udf.register("topk3q_pairs", udaf(new graft.functions.TopKPairs(3)))
       val pairs = c.join(broadcast(q), col("q_id") =!= col("c_id"))
         .withColumn("qdot", expr(
           "vec_doti(q_qv, c_qv)"))
@@ -291,8 +282,8 @@ object Similarity {
       // r4 verdict flagged the previous qtop⋈etop two-aggregation shape: the
       // partial aggs differed, no exchange reuse, 2× the dominant cost.)
       pairs.groupBy(col("q_id"))
-        .agg(expr("topk3q_pairs(qcos, c_id)").as("top"),
-          expr("topk3q_pairs(cosine, c_id)").as("etop"))
+        .agg(expr("top3_pairs(qcos, c_id)").as("top"),
+          expr("top3_pairs(cosine, c_id)").as("etop"))
         .select(col("q_id"),
           expr("CAST(size(array_intersect(transform(top, t -> t._2), transform(etop, t -> t._2))) AS BIGINT)")
             .as("recall3"),
@@ -316,7 +307,6 @@ object Similarity {
     //    partial-sum on (cent, pos): k·dim rows reach the reduce side
     //    per partition regardless of corpus size.
     "s07_kmeans_lloyd" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       val emb = kmeansQuantized(s, dir)
       val cents0 = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cent_id"), col("qv").as("cv"))
@@ -340,7 +330,6 @@ object Similarity {
     //    aggregate — the rule, not the plan, is what's cluster-wide).
     //    Output is the per-cluster dedup report --
     "d11_semdedup" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       val emb = kmeansQuantized(s, dir)
       val cents0 = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cent_id"), col("qv").as("cv"))
@@ -371,8 +360,6 @@ object Similarity {
     //    result as the recall-vs-work audit; top-3 per query via the
     //    bounded TopKPairs aggregate, not a window --
     "s09_multiprobe_lsh" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
-      s.udf.register("topk_pairs", udaf(new graft.functions.TopKPairs(3)))
       val b = bucketedDf(s, dir)
       val index = b.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
         col("bucket"))
@@ -388,7 +375,7 @@ object Similarity {
           expr(dotExpr) / (expr(normExpr("q_emb")) * expr(normExpr("c_emb"))), 9))
       cands
         .groupBy(col("q_id"))
-        .agg(count(lit(1)).as("n_cand"), expr("topk_pairs(cosine, c_id)").as("top"))
+        .agg(count(lit(1)).as("n_cand"), expr("top3_pairs(cosine, c_id)").as("top"))
         .select(col("q_id"), col("n_cand"), posexplode(col("top")))
         .select(col("q_id"), (col("pos") + 1).as("rn"), col("col._2").as("c_id"),
           col("col._1").as("cosine"), col("n_cand"))
@@ -407,8 +394,6 @@ object Similarity {
     //    Buckets partition the corpus and probe buckets are distinct,
     //    so candidates need no dedup at any scale --
     "s11_probe_sweep" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
-      s.udf.register("topk_pairs", udaf(new graft.functions.TopKPairs(3)))
       val b = bucketedDf(s, dir)
       val index = b.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
         col("bucket"))
@@ -426,7 +411,7 @@ object Similarity {
           expr(dotExpr) / (expr(normExpr("q_emb")) * expr(normExpr("c_emb"))), 9))
         .withColumn("level", explode(expr("filter(array(1, 5, 9), L -> L > p_ord)")))
         .groupBy(col("q_id"), col("level"))
-        .agg(count(lit(1)).as("n_cand"), expr("topk_pairs(cosine, c_id)").as("top"))
+        .agg(count(lit(1)).as("n_cand"), expr("top3_pairs(cosine, c_id)").as("top"))
         .select(col("q_id"), col("level").cast("bigint").as("level"),
           col("n_cand"), expr("transform(top, e -> e._2)").as("ids"))
       val qs = b.filter(col("vec_id") < 10)
@@ -436,7 +421,7 @@ object Similarity {
         .withColumn("cosine", round(
           expr(dotExpr) / (expr(normExpr("q_emb")) * expr(normExpr("c_emb"))), 9))
         .groupBy(col("q_id"))
-        .agg(expr("topk_pairs(cosine, c_id)").as("etop"))
+        .agg(expr("top3_pairs(cosine, c_id)").as("etop"))
         .select(col("q_id"), expr("transform(etop, e -> e._2)").as("eids"))
       swept.join(broadcast(exact), Seq("q_id"))
         .select(col("q_id"), col("level"), col("n_cand"),
@@ -464,8 +449,6 @@ object Similarity {
     //    recall5 audits the compression against the exact L2 top-5
     //    (the s06/q61 audit-in-result pattern) --
     "s08_pq_ann" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
-      s.udf.register("topk_pairs", udaf(new graft.functions.TopKPairs(5)))
       val emb = Tables.df(s, dir, "embeddings")
       val codebook = emb.filter(col("vec_id") < 4)
         .select(col("vec_id").cast("int").as("code"),
@@ -489,12 +472,12 @@ object Similarity {
         .groupBy(col("q_id"), col("c_id"))
         .agg(sum(col("d2u")).as("u"))
         .groupBy(col("q_id"))
-        .agg(expr("topk_pairs(CAST(-u AS DOUBLE), c_id)").as("top"))
+        .agg(expr("top5_pairs(CAST(-u AS DOUBLE), c_id)").as("top"))
       val exactTop = corpus.crossJoin(broadcast(qs))
         .withColumn("exu",
           expr("CAST(round(vec_l2sq(c_emb, q_emb) * 1000000) AS BIGINT)"))
         .groupBy(col("q_id"))
-        .agg(expr("topk_pairs(CAST(-exu AS DOUBLE), c_id)").as("etop"))
+        .agg(expr("top5_pairs(CAST(-exu AS DOUBLE), c_id)").as("etop"))
         .select(col("q_id"), expr("transform(etop, e -> e._2)").as("eids"))
       pqTop.join(broadcast(exactTop), Seq("q_id"))
         .withColumn("recall5",
@@ -531,9 +514,6 @@ object Similarity {
     //    BIGINTs with (distance, id) tie order, so both engines produce
     //    the identical shortlist, re-rank, and recall audit --
     "s14_ivfpq_rerank" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
-      s.udf.register("top8_pairs", udaf(new graft.functions.TopKPairs(8)))
-      s.udf.register("top3_pairs_s14", udaf(new graft.functions.TopKPairs(3)))
       val emb = Tables.df(s, dir, "embeddings")
       val centroids = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
@@ -591,7 +571,7 @@ object Similarity {
         .withColumn("exu", expr(
           "CAST(round(vec_l2sq(c_emb, q_emb) * 1000000) AS BIGINT)"))
         .groupBy(col("q_id"))
-        .agg(expr("top3_pairs_s14(CAST(-exu AS DOUBLE), c_id)").as("top"))
+        .agg(expr("top3_pairs(CAST(-exu AS DOUBLE), c_id)").as("top"))
       // audit: recall@3 vs the exact global top-3 (self excluded)
       val exactTop = emb.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
         .crossJoin(broadcast(qs))
@@ -599,7 +579,7 @@ object Similarity {
         .withColumn("exu", expr(
           "CAST(round(vec_l2sq(c_emb, q_emb) * 1000000) AS BIGINT)"))
         .groupBy(col("q_id"))
-        .agg(expr("top3_pairs_s14(CAST(-exu AS DOUBLE), c_id)").as("etop"))
+        .agg(expr("top3_pairs(CAST(-exu AS DOUBLE), c_id)").as("etop"))
         .select(col("q_id"), expr("transform(etop, e -> e._2)").as("eids"))
       reranked.join(broadcast(exactTop), Seq("q_id"))
         .withColumn("recall3",
@@ -611,7 +591,6 @@ object Similarity {
     },
 
     "s10_hybrid_rrf" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       val K = 20
       // lexical side: f10's BM25 (k1=1.2, b=0.75) over 'merge','vector'
       val d = Tables.df(s, dir, "documents")
@@ -718,7 +697,6 @@ object Similarity {
     // NULL and `NULL > 0` fell to the 0 branch per plane; the oracle's
     // generate_series spelling still computes that), which the
     // null-intolerant kernel would otherwise turn into a NULL group.
-    graft.functions.PgFunctions.register(s)
     Tables.df(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"),
         expr(s"CASE WHEN embedding IS NULL THEN CAST(0 AS BIGINT) " +

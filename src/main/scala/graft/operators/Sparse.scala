@@ -46,7 +46,6 @@ object Sparse {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // -- svec_dot cosine top-5: sparse TF vectors, two-pointer kernel --
     "v01_svec_cosine" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       // spool (ShareInputScan): the query and corpus branches both read
       // the vector build — un-spooled, the explode + vocab + per-doc
       // aggregation ran TWICE (the r8 bench caught it at 2.6 s; spooled
@@ -56,7 +55,6 @@ object Sparse {
         .select(col("doc_id").as("q_id"), col("svec").as("q_vec"), col("nrm").as("q_nrm"))
       val c = vecs.select(col("doc_id").as("c_id"), col("svec").as("c_vec"),
         col("nrm").as("c_nrm"))
-      s.udf.register("top5s_pairs", udaf(new graft.functions.TopKPairs(5)))
       c.join(broadcast(q), col("q_id") =!= col("c_id"))
         // dot and norms are exact integer-valued doubles (counts), so the
         // rounded cosine is bit-identical across engines and orderings
@@ -64,7 +62,7 @@ object Sparse {
           expr("svec_dot(q_vec, c_vec)") / (sqrt(col("q_nrm")) * sqrt(col("c_nrm"))), 9))
         .filter(col("cosine") > 0)
         .groupBy(col("q_id"))
-        .agg(expr("top5s_pairs(cosine, c_id)").as("top"))
+        .agg(expr("top5_pairs(cosine, c_id)").as("top"))
         .select(col("q_id"), posexplode(col("top")))
         .select(col("q_id"), col("col._2").as("c_id"), col("col._1").as("cosine"),
           (col("pos") + 1).as("rn"))
@@ -73,7 +71,6 @@ object Sparse {
 
     // -- l2norm + nnz profile (operators.c svec_l2norm, svec_nonzero) --
     "v02_svec_l2norm" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       docVecs(s, dir)
         .select(col("doc_id"),
           size(col("svec")).as("nnz"),

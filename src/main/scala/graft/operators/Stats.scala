@@ -86,7 +86,6 @@ object Stats {
     //    so the join and its shuffle see |orders| rows, not |lineitem|.
     //    PlanShapeSpec asserts the rule-on/off plan difference --
     "x03_eager_agg" -> { (s, dir) =>
-      graft.rules.EagerAggRule.install(s)
       s.conf.set(graft.rules.EagerAggRule.EnabledConf, "true")
       val orders = Tables.df(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"))
@@ -201,7 +200,6 @@ object Stats {
     //    predicate out manually — equality proves the rewrite enforces
     //    exactly the policy, on every scan path, with scan-level cost.
     "x07_rls_policy" -> { (s, dir) =>
-      graft.rules.RlsRule.install(s)
       s.conf.set("spark.graft.rls.customer", "c_mktsegment = 'BUILDING'")
       Tables.df(s, dir, "customer")
         .join(Tables.df(s, dir, "nation"),

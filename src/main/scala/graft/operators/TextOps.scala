@@ -225,7 +225,6 @@ object TextOps {
       // native codegen rolling hash (graft.functions.StrHash) — one
       // primitive loop per document; same value as the oracle's
       // per-character list_reduce
-      graft.functions.PgFunctions.register(s)
       Tables.df(s, dir, "documents")
         .select(
           col("doc_id"),
@@ -460,7 +459,6 @@ object TextOps {
     //    O(vocabulary) — which is why a 100 TB corpus-stats job runs
     //    the sketch first and the census only over the survivors. --
     "t17_heavy_hitters" -> { (s, dir) =>
-      s.udf.register("mg64", udaf(new graft.functions.MisraGries(64)))
       val words = Tables.df(s, dir, "documents")
         .select(explode(expr(toks)).as("w"))
       val sketch = words.agg(expr("mg64(w)").as("sketch"))
@@ -541,7 +539,6 @@ object TextOps {
     //       — immune to float summation order across engines and
     //       partitionings (the q110/money discipline applied to logs) --
     "t18_charlm_score" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       // per-(doc, trigram) pre-aggregate BEFORE any spool or join: the
       // position stream (Σ doc lengths) collapses map-side to at most
       // |docs| × |charset³-observed| rows, so the spool, the census,
@@ -632,7 +629,6 @@ object TextOps {
     //    by doc so state is bounded by document length at any corpus
     //    size --
     "t19_dup_ngram_coverage" -> { (s, dir) =>
-      graft.functions.PgFunctions.register(s)
       // r13: gram ids ride the word_grams31 kernel (the d-family/d14
       // discipline) — the old transform(sequence...) lambda built a
       // ~25-char gram STRING per position inside a CodegenFallback HOF;

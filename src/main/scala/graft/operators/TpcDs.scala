@@ -1627,7 +1627,6 @@ object TpcDs {
             || name == "ds05_channel_sales_returns") {
           // all ROLLUP over a fact-scale input: the eager-agg rollup
           // variant pre-aggregates at the finest key below the Expand
-          graft.rules.EagerAggRule.install(s)
           s.conf.set(graft.rules.EagerAggRule.EnabledConf, "true")
         }
         if (name == "ds04_yoy_growth") {

@@ -17,8 +17,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * full fact-table aggregate into a read of a |groups|-row table — the
   * highest-leverage rewrite a warehouse has.
   *
-  * A custom `Rule[LogicalPlan]` (injected via [[graft.GraftExtensions]]
-  * or `spark.experimental.extraOptimizations`). It runs AFTER the main
+  * A custom `Rule[LogicalPlan]` in the user-provided optimizer batch
+  * (installed by `graft.Tables.configure`). It runs AFTER the main
   * optimizer batches, so it must match the *optimized* shape: projections
   * are collapsed into the Aggregate and columns are pruned. Matching is
   * therefore containment-based —
@@ -313,11 +313,4 @@ object AqumvRule {
       case a: AttributeReference =>
         AttributeReference(a.name, a.dataType, a.nullable)(exprId = ExprId(0))
     }.toString
-
-  /** Idempotently attach the rule to a session's optimizer. */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[AqumvRule])) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ new AqumvRule(spark)
-    }
 }

@@ -1,6 +1,5 @@
 package graft.rules
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -18,7 +17,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * that rewrite as a `Rule[LogicalPlan]`, so a future query written
   * with the natural-but-slow spelling gets bound automatically:
   *
-  *  - runs in `experimental.extraOptimizations` (post-main-batch, the
+  *  - runs in the user-provided optimizer batch (post-main-batch, the
   *    AqumvRule slot), i.e. AFTER pushdown has already inlined the
   *    aliases — the repeats it sees are the real, final ones;
   *  - fires only when an EXPENSIVE derivation kernel (split/sentences/
@@ -117,11 +116,4 @@ object BindExpensiveFilterRule extends Rule[LogicalPlan] with PredicateHelper {
           }
       }
   }
-
-  /** Idempotent per-session install (the AqumvRule pattern). */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(BindExpensiveFilterRule)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ BindExpensiveFilterRule
-    }
 }

@@ -35,7 +35,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *    agg below the join is the difference between shuffling the fact
   *    and shuffling one row per key).
   *
-  * Runs in `experimental.extraOptimizations` (post-main-batch normal
+  * Runs in the user-provided optimizer batch (post-main-batch normal
   * form: projects collapsed into the Aggregate, casts simplified), gated
   * by [[EagerAggRule.EnabledConf]]. Output attribute ids are preserved
   * via aliases so parent operators are untouched.
@@ -299,11 +299,4 @@ class EagerAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
 object EagerAggRule {
   val EnabledConf = "spark.graft.eageragg.enabled"
-
-  /** Idempotently attach the rule to a session's optimizer. */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[EagerAggRule])) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ new EagerAggRule(spark)
-    }
 }

@@ -98,13 +98,6 @@ object RlsRule {
     conjuncts(cond).exists(_.semanticEquals(pred))
   }
 
-  /** Idempotently attach the rule to a session's optimizer. */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[RlsRule])) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ new RlsRule(spark)
-    }
-
   /** Drop every registered policy (runner hygiene between queries). */
   def clearPolicies(spark: SparkSession): Unit =
     spark.conf.getAll.keys.filter(_.startsWith(ConfPrefix)).foreach(spark.conf.unset)

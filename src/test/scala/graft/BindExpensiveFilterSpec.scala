@@ -61,7 +61,6 @@ class BindExpensiveFilterSpec extends AnyFunSuite with TempDirs {
     l.split(java.util.regex.Pattern.quote(k), -1).length - 1
 
   test("the rule binds a twice-inlined tokenize chain to one evaluation") {
-    graft.Tables.configure(spark) // installs the rule (idempotent)
     val df = slowSpelling(corpus)
     val lines = filterLines(df)
     assert(lines.nonEmpty)
@@ -85,7 +84,6 @@ class BindExpensiveFilterSpec extends AnyFunSuite with TempDirs {
   }
 
   test("cheap conjuncts stay outside the binding and keep pushing to the scan") {
-    graft.Tables.configure(spark)
     val df = slowSpelling(corpus.filter(col("doc_id") > 1))
     df.collect()
     val p = df.queryExecution.executedPlan.toString
@@ -96,7 +94,6 @@ class BindExpensiveFilterSpec extends AnyFunSuite with TempDirs {
   }
 
   test("a single-occurrence expensive filter is left untouched") {
-    graft.Tables.configure(spark)
     val df = corpus
       .withColumn("toks", expr(chain))
       .withColumn("tf_a", expr("size(filter(toks, x -> x = 'merge'))"))
@@ -110,7 +107,6 @@ class BindExpensiveFilterSpec extends AnyFunSuite with TempDirs {
   }
 
   test("a subquery conjunct referencing the repeat disables the rewrite (planning safety)") {
-    graft.Tables.configure(spark)
     corpus.createOrReplaceTempView("bind_corpus")
     // the third conjunct carries BOTH the inlined chain (via tf_a) and a
     // scalar subquery — binding would trap the SubqueryExpression inside
@@ -134,8 +130,6 @@ class BindExpensiveFilterSpec extends AnyFunSuite with TempDirs {
   }
 
   test("a repeated CHEAP graft kernel does not tag as a derivation (r17 advice: no blanket)") {
-    graft.Tables.configure(spark)
-    graft.functions.PgFunctions.register(spark)
     // jump_hash is a graft.functions codegen kernel but NOT a text
     // derivation — under the old graft.functions.* blanket this filter
     // would have been wrapped into exists() for no per-row saving
@@ -150,7 +144,6 @@ class BindExpensiveFilterSpec extends AnyFunSuite with TempDirs {
   }
 
   test("two independent repeated chains bind as nested exists and stay correct") {
-    graft.Tables.configure(spark)
     val df = corpus
       .withColumn("toks", expr(chain))
       .withColumn("sents", expr("split(text, 'e')")) // a second, distinct derivation

@@ -10,7 +10,6 @@ class FunctionsSpec extends AnyFunSuite {
   import SparkSuite._
 
   test("StrHash kernel ≡ the HOF rolling-hash formula on the whole corpus") {
-    graft.functions.PgFunctions.register(spark)
     val diff = Tables.df(spark, Sf, "documents").selectExpr(
       "str_hash31(text) AS a",
       """aggregate(filter(split(text, ''), c -> c <> ''),
@@ -23,7 +22,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("VecDot kernels ≡ the HOF formulations on the whole embedding corpus") {
-    graft.functions.PgFunctions.register(spark)
     val emb = Tables.df(spark, Sf, "embeddings").limit(200)
       .select(org.apache.spark.sql.functions.col("embedding").as("e"))
     val diff = emb.selectExpr(
@@ -35,7 +33,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("pair_emit: all ordered pairs under the cap, star pairs above it") {
-    graft.functions.PgFunctions.register(spark)
     import spark.implicits._
     val out = Seq(Seq(1L, 2L, 3L, 4L)).toDF("ds")
       .selectExpr("pair_emit(ds, 10) AS p").selectExpr("explode(p) AS e")
@@ -53,7 +50,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("VecDot kernels: length mismatch / null element → NULL (HOF semantics)") {
-    graft.functions.PgFunctions.register(spark)
     val r = spark.sql(
       """SELECT
            vec_dot(array(CAST(1 AS FLOAT)), array(CAST(1 AS FLOAT), CAST(2 AS FLOAT))) AS mm,
@@ -90,7 +86,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("vec_doti rejects non-int arrays at analysis time (4-byte kernel guard)") {
-    graft.functions.PgFunctions.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT vec_doti(array(1L, 2L), array(1L, 2L))").collect()
     }
@@ -99,7 +94,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("SvecDot: two-pointer sparse dot (svec_dot semantics)") {
-    graft.functions.PgFunctions.register(spark)
     val r = spark.sql(
       """SELECT
            svec_dot(array(struct(1, 2.0D), struct(3, 4.0D), struct(7, 1.0D)),
@@ -193,7 +187,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("runtime bloom filter injects below the probe scan (nodeRuntimeFilter.c)") {
-    Tables.configure(spark)
     val conf = spark.conf
     val saved = Seq(
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
@@ -224,27 +217,6 @@ class FunctionsSpec extends AnyFunSuite {
     val r = spark.sql(
       "SELECT graft_cents(o_totalprice) AS c, CAST(round(o_totalprice * 100) AS BIGINT) AS e FROM orders")
     assert(r.filter(col("c") =!= col("e")).count() == 0)
-  }
-
-  test("GraftExtensions wires functions + optimizer rule into a builder") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions()(ext) // must register without throwing
-    // the extension-built function resolves to the same expression class
-    val e = graft.functions.PgFunctions
-    assert(e.builders.map(_._1).toSet ==
-      Set("pg_to_char", "pg_to_number", "pg_age", "pg_to_char_ts",
-        "pg_to_timestamp", "string_to_array", "generate_series", "pg_format",
-        "vec_dot", "vec_l2sq", "vec_doti", "vec_signbucket",
-        "sorted_intersect_count",
-        "str_hash31", "str_hash131",
-        "svec_dot", "porter_stem", "unicode_normalize", "pair_emit",
-        "pair_emit_sized", "pair_emit_sized_all", "winnow_fps", "crc24",
-        "frame_sums", "frame_energy", "french_stem", "russian_stem",
-        "pgp_sym_encrypt_det",
-        "metaphone", "daitch_mokotoff",
-        "char_grams", "jump_hash", "word_grams31",
-        "pgp_sym_encrypt", "pgp_sym_decrypt", "pgp_sym_decrypt_ok",
-        "aes_cfb128"))
   }
 
   test("q66 tids are dense, zero-based, unique (ctid semantics)") {
@@ -357,7 +329,6 @@ class FunctionsSpec extends AnyFunSuite {
     assert(cfg.queryLex("merging") == Seq("merg")) // falls through to porter
     // corpus side: the generated chain — matched tokens emit their
     // lexeme list UNSTEMMED, unmatched tokens stem; stopwords drop first
-    graft.functions.PgFunctions.register(spark)
     import spark.implicits._
     val lex = Seq((1L, "the fast merging sort")).toDF("doc_id", "text")
       .selectExpr(s"${cfg.lexExpr("split(text, ' ')")} AS lex")
@@ -371,7 +342,6 @@ class FunctionsSpec extends AnyFunSuite {
   test("FTS config registry: integer dictionary chains as data (dict_int)") {
     import graft.operators.FullText.FtsConfig
     import graft.operators.FullText.FtsConfig.IntDict
-    graft.functions.PgFunctions.register(spark)
     import spark.implicits._
     def lexOf(cfg: FtsConfig.TsConfig, text: String): Seq[String] =
       Seq((1L, text)).toDF("doc_id", "text")
@@ -695,7 +665,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("pg_format: positional refs move the shared arg cursor; %0$ rejected (review r8)") {
-    graft.functions.PgFunctions.register(spark)
     // PG: a non-positional specifier uses the next argument AFTER the
     // last consumed — '%3$s %s' over (a,b,c,d) is 'c d', never 'c a'
     val r = spark.sql(
@@ -717,7 +686,6 @@ class FunctionsSpec extends AnyFunSuite {
     // word_grams31's emptyOnShort=true contract, pinned here). A repeated
     // token must yield equal gram ids (the dup census's equality).
     import spark.implicits._
-    graft.functions.PgFunctions.register(spark)
     Seq((1L, "a b c"), (2L, "one two three four five six six six six six six"),
       (3L, "")).toDF("doc_id", "text")
       .createOrReplaceTempView("t19_short_docs")
@@ -753,8 +721,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("pair_emit_sized length-prunes and carries sizes (PPJoin length filter)") {
-    import graft.functions.PgFunctions
-    PgFunctions.register(spark)
     import spark.implicits._
     // sizes 5,5,11: (5,5) keeps (equal), both (5,11) prune (11 > 2·5)
     val rows = Seq((1L, Seq((10L, 5L), (20L, 5L), (30L, 11L))))

@@ -7,10 +7,32 @@ import org.scalatest.funsuite.AnyFunSuite
   * (build-once DDL, before the first query) the session holds no spool,
   * no cached plan, no matview and no RLS policy, and the confs queries
   * flip sit at the bench's values — so no query is planned under
-  * another query's, or a build-once step's, state.
+  * another query's, or a build-once step's, state. And the session's
+  * wiring — functions, UDAFs, optimizer rules — comes from
+  * `Tables.configure` alone, once, in one order.
   */
 class HarnessSpec extends AnyFunSuite {
   import SparkSuite._
+  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.catalyst.FunctionIdentifier
+
+  private val graftRules =
+    Seq("BindExpensiveFilterRule", "RlsRule", "AqumvRule", "EagerAggRule")
+
+  private def ruleNames(s: SparkSession): Seq[String] =
+    s.experimental.extraOptimizations.map(_.getClass.getSimpleName.stripSuffix("$"))
+
+  private def hasFunction(s: SparkSession, name: String): Boolean =
+    s.sessionState.functionRegistry.functionExists(FunctionIdentifier(name))
+
+  /** A session sharing the JVM's SparkContext and catalog but none of
+    * SparkSuite's session state: no function, UDAF or rule installed. */
+  private def unwired(): SparkSession = {
+    val fresh = spark.newSession()
+    assert(fresh.experimental.extraOptimizations.isEmpty)
+    assert(!hasFunction(fresh, "vec_dot") && !hasFunction(fresh, "top3_pairs"))
+    fresh
+  }
 
   private val benchConfs = Map(
     "spark.sql.cbo.enabled" -> "false",
@@ -57,5 +79,61 @@ class HarnessSpec extends AnyFunSuite {
       val live = spark.sparkContext.getPersistentRDDs.size
       assert(live <= 2, s"$live spools live after r07's builder: every round's edges/deg kept")
     } finally Harness.hygiene(spark)
+  }
+
+  test("a wired session resolves every PG function and graft UDAF by name") {
+    assert(functions.PgFunctions.builders.map(_._1).toSet ==
+      Set("pg_to_char", "pg_to_number", "pg_age", "pg_to_char_ts",
+        "pg_to_timestamp", "string_to_array", "generate_series", "pg_format",
+        "vec_dot", "vec_l2sq", "vec_doti", "vec_signbucket",
+        "sorted_intersect_count",
+        "str_hash31", "str_hash131",
+        "svec_dot", "porter_stem", "unicode_normalize", "pair_emit",
+        "pair_emit_sized", "pair_emit_sized_all", "winnow_fps", "crc24",
+        "frame_sums", "frame_energy", "french_stem", "russian_stem",
+        "pgp_sym_encrypt_det",
+        "metaphone", "daitch_mokotoff",
+        "char_grams", "jump_hash", "word_grams31",
+        "pgp_sym_encrypt", "pgp_sym_decrypt", "pgp_sym_decrypt_ok",
+        "aes_cfb128"))
+    val udafs = Seq("top3_pairs", "top5_pairs", "top8_pairs", "mg64",
+      "hyp_rank", "hyp_percent_rank", "hyp_cume_dist")
+    val missing = (functions.PgFunctions.builders.map(_._1) ++ udafs)
+      .filterNot(hasFunction(spark, _))
+    assert(missing.isEmpty, s"not registered in the wired session: $missing")
+    assert(ruleNames(spark) == graftRules)
+  }
+
+  test("every SparkEntry query builds in a fresh, unwired session") {
+    // the plain-session case: a caller that builds its own session (no
+    // Harness.session) and resolves queries through SparkEntry.queries
+    val failed = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, q) =>
+      val fresh = unwired()
+      try { q(fresh, Sf); None }
+      catch { case e: Throwable => Some(s"$name: ${e.getMessage.take(200)}") }
+      finally Harness.hygiene(fresh)
+    }
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
+
+  test("each graft rule is installed once, in one order, whichever query runs first") {
+    val rlsFirst = Seq("x07_rls_policy", "i03_aqumv", "x03_eager_agg")
+    for (order <- Seq(rlsFirst, rlsFirst.reverse, rlsFirst.tail :+ rlsFirst.head)) {
+      val fresh = unwired()
+      try {
+        order.foreach(n => SparkEntry.queries(n)(fresh, Sf).queryExecution.toRdd.count())
+        assert(ruleNames(fresh) == graftRules, s"after ${order.mkString(", ")}")
+      } finally Harness.hygiene(fresh)
+    }
+  }
+
+  test("hygiene leaves the session wiring intact") {
+    val rules = spark.experimental.extraOptimizations
+    try SparkEntry.queries("x07_rls_policy")(spark, Sf).queryExecution.toRdd.count()
+    finally Harness.hygiene(spark)
+    assert(spark.experimental.extraOptimizations == rules)
+    assert(ruleNames(spark) == graftRules)
+    assert(hasFunction(spark, "vec_dot") && hasFunction(spark, "top3_pairs"))
+    assert(spark.conf.get("spark.graft.configured") == "true")
   }
 }

@@ -181,7 +181,6 @@ class InvariantsSpec extends AnyFunSuite {
   }
 
   test("pair_emit ≡ the nested-HOF formulation it replaced, on ragged lists") {
-    graft.functions.PgFunctions.register(spark)
     import spark.implicits._
     // ragged deterministic lists: sizes 2..40 across the cap boundary
     // (size <2 is covered by the FunctionsSpec degenerate-list test; the
@@ -272,7 +271,6 @@ class InvariantsSpec extends AnyFunSuite {
   }
 
   test("s07: Lloyd iterations never increase total inertia; clusters partition the corpus") {
-    graft.functions.PgFunctions.register(spark)
     import operators.Similarity._
     val emb = kmeansQuantized(spark, Sf)
     val cents0 = emb.filter(col("vec_id") < 8)
@@ -705,7 +703,6 @@ class InvariantsSpec extends AnyFunSuite {
     // intervals are 4 apart (≤ W-1) — they must MERGE into one
     // [2, 17] = 16-token removable interval while n_runs stays 2.
     import spark.implicits._
-    graft.functions.PgFunctions.register(spark)
     val s10 = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
     val x6 = "x1 x2 x3 x4 x5 x6"; val s4 = "s1 s2 s3 s4"; val y6 = "y1 y2 y3 y4 y5 y6"
     val docs = Seq(
@@ -786,7 +783,6 @@ class InvariantsSpec extends AnyFunSuite {
     // window fingerprint that is UNIQUE within the base corpus and also
     // present in the delta — the only way a delta can change base
     // coverage (fps already duplicated in base changed nothing)
-    graft.functions.PgFunctions.register(spark)
     val docs = Tables.df(spark, Sf, "documents")
     val wins = operators.Dedup.positionalWindowsOf(docs)
       .withColumn("is_delta", (col("doc_id") % 4 === 0).cast("int"))
@@ -802,7 +798,6 @@ class InvariantsSpec extends AnyFunSuite {
   }
 
   test("i17: two state folds are equivalent to the state built from scratch (IVM condition)") {
-    graft.functions.PgFunctions.register(spark)
     val docs = Tables.df(spark, Sf, "documents")
     val base = docs.filter(col("doc_id") % 4 =!= 0)
     val b1 = docs.filter(col("doc_id") % 8 === 0)
@@ -842,7 +837,6 @@ class InvariantsSpec extends AnyFunSuite {
   }
 
   test("i18 ≡ d14-over-survivors: retraction emits the exact flip set with post-delete rows") {
-    graft.functions.PgFunctions.register(spark)
     val docs = Tables.df(spark, Sf, "documents")
     val survivors = docs.filter(col("doc_id") % 5 =!= 3)
     val out = q("i18_span_dedup_retract").collect().map(r => r.getLong(0) -> r).toMap
@@ -879,7 +873,6 @@ class InvariantsSpec extends AnyFunSuite {
   }
 
   test("i18: retracting the state equals building it from the survivors (IVM condition)") {
-    graft.functions.PgFunctions.register(spark)
     val docs = Tables.df(spark, Sf, "documents")
     val st = operators.Dedup.buildSpanState(docs)
     val deleted = st.ntok.filter(col("doc_id") % 5 === 3).select("doc_id")
@@ -967,7 +960,6 @@ class InvariantsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, count, expr, lit, lower}
     import org.apache.spark.sql.DataFrame
     import spark.implicits._
-    graft.functions.PgFunctions.register(spark)
     def blocked(ents: DataFrame, key: String): DataFrame = {
       val a = ents.select(col("name").as("a"), expr(key).as("blk"))
       val b = ents.select(col("name").as("b"), expr(key).as("blk"))

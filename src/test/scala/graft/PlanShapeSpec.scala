@@ -224,7 +224,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // top-k per query runs as a bounded partial/final aggregate, not a
     // sort-the-corpus window
     assert(!p.contains("Window"), s"expected no WindowExec in s01:\n$p")
-    assert(p.toLowerCase.contains("partial_topk_pairs"),
+    assert(p.toLowerCase.contains("partial_top5_pairs"),
       s"expected map-side partial top-k aggregation in s01:\n$p")
   }
 
@@ -240,7 +240,7 @@ class PlanShapeSpec extends AnyFunSuite {
       && joins.forall(_ == "BroadcastNestedLoopJoin"),
       s"expected the single corpus x queries join, got $joins in:\n$p")
     // and both TopKPairs buffers sit in the same partial aggregation
-    assert("partial_topk3q_pairs".r.findAllIn(p.toLowerCase).size >= 2,
+    assert("partial_top3_pairs".r.findAllIn(p.toLowerCase).size >= 2,
       s"expected both top-3 aggregates in one map-side pass:\n$p")
   }
 
@@ -439,7 +439,6 @@ class PlanShapeSpec extends AnyFunSuite {
       .agg(expr(s"sum($dec)").as("dmv_sum"), expr(s"count($dec)").as("dmv_cnt"))
     val path = Derived.path("test", "mv_decimal_avg")
     mvDef.write.mode("overwrite").parquet(path)
-    graft.rules.AqumvRule.install(spark)
     graft.rules.AqumvRule.register(mvDef, path)
     spark.conf.set(graft.rules.AqumvRule.EnabledConf, "true")
     def query() = graft.Tables.df(spark, Sf, "orders")
@@ -511,7 +510,6 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("x03: eager-agg handles composite join keys (pre-agg groups by both)") {
     import org.apache.spark.sql.functions._
-    graft.rules.EagerAggRule.install(spark)
     spark.conf.set(graft.rules.EagerAggRule.EnabledConf, "true")
     val dims = Tables.df(spark, Sf, "events")
       .select(col("user_id"), col("event_type")).distinct()
@@ -538,7 +536,6 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("x03: eager-agg cost gate — no push when the measure side is the SMALLER one") {
     import org.apache.spark.sql.functions._
-    graft.rules.EagerAggRule.install(spark)
     spark.conf.set(graft.rules.EagerAggRule.EnabledConf, "true")
     // measures come from orders (smaller than lineitem): pushing would
     // pre-aggregate the small side for nothing — ORCA's cost call says no
@@ -554,7 +551,6 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("eager-agg rollup variant: exact for sum/count/min/max/avg, declines DISTINCT") {
     import org.apache.spark.sql.functions._
-    graft.rules.EagerAggRule.install(spark)
     spark.conf.set(graft.rules.EagerAggRule.EnabledConf, "true")
     Tables.register(spark, Sf)
     // all five decomposable aggregate classes over a 3-level rollup

@@ -202,7 +202,6 @@ class ScaleSpec extends AnyFunSuite with TempDirs {
   test("stateful streaming sessionization matches the batch gap logic") {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
     import spark.implicits._
-    Tables.configure(spark)
     val landing = tempDir("graft_sess")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$Sf/events.parquet"),

@@ -18,7 +18,6 @@ class SortedIntersectSpec extends AnyFunSuite {
     val df = spark.createDataFrame(rows.map { case (a, b) =>
       (a.sorted.toSeq, b.sorted.toSeq)
     }).toDF("a", "b")
-    graft.functions.PgFunctions.register(spark)
     df.createOrReplaceTempView("si_probe")
     val bad = spark.sql(
       """SELECT a, b,
@@ -51,7 +50,6 @@ class SortedIntersectSpec extends AnyFunSuite {
   }
 
   test("null inputs are null-safe (expression contract)") {
-    graft.functions.PgFunctions.register(spark)
     val r = spark.sql(
       "SELECT sorted_intersect_count(CAST(NULL AS ARRAY<BIGINT>), array(1L)) AS c").collect()
     assert(r.head.isNullAt(0))

@@ -15,7 +15,6 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
   import StreamingSpec.E
 
   test("AvailableNow streaming hourly rollup matches the batch aggregate") {
-    Tables.configure(spark)
     // stage the event file into a landing directory (file stream sources
     // watch directories, the COPY-from-gpfdist analog)
     val landing = tempDir("graft_stream")
@@ -56,7 +55,6 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     // so corpus stats maintain incrementally (the IVM story for
     // sketches). The guarantee (presence of >N/(k+1) items) must hold
     // on the streamed result exactly as in batch.
-    Tables.configure(spark)
     import spark.implicits._
     val landing = tempDir("graft_mg_stream")
     java.nio.file.Files.copy(
@@ -489,7 +487,6 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     // at-least-once delivery × idempotent per-batchId overwrite =
     // exactly-once: replaying a batch (same batchId) must not change the
     // folded state; a NEW batchId must fold in.
-    Tables.configure(spark)
     val target = tempDir("graft_sink").toString
     val landing = tempDir("graft_sink_in")
     java.nio.file.Files.copy(
@@ -564,7 +561,6 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
   test("scheduler tick drives an AvailableNow streaming refresh (incremental dynamic table)") {
     import graft.streaming.RefreshScheduler
     import org.apache.spark.sql.streaming.Trigger
-    Tables.configure(spark)
     val base = tempDir("graft_dtstream")
     val landing = base.resolve("in"); java.nio.file.Files.createDirectories(landing)
     val ckpt = base.resolve("ckpt").toString
@@ -626,7 +622,6 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     // ingest micro-batch fingerprints ONLY its own docs (O(|Δ|)) and
     // probes the index via foreachBatch. The union of per-batch verdicts
     // must equal the one-shot batch relation — the IVM condition.
-    Tables.configure(spark)
     import graft.operators.Dedup
     val bands = Dedup.minhashBands(spark, Sf).localCheckpoint()
     val isDelta = col("doc_id") % 10 === 7
@@ -682,8 +677,6 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     // re-emitted with its updated row; a fp moving nd 2→3 changes no
     // coverage, so un-re-emitted rows stay final) — and the composed
     // relation must equal the one-shot i17 query exactly.
-    Tables.configure(spark)
-    graft.functions.PgFunctions.register(spark)
     import graft.operators.Dedup
     val docs = Tables.df(spark, Sf, "documents")
     val base = docs.filter(col("doc_id") % 4 =!= 0)
@@ -744,8 +737,6 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     // batch k left alone keeps its coverage until some later batch
     // flips one of ITS fps — which re-emits it. The composed relation
     // must equal the one-shot i18 retraction exactly.
-    Tables.configure(spark)
-    graft.functions.PgFunctions.register(spark)
     import graft.operators.Dedup
     val docs = Tables.df(spark, Sf, "documents")
     val deleted = docs.filter(col("doc_id") % 5 === 3).select("doc_id")
