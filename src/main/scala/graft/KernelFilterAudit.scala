@@ -26,7 +26,7 @@ object KernelFilterAudit {
     * false positives under the bare >=2 rule). */
   val Derivation: Set[String] = Set("split(", "sentences(",
     "regexp_extract_all", "word_grams", "char_grams", "winnow_fps",
-    "metaphone", "porter_stem")
+    "word_census", "word_stats", "metaphone", "porter_stem")
 
   /** The query names KernelFilterSpec covers: the
     * text / dedup / chunking / multimodal / similarity families whose

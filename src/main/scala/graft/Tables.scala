@@ -109,23 +109,23 @@ object Tables {
       "hyp_cume_dist" -> udaf(HypCumeDist))
   }
 
-  /** Per-path memo of the inferred parquet SCHEMA (not the DataFrame).
-    * `spark.read.parquet` re-reads footers for schema inference on every
-    * call (~70 ms/table) — at one `register()` per query that inference
-    * was ~0.7 s of fixed floor inside EVERY timed bench window. Base
-    * testdata is immutable for a process's lifetime, so the inferred
-    * schema is safe to reuse; `spark.read.schema(cached)` then skips
-    * footer inference entirely. Caching the schema instead of the frame
-    * keeps SparkSession references out of the memo altogether: a
-    * StructType is plain data, so stopped sessions (and their analyzed
-    * plans) are collectable, and there is no identity-hash key to be
-    * reused by a later session (the r13 advice finding). Each call hands
-    * the caller a frame bound to ITS session, so parallel test sessions
+  /** Per-path memo of the parquet SCHEMA (not the DataFrame), so
+    * `spark.read.schema(cached)` skips schema inference: base testdata is
+    * immutable for a process's lifetime, and one `register()` per query
+    * would otherwise re-infer every table inside every timed window.
+    * A single-file table's schema comes from its one footer, read in this
+    * JVM ([[footerSchema]]); `spark.read.parquet(path).schema` would
+    * instead run a footer-merge Spark job per table, so the first query of
+    * a cold session ran ten jobs before it planned. Caching the schema
+    * instead of the frame keeps SparkSession references out of the memo
+    * altogether: a StructType is plain data, so stopped sessions (and
+    * their analyzed plans) are collectable, and there is no identity-hash
+    * key to be reused by a later session. Each call hands the caller a
+    * frame bound to ITS session, so parallel test sessions
     * (InvariantsSpec) never share state. The key carries the path's
-    * (mtime, size) fingerprint (one stat — ~µs against the ~70 ms
-    * inference it saves), so a path rewritten with a different schema in
-    * the same JVM re-infers instead of silently misreading through a
-    * stale schema (missing columns as nulls — the r14 advice finding). */
+    * (mtime, size) fingerprint (one stat), so a path rewritten with a
+    * different schema in the same JVM re-infers instead of silently
+    * misreading through a stale schema (missing columns as nulls). */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), org.apache.spark.sql.types.StructType]()
 
@@ -134,9 +134,24 @@ object Tables {
     val path = s"$dir/$name.parquet"
     val f = new java.io.File(path)
     val schema = schemaCache.computeIfAbsent((path, f.lastModified, f.length),
-      k => spark.read.parquet(k._1).schema)
+      k => if (f.isFile) footerSchema(spark, k._1) else spark.read.parquet(k._1).schema)
     val raw = spark.read.schema(schema).parquet(path)
     if (name == "events") withNormalizedTs(raw) else raw
+  }
+
+  /** The schema `spark.read.parquet(file).schema` infers, without a Spark
+    * job: the file's footer converted the way Spark's inference converts
+    * it (`ParquetFileFormat.readSchemaFromFooter` with a converter built
+    * from the session conf, so nanosAsLong and NTZ inference apply). */
+  private[graft] def footerSchema(spark: SparkSession, file: String): org.apache.spark.sql.types.StructType = {
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val p = new org.apache.hadoop.fs.Path(file)
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, spark.sessionState.newHadoopConf()))
+    val meta = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(p, meta),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   /** Normalize an events-shaped frame's `ts` to session-TZ TIMESTAMP

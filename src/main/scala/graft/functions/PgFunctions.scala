@@ -295,6 +295,13 @@ object PgFunctions {
         case other => throw new IllegalArgumentException(
           s"winnow_fps k/w must be int literals, got $other")
       }
-    }
+    },
+    // word_census(text): (tok, cnt) per distinct space-delimited token
+    "word_census" -> { args =>
+      WordCensusExpr(Cast(args(0), org.apache.spark.sql.types.StringType)) },
+    // word_stats(text, 'w1,w2,...'): the census rolled up per document
+    "word_stats" -> { args =>
+      WordStats(Cast(args(0), org.apache.spark.sql.types.StringType),
+        stringLit(args(1), "word_stats stop list")) }
   )
 }

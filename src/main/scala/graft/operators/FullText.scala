@@ -540,16 +540,16 @@ object FullText {
     // -- ts_stat (tsvector_op.c ts_stat_sql → tsvector_update_trigger
     //    aggregation path): vocabulary statistics over the whole corpus —
     //    per lexeme, ndoc (documents containing it) and nentry (total
-    //    occurrences). Spark-first: one explode, then a single hash
-    //    aggregate keyed on (doc, word) feeding a word-level rollup —
-    //    both shuffles map-side combined; the DQA is what PG's ts_stat
-    //    computes by scanning every tsvector --
+    //    occurrences). Like PG, each document's census is built in one
+    //    compiled pass (word_census ≙ to_tsvector: one (word, count)
+    //    row per distinct lexeme), so ndoc is a plain row count and
+    //    nentry a sum in ONE aggregate keyed on word, map-side
+    //    combined — no (doc, word) aggregate, no second shuffle --
     "f06_ts_stat" -> { (s, dir) =>
       Tables.df(s, dir, "documents")
-        .select(col("doc_id"), explode(expr(toks)).as("word"))
-        .groupBy("doc_id", "word").agg(count(lit(1)).as("nentry_doc"))
-        .groupBy("word")
-        .agg(count(lit(1)).as("ndoc"), sum(col("nentry_doc")).as("nentry"))
+        .selectExpr("inline(word_census(lower(text))) AS (word, cnt)")
+        .groupBy(col("word"))
+        .agg(count(lit(1)).as("ndoc"), sum(col("cnt")).as("nentry"))
         .orderBy(col("ndoc").desc, col("nentry").desc, col("word"))
         .limit(25)
     },

@@ -21,6 +21,22 @@ object TextOps {
     * would shift per-engine; plain space split is oracle-stable). */
   private val toks = "filter(split(text, ' '), x -> x <> '')"
 
+  /** Per-document word statistics (`WordCensus.StatsFields`: n,
+    * n_distinct, max_cnt, sum_len, stop_hits over `stops`, slc) beside
+    * the `keep` columns, from one compiled `word_stats` pass per document
+    * over the same tokens as `toks` — no explode, no shuffle. A document
+    * without tokens is dropped, as the relational census (explode, then
+    * group) never yields a row for it. The drop tests the text itself
+    * (n > 0 ⇔ the text holds a character other than U+0020): a filter on
+    * the stats struct would be pushed below the projection with the
+    * kernel substituted in, running it twice per document. */
+  private[graft] def wordStats(docs: DataFrame, keep: String*): DataFrame = {
+    val stops = "the,a,and,of,to"
+    docs.filter(trim(col("text")) =!= "")
+      .select(keep.map(col) :+ expr(s"word_stats(text, '$stops')").as("ws"): _*)
+      .select(keep.map(col) ++ graft.functions.WordCensus.StatsFields.map(f => col(s"ws.$f")): _*)
+  }
+
   /** ONE SQL text shared by the Spark run and the DuckDB oracle (t15):
     * both engines return identical md5 hex, and hex substrings compare
     * lexicographically, so the split is bit-identical cross-engine. */
@@ -430,9 +446,10 @@ object TextOps {
     // as one declarative pass: word-count bounds, mean-word-length
     // bounds, minimum stopword evidence, and a max-token-repetition cap,
     // each surfaced as its own flag plus the conjunctive keep decision.
-    // Same linear explode → (doc, tok) count → doc rollup shape as t11
-    // (no per-row quadratic HOFs); stop_hits counts DISTINCT stopwords
-    // present because level 1 already reduced to one row per (doc, tok).
+    // Every signal comes from one compiled word_stats pass per document
+    // (wordStats: no explode, no shuffle, no per-row quadratic HOFs);
+    // stop_hits counts DISTINCT stopwords present, as a count over
+    // (doc, tok) census rows does.
     // -- t15: deterministic hash-based train/val/test split. The
     //    assignment is a pure function of doc_id (first md5 byte against
     //    fixed hex thresholds: < 0xcd train ≈ 80.1%, < 0xe7 val ≈ 10.2%,
@@ -497,17 +514,8 @@ object TextOps {
     },
 
     "t14_gopher_rules" -> { (s, dir) =>
-      val stops = Seq("the", "a", "and", "of", "to")
-      Tables.df(s, dir, "documents")
-        .select(col("doc_id"), explode(expr(toks)).as("tok"))
-        .groupBy(col("doc_id"), col("tok"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy(col("doc_id"))
-        .agg(
-          sum(col("cnt")).as("n_words"),
-          sum(col("cnt") * length(col("tok"))).as("sum_len"),
-          max(col("cnt")).as("max_cnt"),
-          count(when(col("tok").isin(stops: _*), 1)).as("stop_hits"))
+      wordStats(Tables.df(s, dir, "documents"), "doc_id")
+        .withColumnRenamed("n", "n_words")
         .select(
           col("doc_id"), col("n_words"),
           round(col("sum_len").cast("double") / col("n_words"), 6).as("mean_word_len"),
@@ -671,27 +679,18 @@ object TextOps {
     // -- t21: unigram entropy + type-token ratio — the lexical-diversity
     //    quality gate (CCNet/Gopher-family filters drop low-entropy docs:
     //    keyword-stuffed or template pages have H ≪ random text).
-    //    Shape: explode→(doc,tok) census→per-doc rollup — the t22/t23
-    //    kernel (r12 verdict #1: the earlier per-row
+    //    Shape: one compiled word_stats pass per document (wordStats)
+    //    — the t14/t22 kernel: a hash census per row, linear in doc
+    //    length (r12 verdict #1: the earlier per-row
     //    transform(array_distinct, w -> size(filter(toks, =w))) HOF was
-    //    O(distinct × length) per row AND CodegenFallback; with
-    //    Heaps-law vocabulary growth that kernel is superlinear in doc
-    //    length, while the census is one codegen'd shuffle that scales
-    //    with corpus token count). The Σ c·ln(c) term accumulates in
-    //    integer MICRO-NATS (t18's trick) so the sum is order-free
-    //    under any partitioning — a double Σ would drift by summation
-    //    order; integer addition cannot.
+    //    O(distinct × length) per row AND CodegenFallback), with no
+    //    explode and no shuffle. The Σ c·ln(c) term accumulates in
+    //    integer MICRO-NATS (t18's trick) so the sum is exact and
+    //    order-free — a double Σ would drift by summation order;
+    //    integer addition cannot.
     //    H = ln(n) − Σ c·ln(c) / n, via per-term round(ln(c)·1e6) --
     "t21_word_entropy" -> { (s, dir) =>
-      Tables.df(s, dir, "documents")
-        .select(col("doc_id"), explode(expr(toks)).as("tok"))
-        .groupBy(col("doc_id"), col("tok"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy(col("doc_id"))
-        .agg(
-          sum(col("cnt")).as("n"),
-          count(lit(1)).as("n_distinct"),
-          sum(expr("cnt * CAST(round(ln(cnt) * 1000000.0) AS BIGINT)")).as("slc"))
+      wordStats(Tables.df(s, dir, "documents"), "doc_id")
         .withColumn("entropy", round(
           expr("ln(n) - CAST(slc AS DOUBLE) / (n * 1000000.0)"), 6))
         .select(col("doc_id"), col("n").as("n_tokens"), col("n_distinct"),
@@ -706,24 +705,13 @@ object TextOps {
     //    ordered gates, each applied to the survivors of the previous,
     //    with per-stage entering/dropped/surviving counts. Stages:
     //    wordcount → langid(en) → stopword evidence → repetition →
-    //    unigram entropy. ONE pass: the t14-style two-level word census
-    //    yields every signal (entropy's Σc·ln c rides the census in
-    //    integer micro-nats, t21's order-free trick), cumulative flags
-    //    are plain per-row ANDs, and the funnel is a single aggregate
-    //    row unpivoted by stack() — at 100 TB the report costs one
-    //    census shuffle and moves 5 rows --
+    //    unigram entropy. ONE pass: t14's per-document word_stats
+    //    yields every signal (entropy's Σc·ln c in integer micro-nats,
+    //    t21's exact trick), cumulative flags are plain per-row ANDs,
+    //    and the funnel is a single aggregate row unpivoted by stack()
+    //    — at 100 TB the report is one scan and moves 5 rows --
     "t22_filter_funnel" -> { (s, dir) =>
-      val stops = Seq("the", "a", "and", "of", "to")
-      val flags = Tables.df(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), explode(expr(toks)).as("tok"))
-        .groupBy(col("doc_id"), col("lang"), col("tok"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy(col("doc_id"), col("lang"))
-        .agg(
-          sum(col("cnt")).as("n"),
-          max(col("cnt")).as("max_cnt"),
-          count(when(col("tok").isin(stops: _*), 1)).as("stop_hits"),
-          sum(expr("cnt * CAST(round(ln(cnt) * 1000000.0) AS BIGINT)")).as("slc"))
+      val flags = wordStats(Tables.df(s, dir, "documents"), "lang")
         // entropy gate in INTEGER micro-nats end to end (r8 advice): the
         // raw-double form `ln(n) − slc/(n·1e6) >= 2.0` hinges on libm's
         // ln(n) being bit-identical cross-engine at the boundary; here
@@ -768,18 +756,18 @@ object TextOps {
     //    (t18/t21's discipline): cnt and cw are exact counts, each
     //    ln is one deterministic IEEE double rounded to 1e-6, and the
     //    sum is BIGINT — order-free under any partitioning. Shape: the
-    //    word census spools once; the corpus word-distribution rollup
-    //    is vocab-sized (Heaps' law — broadcastable at any corpus
-    //    scale), joined back broadcast; one per-doc aggregate. Every
-    //    doc word is in the corpus by construction, so no zero-mass
-    //    smoothing is needed --
+    //    (doc, tok, cnt) census is one compiled word_census pass per
+    //    document (no (doc, tok) aggregate), cheap enough to run twice
+    //    rather than spool (one-JVM A/B at sf0.1, 4 cores: min of
+    //    passes 2-10 0.483 s spooled vs 0.465 s unspooled); the corpus
+    //    word-distribution rollup is vocab-sized (Heaps' law —
+    //    broadcastable at any corpus scale), joined back broadcast; one
+    //    per-doc aggregate. Every doc word is in the corpus by
+    //    construction, so no zero-mass smoothing is needed --
     "t23_kl_novelty" -> { (s, dir) =>
       def lnMicro(c: String) = s"CAST(round(ln($c) * 1000000.0) AS BIGINT)"
       val census = Tables.df(s, dir, "documents")
-        .select(col("doc_id"), explode(expr(toks)).as("tok"))
-        .groupBy(col("doc_id"), col("tok"))
-        .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint() // spool: corpus rollup + join both read it
+        .select(col("doc_id"), expr("inline(word_census(text))"))
       val corpus = census.groupBy(col("tok")).agg(sum(col("cnt")).as("cw"))
       val tot = corpus.agg(sum(col("cw")).as("ncorp"))
       census.join(broadcast(corpus), Seq("tok"))

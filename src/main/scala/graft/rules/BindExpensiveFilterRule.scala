@@ -58,6 +58,8 @@ object BindExpensiveFilterRule extends Rule[LogicalPlan] with PredicateHelper {
     case _: graft.functions.WordGrams => true
     case _: graft.functions.CharGrams => true
     case _: graft.functions.WinnowFps => true
+    case _: graft.functions.WordCensusExpr => true
+    case _: graft.functions.WordStats => true
     case _: graft.functions.MetaphoneExpr => true
     case _: graft.functions.PorterStem => true
     case _ => false

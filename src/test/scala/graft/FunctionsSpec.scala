@@ -874,4 +874,83 @@ class FunctionsSpec extends AnyFunSuite {
     val b = "xyz 123 " + excerpt + " 987 qpr"
     assert(kernel(a, 8, 8).intersect(kernel(b, 8, 8)).nonEmpty)
   }
+
+  /** `body` once under whole-stage codegen and once fully interpreted
+    * (no whole-stage codegen, interpreted projections and predicates). */
+  private def bothEvalModes(body: String => Unit): Unit =
+    for ((mode, ws, factory) <- Seq(("codegen", "true", "CODEGEN_ONLY"),
+                                    ("interpreted", "false", "NO_CODEGEN"))) {
+      spark.conf.set("spark.sql.codegen.wholeStage", ws)
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
+      try body(mode)
+      finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
+
+  /** Edge-case documents for the word-census kernel: no tokens (empty,
+    * all-space, null), runs of spaces, leading/trailing spaces, tabs and
+    * newlines (inside tokens), characters outside the BMP, one token
+    * repeated 100 times, repeated stop words. */
+  private def censusDocs = {
+    import spark.implicits._
+    Seq[(Long, String)](
+      1L -> "", 2L -> "     ", 3L -> null,
+      4L -> "a  b   c    a", 5L -> "  lead and trail  ",
+      6L -> "tab\there new\nline tab\there\t", 7L -> "\ud835\udd18ni \ud83d\ude00x \ud83d\ude00x caf\u00e9",
+      8L -> Seq.fill(100)("rep").mkString(" "),
+      9L -> "the cat and the dog of a to the to The THE",
+      10L -> "x", 11L -> " y ")
+      .toDF("doc_id", "text")
+  }
+
+  /** Today's relational census: explode, (doc, tok) count, doc rollup. */
+  private def relationalStats(docs: org.apache.spark.sql.DataFrame) =
+    docs.select(col("doc_id"), explode(expr("filter(split(text, ' '), x -> x <> '')")).as("tok"))
+      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("cnt"))
+      .groupBy(col("doc_id")).agg(
+        sum(col("cnt")).as("n"), count(lit(1)).as("n_distinct"), max(col("cnt")).as("max_cnt"),
+        sum(col("cnt") * length(col("tok"))).as("sum_len"),
+        count(when(col("tok").isin("the", "a", "and", "of", "to"), 1)).as("stop_hits"),
+        sum(expr("cnt * CAST(round(ln(cnt) * 1000000.0) AS BIGINT)")).as("slc"))
+
+  test("word_stats ≡ the relational census rollup; token-free documents stay absent") {
+    bothEvalModes { mode =>
+      val want = relationalStats(censusDocs).collect().toSet
+      val got = operators.TextOps.wordStats(censusDocs, "doc_id").collect().toSet
+      assert(got == want, s"$mode: kernel $got\nrelational $want")
+      assert(got.map(_.getLong(0)) == (4L to 11L).toSet, s"$mode: docs 1-3 have no tokens")
+      val sumLen = got.find(_.getLong(0) == 7L).get.getLong(4)
+      assert(sumLen == 11L, s"$mode: sum_len counts code points, got $sumLen")
+    }
+  }
+
+  test("word_census ≡ the (doc, tok) count; t14/t21/t22 keep only documents with tokens") {
+    bothEvalModes { mode =>
+      val want = censusDocs
+        .select(col("doc_id"), explode(expr("filter(split(text, ' '), x -> x <> '')")).as("tok"))
+        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("cnt"))
+        .collect().toSet
+      val got = censusDocs.select(col("doc_id"), expr("inline(word_census(text))")).collect()
+      assert(got.toSet == want, s"$mode")
+      assert(got.length == got.toSet.size, s"$mode: one element per distinct token")
+      assert(got.filter(_.getLong(0) == 8L).map(r => (r.getString(1), r.getLong(2))).toSeq ==
+        Seq(("rep", 100L)), mode)
+    }
+    val nulls = censusDocs.selectExpr("doc_id", "word_census(text) AS c", "word_stats(text, 'the') AS s")
+      .filter("doc_id <= 3").collect().sortBy(_.getLong(0))
+    assert(nulls.map(r => Option(r.getSeq[Any](1)).map(_.size)).toSeq == Seq(Some(0), Some(0), None))
+    assert(nulls.map(r => Option(r.getStruct(2)).map(_.getLong(0))).toSeq == Seq(Some(0L), Some(0L), None))
+  }
+
+  test("lnμ(c) is bit-identical to CAST(round(ln(c) * 1000000.0) AS BIGINT), c = 1..100000") {
+    bothEvalModes { mode =>
+      val sql = spark.range(1, 100001).selectExpr("id", "CAST(round(ln(id) * 1000000.0) AS BIGINT) AS m")
+        .collect()
+      assert(sql.length == 100000)
+      val bad = sql.filter(r => graft.functions.WordCensus.lnMicro(r.getLong(0)) != r.getLong(1))
+      assert(bad.isEmpty, s"$mode: ${bad.take(5).mkString(", ")}")
+    }
+  }
 }

@@ -90,6 +90,7 @@ class HarnessSpec extends AnyFunSuite {
         "str_hash31", "str_hash131",
         "svec_dot", "porter_stem", "unicode_normalize", "pair_emit",
         "pair_emit_sized", "pair_emit_sized_all", "winnow_fps", "crc24",
+        "word_census", "word_stats",
         "frame_sums", "frame_energy", "french_stem", "russian_stem",
         "pgp_sym_encrypt_det",
         "metaphone", "daitch_mokotoff",
@@ -102,6 +103,14 @@ class HarnessSpec extends AnyFunSuite {
       .filterNot(hasFunction(spark, _))
     assert(missing.isEmpty, s"not registered in the wired session: $missing")
     assert(ruleNames(spark) == graftRules)
+  }
+
+  test("a base table's schema from its footer equals spark.read.parquet's inference") {
+    val data = new java.io.File(Sf).getParent
+    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1"); name <- Tables.names) {
+      val path = s"$data/$sf/$name.parquet"
+      assert(Tables.footerSchema(spark, path) == spark.read.parquet(path).schema, path)
+    }
   }
 
   test("every SparkEntry query builds in a fresh, unwired session") {

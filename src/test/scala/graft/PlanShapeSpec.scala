@@ -1472,10 +1472,35 @@ class PlanShapeSpec extends AnyFunSuite {
       s"median window must partition by user_id:\n$p")
   }
 
-  test("t22: funnel report costs one census — no join, 5 rows out") {
-    val p = plan("t22_filter_funnel")
-    assert(!p.contains("Join"), s"funnel must compute all gates from one census:\n$p")
-    assert(p.contains("partial_"), s"census must combine map-side:\n$p")
+  /** The final plan of a query that must take its word census from one
+    * compiled word_stats pass per document: no token generator, no exchange
+    * keyed on the token, no interpreted HOF lambda. */
+  private def assertWordStatsPass(name: String): String = {
+    val body = plan(name).split("== Initial Plan ==")(0)
+    assert(body.contains("word_stats("), s"$name must take its census from word_stats:\n$body")
+    // the only generator allowed is t22's stack() unpivot of its 5 report rows
+    assert(!body.linesIterator.exists(l => l.contains("Generate") && !l.contains("Generate stack(")),
+      s"$name must not explode tokens:\n$body")
+    assert(!body.contains("hashpartitioning(tok"), s"$name must not shuffle on tokens:\n$body")
+    val lambdas = "lambdafunction".r.findAllIn(body).length
+    assert(lambdas == 0, s"$name must not tokenize or count via HOF lambdas (got $lambdas):\n$body")
+    body
+  }
+
+  test("t22: funnel is one word_stats pass — no join, explode or token shuffle") {
+    val body = assertWordStatsPass("t22_filter_funnel")
+    assert(!body.contains("Join"), s"funnel must compute all gates from one census:\n$body")
+  }
+
+  test("f06: one aggregate on word over word_census — no (doc_id, word) aggregate") {
+    val body = plan("f06_ts_stat").split("== Initial Plan ==")(0)
+    assert(body.contains("word_census("), s"f06 must census each document in one pass:\n$body")
+    val exchanges = "Exchange hashpartitioning\\(".r.findAllIn(body).length
+    val onWord = "Exchange hashpartitioning\\(word".r.findAllIn(body).length
+    assert(exchanges == 1 && onWord == 1,
+      s"f06 must shuffle once, on word (got $exchanges, $onWord on word):\n$body")
+    assert(!body.linesIterator.exists(l => l.contains("HashAggregate") && l.contains("doc_id")),
+      s"f06 must not aggregate per (doc_id, word):\n$body")
   }
 
   test("s11: probe sweep joins the index ONCE; levels expand candidates in place") {
@@ -1880,18 +1905,12 @@ class PlanShapeSpec extends AnyFunSuite {
       s"q145: all exclusion modes must share the window partitioning (got $hashEx):\n$p")
   }
 
-  test("t21: entropy rides the explode census — codegen'd, no HOF lambdas") {
-    val p = plan("t21_word_entropy")
-    assert(!p.contains("Join"), s"t21 should not join:\n$p")
-    // the census shape: map-side partial combine on (doc_id, tok)
-    assert(p.contains("partial_"), s"census must combine map-side:\n$p")
-    // the r12 verdict's kernel class must stay dead: the only HOF lambda
-    // allowed is the O(L) tokenizer filter — the old per-row counting
-    // kernel carried three more (transform/filter/aggregate, all
-    // CodegenFallback, O(distinct × length) together)
-    val body = p.split("== Initial Plan ==")(0)
-    val lambdas = "lambdafunction".r.findAllIn(body).length
-    assert(lambdas <= 1,
-      s"t21 must not count via interpreted HOF lambdas (got $lambdas):\n$p")
+  test("t21: one word_stats pass — no join, explode, token shuffle or HOF lambda") {
+    // the r12 verdict's kernel class must stay dead: the old per-row
+    // counting kernel carried transform/filter/aggregate HOF lambdas
+    // (CodegenFallback, O(distinct × length)); word_stats counts in one
+    // compiled pass per document
+    val body = assertWordStatsPass("t21_word_entropy")
+    assert(!body.contains("Join"), s"t21 should not join:\n$body")
   }
 }
