@@ -59,12 +59,14 @@ object Harness {
     } finally hygiene(spark)
 
   /** Per-query session hygiene (r5 verdict #2/#5): queries spool shared
-    * streams via localCheckpoint/cache; left persisted, the blocks
-    * accumulate across a 190+-query loop until the BlockManager fills
-    * and later families pay eviction + GC — three r5 runs of identical
-    * code measured 126/338/674 s. Drop each query's blocks before the
-    * next one, and reset the session state queries flip on, so no query
-    * runs under another query's state:
+    * streams with an eager `localCheckpoint`, and `Spool.release` frees
+    * only a spool that dies inside its query; the rest stay until here.
+    * Left persisted, the blocks accumulate across a 190+-query loop
+    * until the BlockManager fills and later families pay eviction + GC —
+    * three r5 runs of identical code measured 126/338/674 s. Drop each
+    * query's blocks before the next one (`clearCache` too: no query
+    * caches, but test code may), and reset the session state queries
+    * flip on, so no query runs under another query's state:
     *  - x01 turns CBO + join reorder on, x03 the eager-agg rule;
     *  - Bucketed.ensure pins autoBucketedScan off for b-family reads;
     *    restore the default so non-b queries plan as in a fresh session

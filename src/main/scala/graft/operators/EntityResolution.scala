@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Derived, Tables}
+import graft.{Derived, Spool, Tables}
 
 /** End-to-end entity resolution — the record-linkage pipeline every
   * training-data catalog runs over noisy entity mentions (suppliers,
@@ -77,6 +77,7 @@ object EntityResolution {
         .localCheckpoint()
       // 4. transitive clusters; isolated names keep themselves
       val labels = Recursive.minLabelPropagate(und)
+      Spool.release(und)
       val clustered = ents
         .join(labels.withColumnRenamed("node", "name"), Seq("name"), "left")
         .select(col("name"), col("n_rows"),
@@ -147,6 +148,7 @@ object EntityResolution {
         .localCheckpoint()
       val merged = Recursive.minLabelPropagate(cUnd)
         .withColumnRenamed("node", "lbl0").withColumnRenamed("lbl", "lbl_final")
+      Seq(allNames, cUnd).foreach(Spool.release) // only cUnd's build read them
 
       // final label: name → old label (or self) → merged label (or same)
       val ents = base.unionAll(delta)

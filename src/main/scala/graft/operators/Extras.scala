@@ -310,15 +310,15 @@ object Extras {
 
     // -- shared producer subtree consumed twice (ShareInputScan,
     //    `nodeShareInputScan.c:1-50`: one producer materializes a
-    //    tuplestore, N consumers scan it). Spark analog: persist() the
-    //    aggregate — CacheManager dedups identical plans, so both join
-    //    sides read the same materialized spool and the fact table is
-    //    scanned ONCE (asserted in PlanShapeSpec via InMemoryTableScan) --
+    //    tuplestore, N consumers scan it). Spark analog: spool the
+    //    aggregate with an eager localCheckpoint, so both join sides
+    //    read the same materialized RDD and the fact table is scanned
+    //    ONCE (asserted in PlanShapeSpec via the shared ExistingRDD) --
     "q65_shared_subtree" -> { (s, dir) =>
       val monthly = Tables.df(s, dir, "orders")
         .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
         .agg(expr("CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)").as("cents"))
-        .persist()
+        .localCheckpoint()
       val prev = monthly.select(add_months(col("month"), 1).as("month"),
         col("cents").as("prev_cents"))
       monthly.join(prev, Seq("month"))

@@ -286,34 +286,15 @@ object GpDdl {
       "ddl: expected CREATE EXTERNAL TABLE name (cols...) LOCATION ('uri', ...) FORMAT 'CSV'")
   }
 
-  /** Read through the declared external table: tolerant CSV parse with
-    * sreh reject accounting; a declared SEGMENT REJECT LIMIT that the
-    * data exceeds throws (gpfdist's abort contract). Returns (good
-    * rows, n_good, n_rejected). */
+  /** Read through the declared external table: [[graft.sources.CsvSreh]]'s
+    * tolerant CSV load with sreh reject accounting; a declared SEGMENT
+    * REJECT LIMIT that the data exceeds throws (gpfdist's abort
+    * contract). Returns (good rows, n_good, n_rejected). */
   def readExternal(s: SparkSession, ddl: String): (DataFrame, Long, Long) = {
     val ed = parseExternal(ddl)
-    val paths = ed.locations.map(_.stripPrefix("file://"))
-    val withCorrupt = ed.ddlSchema + ", _corrupt STRING"
-    val raw = s.read.schema(withCorrupt)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt")
-      .option("sep", ed.delimiter)
-      .option("header", ed.header.toString)
-      .csv(paths: _*)
-      .cache() // Spark disallows corrupt-column-only queries on an uncached scan
-    try {
-      val nBad = raw.filter(col("_corrupt").isNotNull).count()
-      val nAll = raw.count()
-      ed.rejectLimit.foreach { case (lim, isPercent) =>
-        val limit = if (isPercent) nAll * lim / 100 else lim
-        if (nBad > limit)
-          throw new graft.sources.CsvSreh.RejectLimitExceeded(nBad, limit)
-      }
-      // Materialize the good rows while the cache is warm, so the frame
-      // we hand back never re-reads through the (about-to-drop) cache.
-      val good = raw.filter(col("_corrupt").isNull).drop("_corrupt").localCheckpoint()
-      (good, nAll - nBad, nBad)
-    } finally raw.unpersist()
+    val r = graft.sources.CsvSreh.load(s, ed.locations.map(_.stripPrefix("file://")),
+      ed.ddlSchema, ed.rejectLimit, ed.delimiter, ed.header)
+    (r.good, r.nGood, r.nBad)
   }
 
   // ---------------------------------------------------------------

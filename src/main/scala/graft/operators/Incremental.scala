@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Derived, Tables}
+import graft.{Derived, Spool, Tables}
 import graft.streaming.{DynamicTable, IvmMatview}
 
 /** Incremental-layer queries: the correctness gate runs the REFRESH
@@ -248,8 +248,10 @@ object Incremental {
       val idx = (0 to 1).foldLeft(baseIdx) { (cur, k) =>
         val delta = emb.filter(col("vec_id") >= 50 && col("vec_id") < 100 &&
           pmod(col("vec_id"), lit(2)) === k)
-        cur.unionByName(assign(delta).withColumn("is_delta", lit(1L)))
+        val next = cur.unionByName(assign(delta).withColumn("is_delta", lit(1L)))
           .localCheckpoint(true)
+        Spool.release(cur)
+        next
       }
       idx.groupBy(col("list_id"))
         .agg(count(lit(1)).as("n_vecs"), sum(col("is_delta")).as("n_delta"))

@@ -61,11 +61,14 @@ object Recursive {
     * its frontier dedup (nodeRecursiveunion.c semantics: the worktable
     * only carries rows not yet seen). */
   private def connectedDedup(s: SparkSession, dir: String): DataFrame = {
-    val edges = Dedup.verifiedEdges(s, dir).localCheckpoint()
+    val verified = Dedup.verifiedEdges(s, dir)
+    val edges = verified.localCheckpoint()
     val und = edges.select(col("a_id").as("u"), col("b_id").as("v"))
       .union(edges.select(col("b_id").as("u"), col("a_id").as("v")))
       .localCheckpoint()
+    Seq(verified, edges).foreach(Spool.release) // the simhash and edge spools
     val labels = minLabelPropagate(und).withColumnRenamed("node", "doc_id")
+    Spool.release(und)
     labels.filter(col("lbl") < col("doc_id"))
       .select(col("doc_id"), col("lbl").as("keeper_id"))
       .orderBy(col("doc_id"))
@@ -465,6 +468,7 @@ object Recursive {
           least(col("lbl"), coalesce(col("ll"), col("lbl"))).as("lbl"),
           col("prev"))
         .localCheckpoint()
+      Spool.release(labels) // the previous round's spool: next no longer reads it
       changed = next.filter(col("lbl") =!= col("prev")).count()
       labels = next.select(col("node"), col("lbl"))
       iter += 1
@@ -495,37 +499,25 @@ object Recursive {
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     // r19 (guide §2.4, r18 verdict #2): the trajectory counts FOLD INTO
     // the degree aggregate. The per-node degree relation the peel needs
     // anyway determines both counts of its edge set exactly:
     //   n_nodes = count(deg rows)        (a node appears iff it has an edge)
     //   n_edges = sum(d) / 2             (every edge contributes 2 endpoints)
-    // so each round's ONE action is a 3-value rollup of deg, and the old
-    // separate counts() pass — a second endpoint union + countDistinct
-    // (its own Expand + exchange) over every round's edge set — is gone:
-    // each edge set's endpoints are now aggregated ONCE, not twice. The
-    // checkpoints are lazy, but under AQE a `localCheckpoint(eager =
-    // false)` over an exchange still runs that exchange's shuffle-map
-    // stage while the DataFrame is being built: the checkpoint asks for
-    // the plan's RDD, and an adaptive plan hands out its RDD only after
-    // its query stages have run. So the frontier's shuffles are jobs of
-    // their own, launched at build time, and the statsOf action reads
-    // the finished shuffle output; it does not materialize the frontier
-    // in the same job.
-    def degOf(e: DataFrame): DataFrame =
-      e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
+    // so they are observed in the job that spools deg, and a round runs
+    // no count action of its own. Returns (deg, n_nodes, n_edges).
+    def degOf(e: DataFrame): (DataFrame, Long, Long) = {
+      val o = org.apache.spark.sql.Observation()
+      val deg = e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("d"))
-        .localCheckpoint(eager = false)
-    // (n_nodes, n_edges) of deg's edge set, one tiny job
-    def statsOf(deg: DataFrame): (Long, Long) = {
-      val r = deg.agg(count(lit(1)).as("nn"), sum(col("d")).as("d2")).head
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1) / 2)
+        .observe(o, count(lit(1)).as("nn"), coalesce(sum(col("d")), lit(0L)).as("d2"))
+        .localCheckpoint()
+      val m = o.get
+      (deg, m("nn").asInstanceOf[Long], m("d2").asInstanceOf[Long] / 2)
     }
-    var deg = degOf(edges)
-    val traj = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
-    var (nn, ne) = statsOf(deg)
-    traj += ((0, nn, ne))
+    var (deg, nn, ne) = degOf(edges)
+    val traj = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]((0, nn, ne))
     var round = 1
     var stable = false
     while (round <= KcoreRounds) {
@@ -536,12 +528,12 @@ object Recursive {
           .join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
           .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
           .select(col("u"), col("v"))
-          .localCheckpoint(eager = false)
-        deg = degOf(edges)
-        val (nn2, ne2) = statsOf(deg)
-        // that action materialized this round's spools, so the previous
-        // round's are dead: release them now, not at the query's end
+          .localCheckpoint()
+        val (deg2, nn2, ne2) = degOf(edges)
+        // this round's spools exist, so the previous round's are dead:
+        // release them now, not at the query's end
         Seq(prevEdges, prevDeg).foreach(Spool.release)
+        deg = deg2
         stable = ne2 == ne
         nn = nn2; ne = ne2
         // once stable, the remaining rounds repeat the fixpoint counts

@@ -1613,6 +1613,38 @@ object TpcDs {
     "ds44_best_worst" -> s"WITH perf AS ($Ds44Perf) $Ds44Outer"
   )
 
+  /** The multiply-referenced CTEs PG materializes and Spark would
+    * inline: each spools once with an eager `localCheckpoint` under its
+    * view name (the q65 ShareInputScan analog; `Harness.hygiene` releases
+    * it after the query) and the outer text reads the view. name →
+    * (view, CTE text, outer text); the oracle keeps the `WITH` text. */
+  private val spooledCtes: Map[String, (String, String, String)] = Map(
+    // 4×-referenced; inlined it costs 8 fact scans
+    "ds04_yoy_growth" -> (("year_total", Ds04YearTotal, Ds04Outer)),
+    // 2×-referenced moment CTE; inlined it costs a second full fact
+    // scan, spooled it is |parts × months| rows
+    "ds39_inventory_cov" -> (("cov39", Ds39Cov, Ds39Outer)),
+    // 2×-referenced weekly pivot; Spark's weekday() is the one token
+    // that differs from the oracle's isodow()-1
+    "ds59_weekly_pivot" -> (("wk59", ds59Wk("weekday(o_orderdate)"), Ds59Outer)),
+    // the 8-relation join runs ONCE; the year-pair self-join probes the spool
+    "ds64_wide_twoyear" -> (("cross_sales64", Ds64CrossSalesSpark, Ds64Outer)),
+    // 4×-referenced dim-carrying year_total
+    "ds11_yoy_customer_dims" -> (("year_total11", Ds11YearTotal, Ds11Outer)),
+    // 4×-referenced union-tagged year_total
+    "ds74_union_yoy" -> (("year_total74", Ds74YearTotal, Ds74Outer)),
+    // one fact scan: the region ranking and the ROLLUP both read the
+    // finest (region, nation) profit aggregate (see Ds70Base — the spec
+    // text computed the 5-relation join twice)
+    "ds70_grouping_rank" -> (("base70", Ds70Base, Ds70Outer)),
+    // six-way-referenced per-item aggregate (two rank windows + four
+    // scalar threshold subqueries)
+    "ds44_best_worst" -> (("perf", Ds44Perf, Ds44Outer)),
+    // 6×-referenced quarterly CTE; inlined it would re-derive the
+    // 4-relation fact aggregate six times
+    "ds31_qoq_chain" -> (("qt31", Ds31QTotal, Ds31Outer))
+  )
+
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     sqlText.map { case (name, text) =>
       name -> ((s: SparkSession, dir: String) => {
@@ -1629,65 +1661,15 @@ object TpcDs {
           // variant pre-aggregates at the finest key below the Expand
           s.conf.set(graft.rules.EagerAggRule.EnabledConf, "true")
         }
-        if (name == "ds04_yoy_growth") {
-          // spool the 4×-referenced CTE once (PG materializes it; Spark
-          // would inline → 8 fact scans). localCheckpoint = the q65
-          // ShareInputScan analog; Bench/Prof unpersist between passes.
-          s.sql(Ds04YearTotal).localCheckpoint()
-            .createOrReplaceTempView("year_total")
-          s.sql(Ds04Outer)
-        } else if (name == "ds39_inventory_cov") {
-          // same spool discipline for the 2×-referenced moment CTE:
-          // inlined it costs a second full fact scan; spooled it is
-          // |parts × months| rows
-          s.sql(Ds39Cov).localCheckpoint().createOrReplaceTempView("cov39")
-          s.sql(Ds39Outer)
-        } else if (name == "ds59_weekly_pivot") {
-          // the 2×-referenced weekly pivot spools once; Spark's weekday()
-          // is the one token that differs from the oracle's isodow()-1
-          s.sql(ds59Wk("weekday(o_orderdate)")).localCheckpoint()
-            .createOrReplaceTempView("wk59")
-          s.sql(Ds59Outer)
-        } else if (name == "ds64_wide_twoyear") {
-          // the 8-relation join runs ONCE; the year-pair self-join
-          // probes the spool
-          s.sql(Ds64CrossSalesSpark).localCheckpoint()
-            .createOrReplaceTempView("cross_sales64")
-          s.sql(Ds64Outer)
-        } else if (name == "ds11_yoy_customer_dims") {
-          // the 4×-referenced dim-carrying year_total spools once
-          // (ds04's ShareInputScan discipline)
-          s.sql(Ds11YearTotal).localCheckpoint()
-            .createOrReplaceTempView("year_total11")
-          s.sql(Ds11Outer)
-        } else if (name == "ds74_union_yoy") {
-          // the 4×-referenced union-tagged year_total spools once
-          s.sql(Ds74YearTotal).localCheckpoint()
-            .createOrReplaceTempView("year_total74")
-          s.sql(Ds74Outer)
-        } else if (name == "ds70_grouping_rank") {
-          // one fact scan: the finest (region, nation) profit aggregate
-          // spools once; the region ranking and the ROLLUP both read it
-          // (see Ds70Base — the spec text computed the 5-relation join
-          // twice)
-          s.sql(Ds70Base).localCheckpoint().createOrReplaceTempView("base70")
-          s.sql(Ds70Outer)
+        if (spooledCtes.contains(name)) {
+          val (view, cte, outer) = spooledCtes(name)
+          s.sql(cte).localCheckpoint().createOrReplaceTempView(view)
+          s.sql(outer)
         } else if (name == "ds65_underperforming") {
           // one pass: the per-nat totals come from a window over the
           // per-(nat, part) aggregate (see Ds65Window — the spec's
           // spool + re-aggregate + join-back collapses)
           s.sql(Ds65Window)
-        } else if (name == "ds44_best_worst") {
-          // the six-way-referenced per-item aggregate spools once
-          // (two rank windows + four scalar threshold subqueries)
-          s.sql(Ds44Perf).localCheckpoint().createOrReplaceTempView("perf")
-          s.sql(Ds44Outer)
-        } else if (name == "ds31_qoq_chain") {
-          // the 6×-referenced quarterly CTE spools once; inlined it
-          // would re-derive the 4-relation fact aggregate six times
-          s.sql(Ds31QTotal).localCheckpoint()
-            .createOrReplaceTempView("qt31")
-          s.sql(Ds31Outer)
         } else if (name == "ds18_avg_rollup_dims") {
           // Spark spells integer division `div`; the oracle text has
           // DuckDB's `//` — the one divergent token (ds59 precedent)

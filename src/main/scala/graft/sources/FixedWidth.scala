@@ -25,8 +25,8 @@ object FixedWidth {
 
   /** Lifetime contract (r18 advice): `good` reads a per-invocation
     * localCheckpoint spool that the per-query Harness.hygiene
-    * unpersists after the invoking query — consume it within that
-    * query; a caller holding `good` past the unpersist would see
+    * releases after the invoking query — consume it within that
+    * query; a caller holding `good` past the release would see
     * checkpoint-block-not-found. */
   final case class ParseResult(good: DataFrame, nGood: Long, nBad: Long)
 
@@ -89,7 +89,7 @@ object FixedWidth {
     // lineage — two full passes per invocation; c15 idle 1.52 s vs a
     // 0.64 s exchange-floor bound). localCheckpoint is a per-invocation
     // spool (the q65 ShareInputScan discipline), not a session cache:
-    // Harness.hygiene unpersists it after every query, so repeated
+    // Harness.hygiene releases it after every query, so repeated
     // invocations (bench passes, the c16 round-trip) each pay exactly
     // one parse. Project to the declared columns + _bad first so the
     // spool holds typed fields, not the raw lines + helper flags.

@@ -81,6 +81,17 @@ class HarnessSpec extends AnyFunSuite {
     } finally Harness.hygiene(spark)
   }
 
+  test("r02 and er01 release each label round's spool once the next round's is built") {
+    for (q <- Seq("r02_connected_dedup", "er01_entity_clusters")) {
+      Harness.hygiene(spark)
+      try {
+        SparkEntry.queries(q)(spark, Sf)
+        val live = spark.sparkContext.getPersistentRDDs.size
+        assert(live <= 2, s"$live spools live after $q's builder: every label round kept")
+      } finally Harness.hygiene(spark)
+    }
+  }
+
   test("a wired session resolves every PG function and graft UDAF by name") {
     assert(functions.PgFunctions.builders.map(_._1).toSet ==
       Set("pg_to_char", "pg_to_number", "pg_age", "pg_to_char_ts",

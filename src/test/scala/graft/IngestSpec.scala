@@ -22,7 +22,7 @@ class IngestSpec extends AnyFunSuite with TempDirs {
   test("good and bad rows are split; counts are exact") {
     val path = writeCsv(Seq(
       "1,100,en", "2,200,de", "3,notanumber,fr", "4,400,en", "5,,en", "6,xx,de"))
-    val r = CsvSreh.load(spark, path, "id BIGINT, n BIGINT, lang STRING", rejectLimit = 3)
+    val r = CsvSreh.load(spark, Seq(path), "id BIGINT, n BIGINT, lang STRING", Some((3L, false)))
     // empty field parses as NULL (valid); non-numeric text is malformed
     assert(r.nGood == 4 && r.nBad == 2)
     assert(r.good.columns.toSeq == Seq("id", "n", "lang"))
@@ -34,15 +34,19 @@ class IngestSpec extends AnyFunSuite with TempDirs {
 
   test("reject limit exceeded aborts the load (SEGMENT REJECT LIMIT)") {
     val path = writeCsv(Seq("1,a,x", "2,b,y", "3,c,z", "4,400,en"))
+    Harness.hygiene(spark)
     val e = intercept[CsvSreh.RejectLimitExceeded] {
-      CsvSreh.load(spark, path, "id BIGINT, n BIGINT, lang STRING", rejectLimit = 2)
+      CsvSreh.load(spark, Seq(path), "id BIGINT, n BIGINT, lang STRING", Some((2L, false)))
     }
     assert(e.nBad == 3 && e.limit == 2)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      "the aborted load left its parse pinned until hygiene")
+    assert(spark.sharedState.cacheManager.isEmpty, "the aborted load left a cached plan")
   }
 
   test("fully clean file loads with zero rejects") {
     val path = writeCsv(Seq("1,10,aa", "2,20,bb"))
-    val r = CsvSreh.load(spark, path, "id BIGINT, n BIGINT, lang STRING", rejectLimit = 0)
+    val r = CsvSreh.load(spark, Seq(path), "id BIGINT, n BIGINT, lang STRING", Some((0L, false)))
     assert(r.nGood == 2 && r.nBad == 0)
   }
 

@@ -293,9 +293,16 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("q65: shared subtree is materialized once (ShareInputScan spool)") {
-    val p = plan("q65_shared_subtree")
-    assert(p.contains("InMemoryTableScan") || p.contains("TableCacheQueryStage"),
-      s"expected both consumers to read the persisted aggregate:\n$p")
+    val df = SparkEntry.queries("q65_shared_subtree")(spark, Sf)
+    val p = finalPlan(df)
+    val spools = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case r: org.apache.spark.sql.execution.RDDScanExec => r.rdd.id
+      }
+    assert(spools.size == 2 && spools.distinct.size == 1,
+      s"expected both join sides to read one spooled aggregate, got RDDs $spools:\n$p")
+    assert("Scan parquet|FileScan parquet".r.findFirstIn(p).isEmpty,
+      s"the final plan must not scan orders:\n$p")
   }
 
   test("q58: custom Aggregator splits partial/final across the shuffle") {
