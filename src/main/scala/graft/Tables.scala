@@ -109,49 +109,79 @@ object Tables {
       "hyp_cume_dist" -> udaf(HypCumeDist))
   }
 
-  /** Per-path memo of the parquet SCHEMA (not the DataFrame), so
-    * `spark.read.schema(cached)` skips schema inference: base testdata is
-    * immutable for a process's lifetime, and one `register()` per query
-    * would otherwise re-infer every table inside every timed window.
-    * A single-file table's schema comes from its one footer, read in this
-    * JVM ([[footerSchema]]); `spark.read.parquet(path).schema` would
-    * instead run a footer-merge Spark job per table, so the first query of
-    * a cold session ran ten jobs before it planned. Caching the schema
-    * instead of the frame keeps SparkSession references out of the memo
-    * altogether: a StructType is plain data, so stopped sessions (and
-    * their analyzed plans) are collectable, and there is no identity-hash
-    * key to be reused by a later session. Each call hands the caller a
-    * frame bound to ITS session, so parallel test sessions
-    * (InvariantsSpec) never share state. The key carries the path's
-    * (mtime, size) fingerprint (one stat), so a path rewritten with a
-    * different schema in the same JVM re-infers instead of silently
-    * misreading through a stale schema (missing columns as nulls). */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), org.apache.spark.sql.types.StructType]()
+  /** Per-path memo of a base table's [[footers]]: its parquet SCHEMA, so
+    * `spark.read.schema(cached)` skips schema inference (a footer-merge
+    * Spark job per table, ten jobs before a cold session's first query
+    * planned), and its row count ([[rows]]). Base testdata is immutable
+    * for a process's lifetime, and one `register()` per query would
+    * otherwise re-infer every table inside every timed window. Caching
+    * plain data instead of the frame keeps SparkSession references out
+    * of the memo: stopped sessions (and their analyzed plans) are
+    * collectable, no identity-hash key is reused by a later session, and
+    * each call hands the caller a frame bound to ITS session, so parallel
+    * test sessions (InvariantsSpec) never share state. The key carries
+    * the path's (mtime, size) fingerprint (one stat), so a path rewritten
+    * in the same JVM (a directory table is rewritten as a new directory)
+    * is read again instead of served through a stale schema (missing
+    * columns as nulls) or count. */
+  private val footerCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Footers]()
+
+  private[graft] case class Footers(schema: org.apache.spark.sql.types.StructType, rows: Long)
+
+  private def cached(spark: SparkSession, dir: String, name: String): Footers = {
+    val path = s"$dir/$name.parquet"
+    val f = new java.io.File(path)
+    footerCache.computeIfAbsent((path, f.lastModified, f.length), k => footers(spark, k._1))
+  }
 
   def df(spark: SparkSession, dir: String, name: String): DataFrame = {
     configure(spark)
-    val path = s"$dir/$name.parquet"
-    val f = new java.io.File(path)
-    val schema = schemaCache.computeIfAbsent((path, f.lastModified, f.length),
-      k => if (f.isFile) footerSchema(spark, k._1) else spark.read.parquet(k._1).schema)
-    val raw = spark.read.schema(schema).parquet(path)
+    val raw = spark.read.schema(cached(spark, dir, name).schema).parquet(s"$dir/$name.parquet")
     if (name == "events") withNormalizedTs(raw) else raw
   }
 
-  /** The schema `spark.read.parquet(file).schema` infers, without a Spark
-    * job: the file's footer converted the way Spark's inference converts
-    * it (`ParquetFileFormat.readSchemaFromFooter` with a converter built
-    * from the session conf, so nanosAsLong and NTZ inference apply). */
-  private[graft] def footerSchema(spark: SparkSession, file: String): org.apache.spark.sql.types.StructType = {
+  /** `count(*)` of a base table, summed from its footers in this JVM:
+    * exact, and no Spark job. */
+  def rows(spark: SparkSession, dir: String, name: String): Long =
+    cached(spark, dir, name).rows
+
+  /** A parquet table's footers, read in this JVM without a Spark job:
+    * the schema `spark.read.parquet(path).schema` infers and the row
+    * count `count(*)` returns. `path` is one file or a flat directory of
+    * part files (what `df.write.parquet` leaves; hidden and `_`-prefixed
+    * names such as `_SUCCESS` and `.crc` files are not data). The schema
+    * is the first data file's in path order, the file Spark's
+    * non-merging inference reads, converted the way that inference
+    * converts it (`ParquetFileFormat.readSchemaFromFooter` with a
+    * converter built from the session conf, so nanosAsLong and NTZ
+    * inference apply); the count sums every file's row groups. */
+  private[graft] def footers(spark: SparkSession, path: String): Footers = {
     import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
-    val p = new org.apache.hadoop.fs.Path(file)
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, spark.sessionState.newHadoopConf()))
-    val meta = try reader.getFooter finally reader.close()
-    ParquetFileFormat.readSchemaFromFooter(new Footer(p, meta),
+    val root = new java.io.File(path)
+    val files =
+      if (root.isFile) Seq(root)
+      else {
+        val all = Option(root.listFiles).map(_.toSeq).getOrElse(
+          throw new java.io.FileNotFoundException(s"no parquet table at $path"))
+        require(!all.exists(_.isDirectory), s"$path: partitioned table directories are not read from footers")
+        all.filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+          .sortBy(_.toURI.toString)
+      }
+    require(files.nonEmpty, s"$path: no parquet data files")
+    val conf = spark.sessionState.newHadoopConf()
+    val metas = files.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f.toURI)
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      try (p, reader.getFooter) finally reader.close()
+    }
+    val (first, meta) = metas.head
+    val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(first, meta),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    Footers(schema, metas.map { case (_, m) =>
+      m.getBlocks.stream().mapToLong(_.getRowCount).sum }.sum)
   }
 
   /** Normalize an events-shaped frame's `ts` to session-TZ TIMESTAMP

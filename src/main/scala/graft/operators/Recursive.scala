@@ -1,16 +1,26 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Spool, Tables}
 
 /** Recursive CTE (`WITH RECURSIVE`, reference nodeRecursiveunion.c /
-  * nodeWorktablescan.c). Three renditions, each where it fits:
+  * nodeWorktablescan.c). Four renditions, each where it fits:
   *
-  *  - r03, r08, r09, r10 and cb01 run Spark 4's NATIVE `WITH RECURSIVE`
-  *    (the UnionLoop operator, SPARK-24497) on SQL text shared verbatim
-  *    with the DuckDB oracle, like the reference's RecursiveUnion +
-  *    WorkTableScan pair.
+  *  - r03 and r08 run Spark 4's NATIVE `WITH RECURSIVE` (the UnionLoop
+  *    operator, SPARK-24497) on SQL text shared verbatim with the DuckDB
+  *    oracle, like the reference's RecursiveUnion + WorkTableScan pair.
+  *    r03 is the plan-asserted demonstrator; r08's cycle guard reads the
+  *    work table's path, so its rows do not follow from the row alone.
+  *    UnionLoop pays a map job, a count job and a planning pass per level.
+  *  - r09, r10 and cb01 join the work table on a computable parent of
+  *    the child key (⌊k/10⌋, ⌊p/32⌋), so a row's ancestry follows from
+  *    its key alone: [[ancestorUnfold]] walks each key's chain in its
+  *    row and keeps the rows whose ancestors all exist with ONE
+  *    membership join, with no loop over levels. Their oracle texts
+  *    keep `WITH RECURSIVE`, and InvariantsSpec runs those texts on
+  *    Spark as the reference.
   *  - r01 and r05 are ONE lazy plan with no driver step between levels:
   *    r01's recursion is linear (a row's successor depends on that row
   *    alone), so it unfolds per row; r05 has a fixed round count, so its
@@ -43,6 +53,108 @@ object Recursive {
             'val', CASE WHEN $last % 2 = 0 THEN $last div 2 ELSE $last * 3 + 1 END)))
           ELSE acc END)""")))
   }
+
+  /** Bounded recursion over a computable parent key, as one ancestor
+    * unfold: the rows of
+    * {{{
+    *   WITH RECURSIVE t AS (
+    *     SELECT rel.* FROM rel WHERE root(key)
+    *     UNION ALL
+    *     SELECT c.* FROM rel c JOIN t ON parent(c.key) = t.key
+    *     WHERE step(c.key) AND t.level < maxLevel)
+    * }}}
+    * duplicates included, as UNION ALL derives them, each with `chain`:
+    * the BIGINT keys from the row's own up to its root's, so
+    * `size(chain) - 1` is the row's level and every work-table column is
+    * a fold over `chain` and the row's own columns.
+    *
+    * A key's parent is a function of the key, so each distinct row of
+    * `rel` walks its key's ancestor chain inside the row (up to maxLevel
+    * parents, while `step` holds) and yields one unit per level at which
+    * the walk stands on a root. A unit is a row of the recursion iff
+    * every ancestor on its chain is a key of `rel`: one membership join
+    * against the key multiplicities checks that. UNION ALL derives a
+    * unit once per copy of the row times the product of its ancestors'
+    * multiplicities, so duplicates are counted, never joined (`product`
+    * is a DOUBLE, exact below 2^53 copies: more could not be emitted).
+    * No loop over levels is left, so neither jobs nor plan grow with the
+    * depth.
+    *
+    * maxLevel is the recursion's own level bound (cb01's `t.level < 3`)
+    * or exceeds every chain the key type allows (r09, r10). NULL keys,
+    * and keys whose walk reaches no root, yield no rows, as in the
+    * recursion. */
+  private[graft] def ancestorUnfold(rel: DataFrame, key: String, parent: Column => Column,
+      root: Column => Column, step: Column => Column, maxLevel: Int): DataFrame = {
+    val cols = rel.columns.map(col)
+    val rows = rel.filter(col(key).isNotNull).groupBy(cols: _*).agg(count(lit(1)).as("_d"))
+    val keys = rows.groupBy(col(key).cast("bigint").as("_a")).agg(sum(col("_d")).as("_m"))
+    val walk = aggregate(sequence(lit(1), lit(maxLevel)), array(col(key).cast("bigint")), { (acc, _) =>
+      val last = element_at(acc, -1)
+      when(step(last), concat(acc, array(parent(last).cast("bigint")))).otherwise(acc)
+    })
+    rows.select(col("*"), walk.as("_walk"))
+      .select(col("*"), explode(filter(sequence(lit(0), size(col("_walk")) - 1),
+        l => root(element_at(col("_walk"), l + 1)))).as("_l"))
+      .select(cols :+ col("_d") :+ slice(col("_walk"), lit(1), col("_l") + 1).as("chain"): _*)
+      .select(col("*"), explode_outer(slice(col("chain"), lit(2), size(col("chain")) - 1)).as("_a"))
+      .join(keys, Seq("_a"), "left")
+      .groupBy(cols :+ col("_d") :+ col("chain"): _*)
+      .agg(count(col("_m")).as("_found"), product(col("_m")).as("_w"))
+      .filter(col("_found") === size(col("chain")) - 1)
+      .select(cols :+ col("chain") :+ explode(sequence(lit(1L),
+        col("_d") * coalesce(col("_w"), lit(1.0)).cast("bigint"))).as("_dup"): _*)
+      .drop("_dup")
+  }
+
+  /** r03's 10-ary custkey tree: parent = ⌊k/10⌋, the same double
+    * division and floor as the SQL texts' `CAST(floor(k / 10) AS BIGINT)`. */
+  private def custkeyParent(k: Column): Column = floor(k / 10)
+
+  /** r09 (see r09Sql) on [[ancestorUnfold]]: depth and the DEPTH FIRST
+    * path are folds over the chain. A key has at most 19 digits, so 18
+    * parents bound every walk. */
+  private[graft] def searchOrder(customer: DataFrame): DataFrame =
+    ancestorUnfold(customer.select(col("c_custkey")), "c_custkey", custkeyParent,
+        root = _.between(1, 9), step = _ >= 10, maxLevel = 18)
+      .select(col("c_custkey").cast("bigint").as("keyid"), size(col("chain")).as("depth"),
+        concat_ws("/", transform(reverse(col("chain")),
+          k => lpad(k.cast("string"), 6, "0"))).as("seq_dfs"))
+      .select(col("*"),
+        row_number().over(Window.orderBy(col("seq_dfs"))).cast("bigint").as("ord_dfs"),
+        row_number().over(Window.orderBy(col("depth"), col("keyid"))).cast("bigint").as("ord_bfs"))
+      .orderBy(col("keyid"))
+
+  /** cb01 (see cb01Sql) on [[ancestorUnfold]]: the level bound is the
+    * text's `t.level < 3`; parent_keyid, level and branch are folds over
+    * the chain. */
+  private[graft] def connectBy(customer: DataFrame): DataFrame =
+    ancestorUnfold(customer.select(col("c_custkey")), "c_custkey", custkeyParent,
+        root = _ === 1, step = _ => lit(true), maxLevel = 3)
+      .select(col("c_custkey").cast("bigint").as("keyid"),
+        when(size(col("chain")) > 1, element_at(col("chain"), 2)).as("parent_keyid"),
+        (size(col("chain")) - 1).as("level"),
+        concat_ws("~", reverse(col("chain")).cast("array<string>")).as("branch"))
+      .orderBy(col("keyid"))
+
+  /** r10 (see r10Sql) on [[ancestorUnfold]]: the root and the path-product
+    * multiplier are folds over the chain. ⌊p/32⌋ divides by the DECIMAL
+    * 32.0 as the text does; a BIGINT key has at most 13 base-32 digits,
+    * so 13 parents bound every walk. */
+  private[graft] def bomRollup(part: DataFrame): DataFrame =
+    ancestorUnfold(
+        part.select(col("p_partkey"), round(col("p_retailprice") * 100).cast("bigint").as("cents")),
+        "p_partkey", k => floor(k / lit(BigDecimal("32.0"))),
+        root = _ <= 31, step = _ > 31, maxLevel = 13)
+      .select(element_at(col("chain"), -1).as("root"),
+        aggregate(slice(col("chain"), lit(1), size(col("chain")) - 1), lit(1L),
+          (m, k) => m * (k % 3 + 1)).as("mult"),
+        (size(col("chain")) - 1).as("depth"), col("cents"))
+      .groupBy(col("root"))
+      .agg(count(lit(1)).as("n_parts"), max(col("depth")).as("max_depth"),
+        max(col("mult")).cast("bigint").as("max_mult"),
+        sum(col("mult") * col("cents")).cast("bigint").as("total_cents"))
+      .orderBy(col("root"))
 
   /** Max label-propagation rounds for r02 (components converge in
     * O(diameter) rounds; the fixpoint check usually stops far earlier). */
@@ -99,8 +211,8 @@ object Recursive {
     * carries the PATH-PRODUCT multiplier (quantity folding down the
     * tree — the part a BOM query can't express without recursion) in
     * exact BIGINTs (≤ 3^depth), costs in cents; the rollup is one
-    * group-by over the explosion. O(depth) worktable joins, each an
-    * equi-join on the derived parent key — never a path self-join. */
+    * group-by over the explosion. The oracle text; Spark runs it as
+    * [[bomRollup]], the multiplier a fold over each part's chain. */
   private val r10Sql = """
       WITH RECURSIVE parts AS (
         SELECT p_partkey,
@@ -162,11 +274,10 @@ object Recursive {
     * connectby: keyid/parent_keyid/level/branch rows from a start key
     * with a depth bound). The parent relation is the derived 10-ary
     * custkey tree (parent = ⌊k/10⌋, r03's edge rule); start_with = 1,
-    * max_depth = 3, '~' branch delimiter — tablefunc's default. Runs as
-    * ONE recursive-SQL text shared verbatim with the oracle; each level
-    * is one distributed join of the worktable against the key relation,
-    * and the branch string accumulates on the worktable rows (O(depth)
-    * joins, never a path self-join). */
+    * max_depth = 3, '~' branch delimiter — tablefunc's default. The
+    * branch string accumulates on the worktable rows. The oracle text;
+    * Spark runs it as [[connectBy]], the branch a fold over each key's
+    * chain. */
   private val cb01Sql = """
       WITH RECURSIVE tree(keyid, parent_keyid, level, branch) AS (
         SELECT CAST(c_custkey AS BIGINT), CAST(NULL AS BIGINT), 0,
@@ -223,10 +334,10 @@ object Recursive {
     *    scale; the ordinal projection below is display sugar).
     *  - BREADTH FIRST's column is ROW(depth, keyid) — already plain
     *    columns here.
-    * ONE SQL text on Spark's UnionLoop and DuckDB; the two row_number
-    * windows are unpartitioned by the CLAUSE's semantics (a SEARCH
-    * column defines a total order) and run over the CTE result, not a
-    * base table. */
+    * The two row_number windows are unpartitioned by the CLAUSE's
+    * semantics (a SEARCH column defines a total order) and run over the
+    * CTE result, not a base table. The oracle text; Spark runs it as
+    * [[searchOrder]], the path a fold over each key's chain. */
   private val r09Sql = """
       WITH RECURSIVE tree(keyid, depth, seq_dfs) AS (
         SELECT CAST(c_custkey AS BIGINT), 1,
@@ -248,17 +359,11 @@ object Recursive {
       Tables.register(s, dir)
       s.sql(r08Sql)
     },
-    "r09_search_order" -> { (s, dir) =>
-      Tables.register(s, dir)
-      s.sql(r09Sql)
-    },
+    "r09_search_order" -> { (s, dir) => searchOrder(Tables.df(s, dir, "customer")) },
     "r01_recursive_collatz" -> { (s, dir) =>
       collatzChain(s, dir).orderBy(col("seed"), col("step"))
     },
-    "cb01_connectby" -> { (s, dir) =>
-      Tables.register(s, dir)
-      s.sql(cb01Sql)
-    },
+    "cb01_connectby" -> { (s, dir) => connectBy(Tables.df(s, dir, "customer")) },
 
     // -- r05: bounded-hop min-cost path (Bellman-Ford relaxation) over
     //    r04's deterministic multigraph with weight (src+dst)%17+1 —
@@ -270,17 +375,27 @@ object Recursive {
     //    tractable there because out-degree is 3; the relaxation form
     //    scales: state is |reached nodes|, not |paths| --
     "r05_shortest_path" -> { (s, dir) =>
+      // one scan and explode: the self-loop is each node's 4th target.
+      // dst is never NULL; spelled out, the filter Catalyst infers only
+      // in rounds whose output feeds a join makes every round's edge
+      // plan the same, so rounds 2 and 3 share one broadcast build
+      // (round 1 reads only the source's row, its filter pushed down)
       val docs = Tables.df(s, dir, "documents").select(col("doc_id"))
-      val edges = pagerankEdges(docs)
-        .select(col("src"), col("dst"), expr("(src + dst) % 17 + 1").as("w"))
-        .unionAll(docs.select(col("doc_id"), col("doc_id"), lit(0L)))
+      val edges = docs.select(col("doc_id").as("src"), posexplode(concat(
+          pagerankTargets(Tables.rows(s, dir, "documents")), array(col("doc_id")))).as(Seq("i", "dst")))
+        .select(col("src"), col("dst"),
+          when(col("i") === 3, 0L).otherwise(expr("(src + dst) % 17 + 1")).as("w"))
+        .filter(col("dst").isNotNull)
       var dist = docs.filter(col("doc_id") === 0)
         .select(col("doc_id"), lit(0L).as("d"))
       for (_ <- 1 to 3)
         dist = edges.join(dist, col("src") === col("doc_id"))
           .groupBy(col("dst").as("doc_id")).agg(min(col("d") + col("w")).as("d"))
+      // 3 hops at out-degree 3 reach at most 1 + 3 + 9 + 27 = 40 nodes,
+      // whatever the corpus size: one partition sorts them with no
+      // range-sampling job and no range shuffle
       dist.select(col("doc_id"), col("d").as("dist_cost"))
-        .orderBy(col("doc_id"))
+        .coalesce(1).orderBy(col("doc_id"))
     },
     "r02_connected_dedup" -> { (s, dir) => connectedDedup(s, dir) },
     // native SQL-surface recursive CTE (UnionLoop): the worktable walks
@@ -290,12 +405,8 @@ object Recursive {
       s.sql(r03Sql)
     },
 
-    // -- r10: BOM explosion + cost rollup on native recursive SQL
-    //    (shared text; see r10Sql) --
-    "r10_bom_rollup" -> { (s, dir) =>
-      Tables.register(s, dir)
-      s.sql(r10Sql)
-    },
+    // -- r10: BOM explosion + cost rollup (see r10Sql) --
+    "r10_bom_rollup" -> { (s, dir) => bomRollup(Tables.df(s, dir, "part")) },
 
     // -- r06: triangle counting over the part co-purchase graph — the
     //    third classic distributed-graph kernel next to r02 (components)
@@ -413,7 +524,7 @@ object Recursive {
     //    relationally. --
     "r04_pagerank" -> { (s, dir) =>
       val docs = Tables.df(s, dir, "documents").select(col("doc_id"))
-      val edges = pagerankEdges(docs)
+      val edges = pagerankEdges(docs, Tables.rows(s, dir, "documents"))
       var ranks = docs.select(col("doc_id"), lit(1000000L).as("r"))
       for (_ <- 1 to 3) ranks = pagerankStep(docs, edges, ranks)
       ranks.groupBy(expr("r div 100000").as("rank_bucket"))
@@ -495,7 +606,7 @@ object Recursive {
   private def kcoreQuery(s: SparkSession, dir: String): DataFrame = {
     val K = 5
     val docs = Tables.df(s, dir, "documents").select(col("doc_id"))
-    var edges = pagerankEdges(docs)
+    var edges = pagerankEdges(docs, Tables.rows(s, dir, "documents"))
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
@@ -548,25 +659,25 @@ object Recursive {
       .orderBy(col("round"))
   }
 
-  /** r04's deterministic out-degree-3 multigraph: targets (2u+1)%N,
-    * (3u+2)%N, (u+7)%N. N enters as a broadcast scalar, not a driver
-    * action, so the edge relation is a pure function of the node set. */
-  private[graft] def pagerankEdges(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val nRow = docs.agg(count(lit(1)).as("nn"))
-    docs.crossJoin(broadcast(nRow))
-      .select(col("doc_id").as("src"), explode(array(
-        expr("(2 * doc_id + 1) % nn"),
-        expr("(3 * doc_id + 2) % nn"),
-        expr("(doc_id + 7) % nn"))).as("dst"))
-  }
+  /** r04's deterministic out-degree-3 multigraph over `n` nodes: targets
+    * (2u+1)%n, (3u+2)%n, (u+7)%n. `n` is the node count as a constant
+    * (`Tables.rows`, read from the footers), so the edge relation is a
+    * pure function of the node set with no count job, broadcast or
+    * cross join in the plan. */
+  private[graft] def pagerankEdges(docs: DataFrame, n: Long): DataFrame =
+    docs.select(col("doc_id").as("src"), explode(pagerankTargets(n)).as("dst"))
+
+  /** The out-edge targets of node `doc_id` in r04's graph. */
+  private def pagerankTargets(n: Long): Column = array(
+    expr(s"(2 * doc_id + 1) % ${n}L"),
+    expr(s"(3 * doc_id + 2) % ${n}L"),
+    expr(s"(doc_id + 7) % ${n}L"))
 
   /** One damped power iteration in exact positive-BIGINT micro-rank
     * units: contrib = Σ_in rank div 3, rank' = 150000 + (85·contrib)
     * div 100. One src-join + one dst partial-sum shuffle (Pregel shape);
     * the left join restores in-degree-0 nodes. */
-  private[graft] def pagerankStep(docs: org.apache.spark.sql.DataFrame,
-      edges: org.apache.spark.sql.DataFrame,
-      ranks: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private[graft] def pagerankStep(docs: DataFrame, edges: DataFrame, ranks: DataFrame): DataFrame = {
     val contrib = edges.join(ranks, col("src") === col("doc_id"))
       .groupBy(col("dst"))
       .agg(sum(expr("r div 3")).as("contrib"))
@@ -649,8 +760,8 @@ object Recursive {
         min(doc_id) AS min_doc, max(r) AS max_rank
       FROM r3 GROUP BY rank_bucket ORDER BY rank_bucket""",
 
-    // identical text to the Spark run — both engines execute the same
-    // recursive union
+    // r03 (and r08 above) run the same text on Spark; r09, r10, cb01 run as
+    // ancestor unfolds, and InvariantsSpec runs their texts on Spark too
     "r03_recursive_sql" -> r03Sql,
     "r10_bom_rollup" -> r10Sql,
     "r09_search_order" -> r09Sql,

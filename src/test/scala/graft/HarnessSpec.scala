@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * wiring — functions, UDAFs, optimizer rules — comes from
   * `Tables.configure` alone, once, in one order.
   */
-class HarnessSpec extends AnyFunSuite {
+class HarnessSpec extends AnyFunSuite with TempDirs {
   import SparkSuite._
   import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -120,8 +120,26 @@ class HarnessSpec extends AnyFunSuite {
     val data = new java.io.File(Sf).getParent
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1"); name <- Tables.names) {
       val path = s"$data/$sf/$name.parquet"
-      assert(Tables.footerSchema(spark, path) == spark.read.parquet(path).schema, path)
+      assert(Tables.footers(spark, path).schema == spark.read.parquet(path).schema, path)
     }
+  }
+
+  test("footer schema and row count equal Spark's for single-file and directory tables") {
+    for (name <- Tables.names) {
+      val path = s"$Sf/$name.parquet"
+      assert(Tables.rows(spark, Sf, name) == spark.read.parquet(path).count(), path)
+    }
+    // a directory of part files as df.write.parquet leaves it (_SUCCESS,
+    // .crc files beside the data); a file source reads every column as
+    // nullable, whatever the footer says, so compare what Tables.df reads
+    val base = tempDir("graft_footers").toString
+    val dir = s"$base/t.parquet"
+    spark.range(0, 1000, 1, 3).selectExpr("id", "CAST(id % 7 AS INT) AS m", "CAST(id AS STRING) AS s")
+      .repartition(4).write.parquet(dir)
+    val files = new java.io.File(dir).list.toSeq
+    assert(files.contains("_SUCCESS") && files.count(_.endsWith(".parquet")) >= 2, files)
+    assert(Tables.df(spark, base, "t").schema == spark.read.parquet(dir).schema)
+    assert(Tables.rows(spark, base, "t") == 1000L && spark.read.parquet(dir).count() == 1000L)
   }
 
   test("every SparkEntry query builds in a fresh, unwired session") {

@@ -501,7 +501,7 @@ class InvariantsSpec extends AnyFunSuite {
 
   private def shortestPathByRounds(): DataFrame = {
     val docs = Tables.df(spark, Sf, "documents").select(col("doc_id"))
-    val edges = operators.Recursive.pagerankEdges(docs)
+    val edges = operators.Recursive.pagerankEdges(docs, Tables.rows(spark, Sf, "documents"))
       .withColumn("w", expr("(src + dst) % 17 + 1"))
       .localCheckpoint()
     var dist = docs.filter(col("doc_id") === 0).select(col("doc_id"), lit(0L).as("d"))
@@ -523,6 +523,72 @@ class InvariantsSpec extends AnyFunSuite {
       assert(r05.size > 13, "3 hops from node 0 must reach past its 2-hop ball")
       assert(r05 == shortestPathByRounds().orderBy("doc_id").collect().toSeq)
     } finally Harness.hygiene(spark)
+  }
+
+  // Reference rendition of r09, cb01 and r10: their oracle texts, still
+  // WITH RECURSIVE, run on Spark's own recursion (UnionLoop)
+  private val ancestorUnfolds = Seq("r09_search_order", "cb01_connectby", "r10_bom_rollup")
+
+  test("r09, cb01 and r10 equal their WITH RECURSIVE texts on Spark row for row at sf0.01") {
+    val sf = new java.io.File(Sf).getParent + "/sf0.01"
+    val s = spark.newSession()
+    try {
+      Tables.register(s, sf)
+      for (n <- ancestorUnfolds) {
+        val got = SparkEntry.queries(n)(s, sf).collect().toSeq
+        assert(got.size >= 32, s"$n: ${got.size} rows")
+        assert(got == s.sql(operators.Recursive.oracle(n)).collect().toSeq, n)
+      }
+    } finally Harness.hygiene(s)
+  }
+
+  test("the ancestor unfold keeps UNION ALL semantics on adversarial keys") {
+    import org.apache.spark.sql.{Row, SparkSession}
+    import org.apache.spark.sql.types._
+    import operators.Recursive._
+    // customer: root 1 and child 12 twice (123's rows come out 4 times),
+    // 45 missing under 4 (456 and 4567 drop), keys 0, negative and NULL,
+    // 1999 under a missing 199, 12345 below cb01's level bound, and a
+    // chain to 8 digits, where lpad(…, 6, '0') truncates seq_dfs
+    val custKeys = Seq[java.lang.Long](1L, 1L, 2L, 12L, 12L, 15L, 123L, 150L, 1234L, 1999L,
+      12345L, 123456L, 1234567L, 12345678L, 4L, 456L, 4567L, 0L, -1L, -15L, null)
+    // part: root 1 twice, 40 twice with different prices under it, 1300
+    // and 41600 below 40, 1331 under a missing 41, roots 0 and negative,
+    // a 7-digit chain (5000000 → 156250 → 4882 → 152 → 4), and NULL
+    val partKeys = Seq[java.lang.Long](1L, 1L, 0L, -3L, 31L, 32L, 40L, 40L, 1300L, 41600L, 1331L,
+      4L, 152L, 4882L, 156250L, 5000000L, 5000001L, null)
+    val cust = StructType(Seq(StructField("c_custkey", LongType)))
+    val part = StructType(Seq(StructField("p_partkey", LongType), StructField("p_retailprice", DoubleType)))
+    val partRows = partKeys.zipWithIndex.map { case (k, i) => Row(k, 900.25 + (if (k == 40L) i else 0)) }
+    def table(s: SparkSession, schema: StructType, rows: Seq[Row]) =
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val native = spark.newSession()
+    table(native, cust, custKeys.map(Row(_))).createOrReplaceTempView("customer")
+    table(native, part, partRows).createOrReplaceTempView("part")
+    def bag(df: DataFrame, cols: String*) = df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+    def same(name: String, unfold: DataFrame, cols: Seq[String]*): Seq[Row] = {
+      val ref = native.sql(oracle(name))
+      cols.foreach(c => assert(bag(unfold, c: _*) == bag(ref, c: _*), s"$name on ${c.mkString(",")}"))
+      unfold.collect().toSeq
+    }
+    try {
+      val customer = table(spark, cust, custKeys.map(Row(_)))
+      // duplicated rows tie in both windows, so each ordinal is compared
+      // with the row it numbers, not with the other ordinal
+      val r09 = same("r09_search_order", searchOrder(customer),
+        Seq("keyid", "depth", "seq_dfs", "ord_dfs"), Seq("keyid", "depth", "seq_dfs", "ord_bfs"))
+      assert(r09.count(_.getLong(0) == 123L) == 4)
+      assert(r09.map(_.getLong(0)).toSet == Set(1L, 2L, 4L, 12L, 15L, 123L, 150L, 1234L,
+        12345L, 123456L, 1234567L, 12345678L))
+      assert(r09.exists(r => r.getLong(0) == 12345678L && r.getString(2).endsWith("/123456/123456/123456")))
+      val cb01 = same("cb01_connectby", connectBy(customer),
+        Seq("keyid", "parent_keyid", "level", "branch"))
+      assert(cb01.map(_.getLong(0)).distinct.sorted == Seq(1L, 12L, 15L, 123L, 150L, 1234L))
+      val r10 = same("r10_bom_rollup", bomRollup(table(spark, part, partRows)),
+        Seq("root", "n_parts", "max_depth", "max_mult", "total_cents"))
+      assert(r10.map(_.getLong(0)) == Seq(-3L, 0L, 1L, 4L, 31L))
+      assert(r10.exists(r => r.getLong(0) == 4L && r.getInt(2) == 4), "the 7-digit chain must unfold")
+    } finally Harness.hygiene(native)
   }
 
   test("r01 and r05 build without a Spark job and run without a spool") {

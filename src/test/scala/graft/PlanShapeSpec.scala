@@ -152,6 +152,39 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("UnionLoop"), s"expected UnionLoop in r03:\n$p")
   }
 
+  test("r09, cb01 and r10 run without UnionLoop, in fewer jobs than their native texts") {
+    // their oracle texts keep WITH RECURSIVE; Spark runs them as
+    // ancestor unfolds, one plan whatever the tree's depth
+    import org.apache.spark.graft.ListenerBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sf = new java.io.File(Sf).getParent + "/sf0.01"
+    val s = spark.newSession()
+    def run(df: => org.apache.spark.sql.DataFrame): (Int, String) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val counter = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      ListenerBus.drain(s.sparkContext)
+      s.sparkContext.addSparkListener(counter)
+      val p = try { val d = df; d.collect(); d.queryExecution.executedPlan.toString }
+        finally { ListenerBus.drain(s.sparkContext); s.sparkContext.removeSparkListener(counter) }
+      (jobs.get, p)
+    }
+    try {
+      Tables.register(s, sf)
+      for (name <- Seq("r09_search_order", "cb01_connectby", "r10_bom_rollup")) {
+        def native = s.sql(operators.Recursive.oracle(name))
+        def unfold = SparkEntry.queries(name)(s, sf)
+        run(native); run(unfold) // first reads of a table may list its files
+        val (nativeJobs, nativePlan) = run(native)
+        val (jobs, p) = run(unfold)
+        assert(nativePlan.contains("UnionLoop"), s"the native $name text must run as UnionLoop:\n$nativePlan")
+        assert(!p.contains("UnionLoop"), s"$name runs a UnionLoop:\n$p")
+        assert(jobs < nativeJobs, s"$name ran $jobs jobs, its native text $nativeJobs")
+      }
+    } finally Harness.hygiene(s)
+  }
+
   test("g02: anchor k-NN ranks via the bounded aggregate, not a window") {
     val p = plan("g02_anchor_knn")
     // a row_number window over corpus×anchors rows sorts everything in

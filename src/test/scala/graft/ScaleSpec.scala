@@ -246,7 +246,7 @@ class ScaleSpec extends AnyFunSuite with TempDirs {
     // orders of magnitude.
     import operators.Recursive._
     val docs = spark.range(100000L).select(col("id").as("doc_id"))
-    val edges = pagerankEdges(docs)
+    val edges = pagerankEdges(docs, 100000L)
     var ranks = docs.select(col("doc_id"), lit(1000000L).as("r"))
     for (_ <- 1 to 2) ranks = pagerankStep(docs, edges, ranks)
     val row = ranks.agg(sum("r"), count(lit(1))).head
