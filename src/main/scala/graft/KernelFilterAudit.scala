@@ -25,7 +25,8 @@ object KernelFilterAudit {
     * duplicated (r16 advice: f11/f12's transform=2-with-one-split were
     * false positives under the bare >=2 rule). */
   val Derivation: Set[String] = Set("split(", "sentences(",
-    "regexp_extract_all", "word_grams", "char_grams", "winnow_fps",
+    "regexp_extract_all", "word_grams", "char_grams", "frame_sums",
+    "frame_energy", "winnow_fps",
     "word_census", "word_stats", "metaphone", "porter_stem")
 
   /** The query names KernelFilterSpec covers: the

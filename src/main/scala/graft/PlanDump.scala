@@ -57,6 +57,9 @@ object PlanDump {
         case _: ExpandExec => Some("expand")
         case _: GenerateExec => Some("generate")
         case _: UnionExec => Some("union")
+        // native WITH RECURSIVE: the loop plans its anchor and recursion
+        // per level at run time, so only the loop itself is counted
+        case _: UnionLoopExec => Some("union_loop")
         case _: LocalTableScanExec | _: RDDScanExec => Some("scan.local")
         case s: FileSourceScanExec =>
           Some(if (s.dataFilters.nonEmpty) "scan.file.filtered" else "scan.file")

@@ -1,16 +1,19 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-frame integer features over fixed-width codepoint frames — the
-  * LINEAR kernel behind m06 (VAD energy) and m08 (scene cuts). One
-  * compiled pass per document: materialize the codepoint array once
-  * (the Winnow.fps discipline), then fold each complete `width`-long
-  * frame into one Long. Replaces the HOF form
+  * LINEAR kernel behind m06 (VAD energy), m08 (scene cuts) and m09
+  * (scene-aware sampling). Its array feeds `voiced_runs` or
+  * `scene_census` ([[FrameSegments]]) in the same projection, so the
+  * frames never become rows. One compiled pass per document:
+  * materialize the codepoint array once (the Winnow.fps discipline),
+  * then fold each complete `width`-long frame into one Long. Replaces
+  * the HOF form
   * `aggregate(sequence(1,16), …, ascii(substring(text, f*16+i, 1)))`,
   * whose per-frame `substring` is an O(position) UTF8String walk —
   * O(L²/width) per document, a scale-killer on long documents even
@@ -78,7 +81,8 @@ object CharGrams {
 }
 
 object FrameFeats {
-  /** One O(L) pass: codepoint array once, then a strided integer fold. */
+  /** One O(L) pass: codepoint array once, then a strided integer fold
+    * into an unboxed array. */
   def compute(s: UTF8String, width: Int, energy: Boolean): ArrayData = {
     val cps = s.toString.codePoints().toArray
     val n = cps.length / width
@@ -96,6 +100,6 @@ object FrameFeats {
       out(f) = acc
       f += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 }

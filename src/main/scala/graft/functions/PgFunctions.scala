@@ -46,6 +46,21 @@ object PgFunctions {
       s"$what must be a string literal, got $other")
   }
 
+  private def longLit(e: Expression, what: String): Long = e match {
+    case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v.toLong
+    case Literal(v: Long, org.apache.spark.sql.types.LongType) => v
+    case other => throw new IllegalArgumentException(
+      s"$what must be an int or bigint literal, got $other")
+  }
+
+  /** A frame-feature array: `array<bigint>` without null elements, as
+    * frame_sums and frame_energy return it. */
+  private def frameArray(e: Expression, what: String): Expression = e.dataType match {
+    case org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, false) => e
+    case other => throw new IllegalArgumentException(
+      s"$what takes an array<bigint> without nulls, got $other")
+  }
+
   private def pgFormat(args: Seq[Expression]): Expression = {
     import org.apache.spark.sql.types.StringType
     val fmt = args.headOption match {
@@ -277,6 +292,13 @@ object PgFunctions {
           s"frame_energy width must be an int literal, got $other")
       }
     },
+    // scene_census(frame_sums(text, w), threshold) / voiced_runs(
+    // frame_energy(text, w), threshold): one segmentation walk over a
+    // document's frame features (m08/m09 and m06 kernels)
+    "scene_census" -> { args =>
+      SceneCensus(frameArray(args(0), "scene_census"), longLit(args(1), "scene_census threshold")) },
+    "voiced_runs" -> { args =>
+      VoicedRuns(frameArray(args(0), "voiced_runs"), longLit(args(1), "voiced_runs threshold")) },
     // char_grams(text, n): all character n-grams in one O(L·n) pass
     "char_grams" -> { args =>
       args(1) match {

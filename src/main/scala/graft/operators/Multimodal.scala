@@ -202,36 +202,21 @@ object Multimodal {
     //    transcription (a real VAD would score decoded PCM here; the
     //    payload is the documents' bytes, the m-family stub contract).
     //    Per 16-byte frame: energy = Σ(b − 32)² in EXACT BIGINTs
-    //    (space bytes ≡ silence, letters ≡ signal); voiced frames then
-    //    merge into maximal runs via gaps-and-islands (frame_no −
-    //    row_number, the e02 idiom) — never a per-row array-of-frames
-    //    loop. Scale shape: one explode (O(bytes/16) rows), the island
-    //    window partitions by doc_id, two partial-agg rollups. --
+    //    (space bytes ≡ silence, letters ≡ signal); voiced frames merge
+    //    into maximal runs. A run never spans two documents, so the
+    //    segmentation is one compiled walk over the row's frame_energy
+    //    array (voiced_runs): exploding the frames into rows to run the
+    //    gaps-and-islands window (f − row_number, the e02 idiom) and
+    //    join the run rollup back to the frame census cost a sort, three
+    //    aggregates and a join per query for what one pass over an
+    //    in-row array computes. Scale shape: one scan and one
+    //    projection per document, O(L) each --
     "m06_energy_segments" -> { (s, dir) =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("doc_id")).orderBy(col("f"))
-      // frame_energy materializes the codepoint array ONCE per doc and
-      // folds each 16-char frame in a single O(L) compiled pass (the
-      // HOF ascii(substring(text, f*16+i, 1)) form re-walks the string
-      // per frame — O(L²/16) per doc, quadratic in document length)
-      val frames = Tables.df(s, dir, "documents")
-        .filter(col("doc_id") < 200 && col("n_chars") >= 32)
-        .select(col("doc_id"),
-          posexplode(expr("frame_energy(text, 16)")).as(Seq("f", "energy")))
-        .select(col("doc_id"), col("f"), (col("energy") >= 40000L).as("voiced"))
-      val tot = frames.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_frames"),
-          sum(col("voiced").cast("long")).as("n_voiced"))
-      val segs = frames.filter(col("voiced"))
-        .withColumn("island", col("f") - row_number().over(w))
-        .groupBy(col("doc_id"), col("island"))
-        .agg(count(lit(1)).as("len"))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_segments"), max(col("len")).as("max_seg_len"))
-      tot.join(segs, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_frames"), col("n_voiced"),
-          coalesce(col("n_segments"), lit(0L)).as("n_segments"),
-          coalesce(col("max_seg_len"), lit(0L)).as("max_seg_len"))
+      frameCensus(Tables.df(s, dir, "documents")
+          .filter(col("doc_id") < 200 && col("n_chars") >= 32),
+        "voiced_runs(frame_energy(text, 16), 40000)")
+        .select(col("doc_id"), col("c.n_frames"), col("c.n_voiced"),
+          col("c.n_runs").as("n_segments"), col("c.max_run").as("max_seg_len"))
         .orderBy(col("doc_id"))
     },
 
@@ -279,39 +264,21 @@ object Multimodal {
     //    content-detector shape). Per 16-byte frame: an exact integer
     //    feature (byte sum — the stub contract; a real decoder puts a
     //    frame histogram here, same plan); a CUT where the absolute
-    //    frame-to-frame delta exceeds the threshold (lag over the
-    //    doc-partitioned frame window); scenes = prefix-sum of cut
-    //    flags (e02's gaps-and-islands discipline, never a per-row
-    //    array loop). Output per video: frame/scene census + longest
-    //    scene + mean scene length. Scale shape: one explode
-    //    (O(bytes/16) rows), both windows partition by doc_id, one
-    //    partial-agg rollup — no shuffle beyond the doc key. The frame
-    //    feature is frame_sums: the codepoint array is materialized
-    //    ONCE per doc (O(L) total; the prior ascii(substring(…)) HOF
-    //    re-walked the string per frame — O(L²/16) per doc, quadratic
-    //    in document length, the r9 verdict's named scale hazard) --
+    //    frame-to-frame delta exceeds the threshold. Output per video:
+    //    frame/scene census + longest scene + mean scene length. A scene
+    //    never spans two documents, so the segmentation is one compiled
+    //    walk over the row's frame_sums array (scene_census), not an
+    //    explode into frame rows with a lag window, a running-sum window
+    //    and two aggregates. Scale shape: one scan and one projection
+    //    per document. The frame feature is frame_sums: the codepoint
+    //    array is materialized ONCE per doc (O(L) total; the prior
+    //    ascii(substring(…)) HOF re-walked the string per frame —
+    //    O(L²/16) per doc, quadratic in document length, the r9
+    //    verdict's named scale hazard) --
     "m08_scene_cuts" -> { (s, dir) =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("doc_id")).orderBy(col("f"))
-      val frames = Tables.df(s, dir, "documents")
-        .filter(col("n_chars") >= 64)
-        .select(col("doc_id"),
-          posexplode(expr("frame_sums(text, 16)")).as(Seq("f", "feat")))
-      frames
-        .withColumn("prev", lag(col("feat"), 1).over(w))
-        .withColumn("cut",
-          when(col("prev").isNull || abs(col("feat") - col("prev")) > 40, 1L)
-            .otherwise(0L))
-        .withColumn("scene", sum(col("cut")).over(
-          w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-        .groupBy(col("doc_id"), col("scene"))
-        .agg(count(lit(1)).as("scene_len"))
-        .groupBy(col("doc_id"))
-        .agg(sum(col("scene_len")).as("n_frames"),
-          count(lit(1)).as("n_scenes"),
-          max(col("scene_len")).as("longest_scene"),
-          round(sum(col("scene_len")).cast("double") / count(lit(1)), 6)
-            .as("mean_scene_len"))
+      sceneCensus(s, dir)
+        .select(col("doc_id"), col("c.n_frames"), col("c.n_scenes"), col("c.longest_scene"),
+          round(col("c.n_frames").cast("double") / col("c.n_scenes"), 6).as("mean_scene_len"))
         .orderBy(col("doc_id"))
     },
 
@@ -320,42 +287,34 @@ object Multimodal {
     //    representative frames PER SCENE, first/middle/last, instead of
     //    a fixed stride that oversamples long static shots and misses
     //    short ones). Picks per scene: start, start + (len−1) div 2,
-    //    start + len − 1, deduplicated for short scenes. The pick set
-    //    joins BACK to the frame relation on (doc_id, f) — an equi-join,
-    //    so the full frame payloads never travel through the windows —
-    //    and the sampled-feature sum is exact BIGINT arithmetic both
-    //    engines replay. Same scale shape as m08: doc-partitioned
-    //    windows, one explode, one equi-join --
+    //    start + len − 1, deduplicated for short scenes; the
+    //    sampled-feature sum is exact BIGINT arithmetic both engines
+    //    replay. The picks are frames of the same row's array, so
+    //    scene_census counts and sums them in its one walk: no frame
+    //    spool, window, pick explode or join back to the frames. Same
+    //    scale shape as m08 --
     "m09_scene_frame_sample" -> { (s, dir) =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("doc_id")).orderBy(col("f"))
-      val frames = Tables.df(s, dir, "documents")
-        .filter(col("n_chars") >= 64)
-        .select(col("doc_id"),
-          posexplode(expr("frame_sums(text, 16)")).as(Seq("f", "feat")))
-        .localCheckpoint(true) // spooled: windows AND the pick join read it
-      val scenes = frames
-        .withColumn("prev", lag(col("feat"), 1).over(w))
-        .withColumn("cut",
-          when(col("prev").isNull || abs(col("feat") - col("prev")) > 40, 1L)
-            .otherwise(0L))
-        .withColumn("scene", sum(col("cut")).over(
-          w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-        .groupBy(col("doc_id"), col("scene"))
-        .agg(min(col("f")).as("s0"), count(lit(1)).as("len"))
-      val picks = scenes.select(col("doc_id"), col("scene"),
-          explode(expr(
-            """array_distinct(array(CAST(s0 AS INT),
-                 CAST(s0 + (len - 1) div 2 AS INT),
-                 CAST(s0 + len - 1 AS INT)))""")).as("f"))
-      picks.join(frames, Seq("doc_id", "f"))
-        .groupBy(col("doc_id"))
-        .agg(countDistinct(col("scene")).as("n_scenes"),
-          count(lit(1)).as("n_sampled"),
-          sum(col("feat")).as("sampled_feat_sum"))
+      sceneCensus(s, dir)
+        .select(col("doc_id"), col("c.n_scenes"), col("c.n_picks").as("n_sampled"),
+          col("c.pick_sum").as("sampled_feat_sum"))
         .orderBy(col("doc_id"))
     }
   )
+
+  /** `doc_id` and the frame-segmentation struct `c` of `census` per
+    * document with at least one complete 16-char frame: the relational
+    * form (frames exploded, then grouped) never yields a row for a
+    * document without one. The drop tests the text itself, since a
+    * filter on the struct would be pushed below the projection with the
+    * kernel substituted in, running it twice per document. */
+  private[graft] def frameCensus(docs: DataFrame, census: String): DataFrame =
+    docs.filter(length(col("text")) >= 16)
+      .select(col("doc_id"), expr(census).as("c"))
+
+  /** m08/m09's scenes: cut where |Δ frame sum| > 40, documents ≥ 64 chars. */
+  private def sceneCensus(s: SparkSession, dir: String): DataFrame =
+    frameCensus(Tables.df(s, dir, "documents").filter(col("n_chars") >= 64),
+      "scene_census(frame_sums(text, 16), 40)")
 
   def oracle: Map[String, String] = Map(
     "m07_clipscore_filter" -> """

@@ -57,6 +57,7 @@ object BindExpensiveFilterRule extends Rule[LogicalPlan] with PredicateHelper {
     case _: RegExpExtractAll => true
     case _: graft.functions.WordGrams => true
     case _: graft.functions.CharGrams => true
+    case _: graft.functions.FrameFeats => true
     case _: graft.functions.WinnowFps => true
     case _: graft.functions.WordCensusExpr => true
     case _: graft.functions.WordStats => true

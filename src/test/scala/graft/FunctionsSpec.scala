@@ -833,6 +833,79 @@ class FunctionsSpec extends AnyFunSuite {
     assert(drift == 0, "documents n_chars != length(text): m06/m08 frame basis drifted")
   }
 
+  /** Frame-feature arrays for the segmentation kernels: empty, one frame,
+    * all equal (one scene), every step over 40 (one pick per scene),
+    * scenes of length 2 and 3 (de-duplicated picks), steps of exactly
+    * ±40 (no cut), energy exactly 40000, all and none voiced, then
+    * random walks whose steps straddle both thresholds. */
+  private def frameArrays: Seq[Array[Long]] = {
+    val rnd = new scala.util.Random(11)
+    Seq(Array.empty[Long], Array(7L), Array.fill(9)(500L), Array(0L, 100L, 0L, 100L, 0L),
+      Array(0L, 10L, 200L, 210L, 400L, 400L, 400L, 900L), Array(0L, 40L, 0L, -40L, 41L),
+      Array(40000L, 39999L, 40000L, 40000L, 0L, 40001L), Array.fill(6)(90000L),
+      Array.fill(6)(39999L)) ++
+      (1 to 300).map { _ =>
+        val a = new Array[Long](rnd.nextInt(40))
+        for (i <- a.indices)
+          a(i) = (if (i == 0) 40000L else a(i - 1)) + rnd.nextInt(101) - 50 + rnd.nextInt(3) * 20000 - 20000
+        a
+      }
+  }
+
+  /** Scenes and picks the way the relational form derives them: cut
+    * flags, scene ids as their running sum, picks as a set per scene. */
+  private def bruteScenes(a: Array[Long]): Seq[Long] = {
+    val cuts = a.indices.map(i => if (i == 0 || math.abs(a(i) - a(i - 1)) > 40) 1 else 0)
+    val scenes = a.indices.groupBy(i => cuts.take(i + 1).sum).values.toSeq
+    val picks = scenes.flatMap { fs =>
+      Set(fs.min, fs.min + (fs.size - 1) / 2, fs.min + fs.size - 1) }
+    Seq(a.length.toLong, scenes.size.toLong, (0 +: scenes.map(_.size)).max.toLong,
+      picks.size.toLong, picks.map(a(_)).sum)
+  }
+
+  /** Voiced runs as gaps and islands: voiced frame index minus its rank. */
+  private def bruteRuns(a: Array[Long]): Seq[Long] = {
+    val voiced = a.indices.filter(a(_) >= 40000L)
+    val runs = voiced.zipWithIndex.groupBy { case (f, rank) => f - rank }.values.map(_.size)
+    Seq(a.length.toLong, voiced.size.toLong, runs.size.toLong, (0 +: runs.toSeq).max.toLong)
+  }
+
+  test("scene_census and voiced_runs ≡ brute-force folds over frame arrays") {
+    import graft.functions.FrameSegments
+    def fields(r: org.apache.spark.sql.catalyst.InternalRow, n: Int) = (0 until n).map(r.getLong)
+    def arr(a: Array[Long]) = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(a)
+    for (a <- frameArrays) {
+      assert(fields(FrameSegments.scenes(arr(a), 40L), 5) == bruteScenes(a), a.mkString(","))
+      assert(fields(FrameSegments.runs(arr(a), 40000L), 4) == bruteRuns(a), a.mkString(","))
+    }
+    val Seq(empty, one, equal, jumpy, short, edge, energy, loud, quiet) = frameArrays.take(9)
+    assert(bruteScenes(empty) == Seq(0L, 0L, 0L, 0L, 0L) && bruteRuns(empty) == Seq(0L, 0L, 0L, 0L))
+    assert(bruteScenes(one) == Seq(1L, 1L, 1L, 1L, 7L))
+    assert(bruteScenes(equal) == Seq(9L, 1L, 9L, 3L, 1500L))
+    assert(bruteScenes(jumpy) == Seq(5L, 5L, 1L, 5L, 200L))
+    // scenes [0,10] [200,210] [400,400,400] [900]: 2 + 2 + 3 + 1 picks
+    assert(bruteScenes(short) == Seq(8L, 4L, 3L, 8L, 2520L))
+    assert(bruteScenes(edge) == Seq(5L, 2L, 4L, 4L, 41L), "a step of exactly 40 is no cut")
+    assert(bruteRuns(energy) == Seq(6L, 4L, 3L, 2L), "energy exactly 40000 is voiced")
+    assert(bruteRuns(loud) == Seq(6L, 6L, 1L, 6L) && bruteRuns(quiet) == Seq(6L, 0L, 0L, 0L))
+    // the registered expressions, compiled and interpreted, NULL in, NULL out
+    import spark.implicits._
+    val df = (frameArrays.map(Option(_)) :+ None).zipWithIndex.map(_.swap).toDF("i", "a")
+    bothEvalModes { mode =>
+      val got = df.selectExpr("i", "scene_census(a, 40) AS s", "voiced_runs(a, 40000) AS v")
+        .collect().sortBy(_.getInt(0))
+      val want = frameArrays.map(a => (Some(bruteScenes(a)), Some(bruteRuns(a)))) :+ ((None, None))
+      def longs(r: org.apache.spark.sql.Row) = Option(r).map(x => (0 until x.size).map(x.getLong))
+      assert(got.map(r => (longs(r.getStruct(1)), longs(r.getStruct(2)))).toSeq == want, mode)
+    }
+    // a document without a complete 16-char frame gives no row
+    val docs = Seq[(Long, String)](1L -> null, 2L -> "", 3L -> ("x" * 15), 4L -> ("é" * 16), 5L -> ("y" * 40))
+      .toDF("doc_id", "text")
+    val kept = operators.Multimodal.frameCensus(docs, "scene_census(frame_sums(text, 16), 40)")
+      .select(col("doc_id"), col("c.n_frames")).collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(kept.sorted.toSeq == Seq((4L, 1L), (5L, 2L)))
+  }
+
   test("Crc24 matches the CRC-24/OPENPGP check value and the RFC 4880 empty init") {
     assert(graft.functions.Crc24.crc("123456789".getBytes("UTF-8")) == 0x21CF02L)
     assert(graft.functions.Crc24.crc(Array.empty[Byte]) == 0xB704CEL)

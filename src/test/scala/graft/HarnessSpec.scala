@@ -102,7 +102,8 @@ class HarnessSpec extends AnyFunSuite with TempDirs {
         "svec_dot", "porter_stem", "unicode_normalize", "pair_emit",
         "pair_emit_sized", "pair_emit_sized_all", "winnow_fps", "crc24",
         "word_census", "word_stats",
-        "frame_sums", "frame_energy", "french_stem", "russian_stem",
+        "frame_sums", "frame_energy", "scene_census", "voiced_runs",
+        "french_stem", "russian_stem",
         "pgp_sym_encrypt_det",
         "metaphone", "daitch_mokotoff",
         "char_grams", "jump_hash", "word_grams31",

@@ -1004,6 +1004,83 @@ class InvariantsSpec extends AnyFunSuite {
     }
   }
 
+  // Reference renditions of m06, m08 and m09: the frames exploded into
+  // rows, segmented by doc-partitioned windows and rolled up (m09 joins
+  // its picks back to a frame spool)
+  private def energySegmentsByWindows(docs: DataFrame): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id")).orderBy(col("f"))
+    val frames = docs.filter(col("doc_id") < 200 && col("n_chars") >= 32)
+      .select(col("doc_id"), posexplode(expr("frame_energy(text, 16)")).as(Seq("f", "energy")))
+      .select(col("doc_id"), col("f"), (col("energy") >= 40000L).as("voiced"))
+    val tot = frames.groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_frames"), sum(col("voiced").cast("long")).as("n_voiced"))
+    val segs = frames.filter(col("voiced"))
+      .withColumn("island", col("f") - row_number().over(w))
+      .groupBy(col("doc_id"), col("island")).agg(count(lit(1)).as("len"))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_segments"), max(col("len")).as("max_seg_len"))
+    tot.join(segs, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_frames"), col("n_voiced"),
+        coalesce(col("n_segments"), lit(0L)).as("n_segments"),
+        coalesce(col("max_seg_len"), lit(0L)).as("max_seg_len"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** (frames, scenes): frame sums of documents ≥ 64 chars, and each
+    * frame's scene from a lag window and a running sum of cuts. */
+  private def scenesByWindows(docs: DataFrame): (DataFrame, DataFrame) = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id")).orderBy(col("f"))
+    val frames = docs.filter(col("n_chars") >= 64)
+      .select(col("doc_id"), posexplode(expr("frame_sums(text, 16)")).as(Seq("f", "feat")))
+      .localCheckpoint()
+    val scenes = frames
+      .withColumn("prev", lag(col("feat"), 1).over(w))
+      .withColumn("cut", when(col("prev").isNull || abs(col("feat") - col("prev")) > 40, 1L)
+        .otherwise(0L))
+      .withColumn("scene", sum(col("cut")).over(
+        w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
+    (frames, scenes)
+  }
+
+  private def sceneCutsByWindows(docs: DataFrame): DataFrame =
+    scenesByWindows(docs)._2
+      .groupBy(col("doc_id"), col("scene")).agg(count(lit(1)).as("scene_len"))
+      .groupBy(col("doc_id"))
+      .agg(sum(col("scene_len")).as("n_frames"), count(lit(1)).as("n_scenes"),
+        max(col("scene_len")).as("longest_scene"),
+        round(sum(col("scene_len")).cast("double") / count(lit(1)), 6).as("mean_scene_len"))
+      .orderBy(col("doc_id"))
+
+  private def sceneSampleByWindows(docs: DataFrame): DataFrame = {
+    val (frames, scenes) = scenesByWindows(docs)
+    val picks = scenes
+      .groupBy(col("doc_id"), col("scene")).agg(min(col("f")).as("s0"), count(lit(1)).as("len"))
+      .select(col("doc_id"), col("scene"), explode(expr(
+        """array_distinct(array(CAST(s0 AS INT), CAST(s0 + (len - 1) div 2 AS INT),
+             CAST(s0 + len - 1 AS INT)))""")).as("f"))
+    picks.join(frames, Seq("doc_id", "f"))
+      .groupBy(col("doc_id"))
+      .agg(countDistinct(col("scene")).as("n_scenes"), count(lit(1)).as("n_sampled"),
+        sum(col("feat")).as("sampled_feat_sum"))
+      .orderBy(col("doc_id"))
+  }
+
+  test("m06, m08 and m09 equal their windowed frame-row renditions row for row at sf0.01") {
+    val sf = new java.io.File(Sf).getParent + "/sf0.01"
+    val s = spark.newSession()
+    try {
+      Tables.register(s, sf)
+      val docs = Tables.df(s, sf, "documents")
+      for ((n, ref) <- Seq("m06_energy_segments" -> energySegmentsByWindows _,
+                           "m08_scene_cuts" -> sceneCutsByWindows _,
+                           "m09_scene_frame_sample" -> sceneSampleByWindows _)) {
+        val got = SparkEntry.queries(n)(s, sf).collect().toSeq
+        assert(got.size >= 200, s"$n: ${got.size} rows")
+        assert(got == ref(docs).collect().toSeq, n)
+      }
+    } finally Harness.hygiene(s)
+  }
+
   test("id01: ids are dense 1..N and the assignment is parallelism-invariant") {
     val base = q("id01_sequence_alloc").collect()
       .map(r => (r.getLong(0), r.getLong(1)))

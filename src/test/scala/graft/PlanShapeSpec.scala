@@ -147,9 +147,11 @@ class PlanShapeSpec extends AnyFunSuite {
     // the SQL-surface recursive CTE — the RecursiveUnion + WorkTableScan
     // pair (nodeRecursiveunion.c) — must run as Spark's UnionLoop
     // operator, not be silently flattened
-    val p = SparkEntry.queries("r03_recursive_sql")(spark, Sf)
-      .queryExecution.executedPlan.toString
+    val plan = SparkEntry.queries("r03_recursive_sql")(spark, Sf).queryExecution.executedPlan
+    val p = plan.toString
     assert(p.contains("UnionLoop"), s"expected UnionLoop in r03:\n$p")
+    // and the plan fingerprint names it, so plan_diff shows a move off it
+    assert(PlanDump.fingerprint(plan).get("union_loop").contains(1), s"${PlanDump.fingerprint(plan)}")
   }
 
   test("r09, cb01 and r10 run without UnionLoop, in fewer jobs than their native texts") {
@@ -936,10 +938,27 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!p.contains("Window"), p)
   }
 
-  test("m06: the island window partitions by doc_id — no global sort") {
-    val p = plan("m06_energy_segments")
-    assert(!p.linesIterator.exists(l => l.contains("Window") && !l.contains("doc_id")),
-      s"the segmentation window must partition by doc_id:\n$p")
+  test("m06, m08 and m09: one frame-segmentation kernel per document — no window, explode or spool") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import graft.functions.{FrameFeats, SceneCensus, VoicedRuns}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    for (name <- Seq("m06_energy_segments", "m08_scene_cuts", "m09_scene_frame_sample")) {
+      val df = SparkEntry.queries(name)(spark, Sf)
+      val p = finalPlan(df)
+      val fp = PlanDump.fingerprint(df.queryExecution.executedPlan)
+      for (k <- Seq("window", "generate", "scan.local", "agg.hash"))
+        assert(!fp.contains(k), s"$name has $k:\n$p")
+      val exprs = nodes(df.queryExecution.executedPlan).flatMap(_.expressions)
+      val kernels = exprs.map(_.collect { case k @ (_: SceneCensus | _: VoicedRuns) => k }.size).sum
+      val frames = exprs.map(_.collect { case f: FrameFeats => f }.size).sum
+      assert(kernels == 1 && frames == 1,
+        s"$name evaluates $kernels segmentation kernels over $frames frame arrays:\n$p")
+    }
   }
 
   test("h19: the OR-of-ANDs bracket still pushes per-table filters to the scans") {
