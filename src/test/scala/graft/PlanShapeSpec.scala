@@ -938,6 +938,31 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!p.contains("Window"), p)
   }
 
+  test("m06: the island window partitions by doc_id — no global sort") {
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import graft.functions.VoicedRuns
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val df = SparkEntry.queries("m06_energy_segments")(spark, Sf)
+    val p = finalPlan(df)
+    assert(!p.linesIterator.exists(l => l.contains("Window") && !l.contains("doc_id")),
+      s"the segmentation window must partition by doc_id:\n$p")
+    // the islands are found inside each document's row (voiced_runs), so
+    // the segmentation runs on the scan's partitions: no sort or shuffle
+    // under it, and the only sort is the final ORDER BY doc_id
+    val seg = nodes(df.queryExecution.executedPlan)
+      .filter(_.expressions.exists(_.find(_.isInstanceOf[VoicedRuns]).isDefined))
+    assert(seg.size == 1, s"expected one node evaluating voiced_runs:\n$p")
+    val below = nodes(seg.head)
+    assert(!below.exists(n => n.isInstanceOf[SortExec] || n.isInstanceOf[Exchange]),
+      s"the segmentation must not wait on a sort or shuffle:\n$p")
+  }
+
   test("m06, m08 and m09: one frame-segmentation kernel per document — no window, explode or spool") {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
