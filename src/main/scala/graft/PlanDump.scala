@@ -7,23 +7,41 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExc
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
-/** Executed-plan FINGERPRINT dump — the plan-regression detector the
-  * r16 verdict asked for (next-round #5a): PlanShapeSpec pins ~40
-  * hand-chosen shapes, but a silent AQE strategy flip on any OTHER
-  * query (the ds16 class: a lineitem-derived side slipping under the
-  * broadcast threshold) only surfaced as a bench anomaly hunted by
-  * hand. This dump records, for EVERY SparkEntry query, the counts of
-  * the scale-relevant physical nodes — shuffle/broadcast exchanges,
-  * join algorithms WITH their join types, aggregates, sorts, windows,
-  * expands, generates, scans-with-pushed-filters — so a plan change
-  * between rounds is a one-line `scripts/plan_diff.py` diff instead of
-  * a bench hunt. Runs at sf0.001 (plans there are deterministic given
-  * code + data; the bench-SF plan can differ by AQE thresholds, which
-  * is fine — the diff tracks drift, not absolutes).
+/** Executed-plan nodes, and the FINGERPRINT dump built on them.
+  *
+  * `nodes` is the one plan walker: the plan specs (PlanShapeSpec,
+  * KernelFilterSpec, BindExpensiveFilterSpec) assert predicates over
+  * the nodes it returns, and `fingerprint` counts the scale-relevant
+  * ones — shuffle/broadcast exchanges, join algorithms WITH their join
+  * types, aggregates, sorts, windows, expands, generates,
+  * scans-with-pushed-filters — for EVERY SparkEntry query, so a plan
+  * change between rounds (a silent AQE broadcast flip, the ds16 class)
+  * is a one-line `scripts/plan_diff.py` diff instead of a bench hunt.
+  * Runs at sf0.001 (plans there are deterministic given code + data;
+  * the bench-SF plan can differ by AQE thresholds, which is fine — the
+  * diff tracks drift, not absolutes).
   *
   * Usage: runMain graft.PlanDump [sfDir=/root/testdata/sf0.001] [out=PLANS_sf0.001.json]
   */
 object PlanDump {
+
+  /** Every node of a FINAL (post-AQE) plan, root first: descends into
+    * adaptive plans, query stages and the scalar/IN subquery plans that
+    * hang off expressions. A ReusedExchange is a leaf — the subtree it
+    * shares is walked once, where it is defined. */
+  def nodes(root: SparkPlan): Seq[SparkPlan] = {
+    val kids = root match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _: ReusedExchangeExec => Nil
+      case other => other.children
+    }
+    val subqueries = root.expressions.flatMap(_.collect {
+      case sub: org.apache.spark.sql.execution.ScalarSubquery => sub.plan
+      case sub: org.apache.spark.sql.execution.InSubqueryExec => sub.plan
+    })
+    root +: (kids ++ subqueries).flatMap(nodes)
+  }
 
   /** Join types print ExistenceJoin's witness attribute WITH its
     * expression id (`ExistenceJoin(exists#18091)`) — strip ids so the
@@ -31,62 +49,42 @@ object PlanDump {
   private def jt(t: org.apache.spark.sql.catalyst.plans.JoinType): String =
     t.toString.replaceAll("#\\d+", "")
 
-  /** Count scale-relevant node kinds in a FINAL (post-AQE) plan tree.
-    * Keys are stable strings so the JSON diffs cleanly. */
-  def fingerprint(root: SparkPlan): Map[String, Int] = {
-    val counts = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
-    def walk(p: SparkPlan): Unit = {
-      val key: Option[String] = p match {
-        case _: QueryStageExec | _: WholeStageCodegenExec | _: InputAdapter => None
-        case s: ShuffleExchangeExec =>
-          Some(s"exchange.shuffle.${s.outputPartitioning.getClass.getSimpleName}")
-        case _: BroadcastExchangeExec => Some("exchange.broadcast")
-        case _: ReusedExchangeExec => Some("exchange.reused")
-        case j: BroadcastHashJoinExec => Some(s"join.broadcast_hash.${jt(j.joinType)}")
-        case j: ShuffledHashJoinExec => Some(s"join.shuffled_hash.${jt(j.joinType)}")
-        case j: SortMergeJoinExec => Some(s"join.sort_merge.${jt(j.joinType)}")
-        case j: BroadcastNestedLoopJoinExec => Some(s"join.bnl.${jt(j.joinType)}")
-        case _: CartesianProductExec => Some("join.cartesian")
-        case _: HashAggregateExec => Some("agg.hash")
-        case _: ObjectHashAggregateExec => Some("agg.object_hash")
-        case _: SortAggregateExec => Some("agg.sort")
-        case _: SortExec => Some("sort")
-        case _: TakeOrderedAndProjectExec => Some("limit.take_ordered")
-        case _: WindowExec => Some("window")
-        case _: WindowGroupLimitExec => Some("window.group_limit")
-        case _: ExpandExec => Some("expand")
-        case _: GenerateExec => Some("generate")
-        case _: UnionExec => Some("union")
-        // native WITH RECURSIVE: the loop plans its anchor and recursion
-        // per level at run time, so only the loop itself is counted
-        case _: UnionLoopExec => Some("union_loop")
-        case _: LocalTableScanExec | _: RDDScanExec => Some("scan.local")
-        case s: FileSourceScanExec =>
-          Some(if (s.dataFilters.nonEmpty) "scan.file.filtered" else "scan.file")
-        case _: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          Some("scan.v2")
-        case _ => None
-      }
-      key.foreach(k => counts(k) += 1)
-      val kids = p match {
-        case q: QueryStageExec => Seq(q.plan)
-        case r: ReusedExchangeExec => Seq.empty[SparkPlan] // counted, not descended: shared subtree fingerprints once
-        case w: WholeStageCodegenExec => Seq(w.child)
-        case i: InputAdapter => Seq(i.child)
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case other => other.children
-      }
-      kids.foreach(walk)
-      // scalar/IN subquery plans hang off expressions, not children
-      p.expressions.foreach(_.foreach {
-        case sub: org.apache.spark.sql.execution.ScalarSubquery => walk(sub.plan)
-        case sub: org.apache.spark.sql.execution.InSubqueryExec => walk(sub.plan)
-        case _ =>
-      })
-    }
-    walk(root)
-    counts.toMap
+  /** The fingerprint key of a scale-relevant node; stable strings so the
+    * JSON diffs cleanly. */
+  private def key(p: SparkPlan): Option[String] = p match {
+    case s: ShuffleExchangeExec =>
+      Some(s"exchange.shuffle.${s.outputPartitioning.getClass.getSimpleName}")
+    case _: BroadcastExchangeExec => Some("exchange.broadcast")
+    case _: ReusedExchangeExec => Some("exchange.reused")
+    case j: BroadcastHashJoinExec => Some(s"join.broadcast_hash.${jt(j.joinType)}")
+    case j: ShuffledHashJoinExec => Some(s"join.shuffled_hash.${jt(j.joinType)}")
+    case j: SortMergeJoinExec => Some(s"join.sort_merge.${jt(j.joinType)}")
+    case j: BroadcastNestedLoopJoinExec => Some(s"join.bnl.${jt(j.joinType)}")
+    case _: CartesianProductExec => Some("join.cartesian")
+    case _: HashAggregateExec => Some("agg.hash")
+    case _: ObjectHashAggregateExec => Some("agg.object_hash")
+    case _: SortAggregateExec => Some("agg.sort")
+    case _: SortExec => Some("sort")
+    case _: TakeOrderedAndProjectExec => Some("limit.take_ordered")
+    case _: WindowExec => Some("window")
+    case _: WindowGroupLimitExec => Some("window.group_limit")
+    case _: ExpandExec => Some("expand")
+    case _: GenerateExec => Some("generate")
+    case _: UnionExec => Some("union")
+    // native WITH RECURSIVE: the loop plans its anchor and recursion
+    // per level at run time, so only the loop itself is counted
+    case _: UnionLoopExec => Some("union_loop")
+    case _: LocalTableScanExec | _: RDDScanExec => Some("scan.local")
+    case s: FileSourceScanExec =>
+      Some(if (s.dataFilters.nonEmpty) "scan.file.filtered" else "scan.file")
+    case _: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+      Some("scan.v2")
+    case _ => None
   }
+
+  /** Count scale-relevant node kinds in a FINAL (post-AQE) plan tree. */
+  def fingerprint(root: SparkPlan): Map[String, Int] =
+    nodes(root).flatMap(key).groupBy(identity).map { case (k, ks) => k -> ks.size }
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")

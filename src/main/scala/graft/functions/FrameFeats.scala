@@ -31,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the m-family's documented stub.
   */
 case class FrameFeats(child: Expression, width: Int, energy: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with DerivationKernel {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = if (energy) "frame_energy" else "frame_sums"
@@ -52,7 +52,7 @@ case class FrameFeats(child: Expression, width: Int, energy: Boolean)
   * caught by the r10 length-axis sweep at 4.8×/64× length); this
   * materializes the codepoint array once and emits all ⌈L−n+1⌉ grams in
   * O(L·n). Same gram set/order as the positional form. */
-case class CharGrams(child: Expression, n: Int) extends UnaryExpression {
+case class CharGrams(child: Expression, n: Int) extends UnaryExpression with DerivationKernel {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "char_grams"
 

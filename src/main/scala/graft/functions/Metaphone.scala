@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * static kernel), so the corpus pass stays in one WholeStageCodegen
   * span.
   */
-case class MetaphoneExpr(child: Expression, maxLen: Int) extends UnaryExpression {
+case class MetaphoneExpr(child: Expression, maxLen: Int) extends UnaryExpression with DerivationKernel {
   override def dataType: DataType = StringType
   override def prettyName: String = "metaphone"
 

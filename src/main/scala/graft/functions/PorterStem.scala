@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * token CENSUS (vocabulary-sized by Heaps' law) once and broadcast-
   * joining the dictionary back, which is what f14 does.
   */
-case class PorterStem(child: Expression) extends UnaryExpression {
+case class PorterStem(child: Expression) extends UnaryExpression with DerivationKernel {
   override def dataType: DataType = StringType
   override def prettyName: String = "porter_stem"
 

@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * similarity; winnowing is the scale-stable subsample of exactly that
   * signature space.
   */
-case class WinnowFps(child: Expression, k: Int, w: Int) extends UnaryExpression {
+case class WinnowFps(child: Expression, k: Int, w: Int) extends UnaryExpression with DerivationKernel {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "winnow_fps"

@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `explode(filter(split(text, ' '), x -> x <> ''))` followed by a
   * (doc, tok) count computes relationally. Null text gives null, text
   * without tokens an empty array. */
-case class WordCensusExpr(child: Expression) extends UnaryExpression {
+case class WordCensusExpr(child: Expression) extends UnaryExpression with DerivationKernel {
 
   override def dataType: DataType = WordCensus.CensusType
   override def prettyName: String = "word_census"
@@ -34,7 +34,7 @@ case class WordCensusExpr(child: Expression) extends UnaryExpression {
   * DISTINCT stop words occur, `slc` = Σ cnt·lnμ(cnt) — each equal to the
   * aggregate the relational census computes over the same rows. The stop
   * list is a comma-separated string literal, folded at registration. */
-case class WordStats(child: Expression, stopList: String) extends UnaryExpression {
+case class WordStats(child: Expression, stopList: String) extends UnaryExpression with DerivationKernel {
 
   @transient private lazy val stops: Array[Array[Byte]] = WordCensus.stopWords(stopList)
 

@@ -24,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * is its own shingle).
   */
 case class WordGrams(child: Expression, n: Int, emptyOnShort: Boolean)
-  extends UnaryExpression {
+  extends UnaryExpression with DerivationKernel {
 
   require(n >= 1, s"word_grams31: n must be >= 1, got $n")
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 
+import graft.functions.DerivationKernel
+
 /** The f09 substitution class fixed at the ENGINE level (PROF_r16/r17):
   * predicate pushdown substitutes aliases into Filter conditions with
   * no cost guard (only CollapseProject checks multi-reference), so a
@@ -43,30 +45,12 @@ import org.apache.spark.sql.catalyst.rules.Rule
   */
 object BindExpensiveFilterRule extends Rule[LogicalPlan] with PredicateHelper {
 
-  /** The expensive text→array derivation kernels — the Expression-level
-    * twin of KernelFilterAudit.Derivation, CLASS FOR CLASS. The r17
-    * advice flagged the previous `graft.functions.*` blanket: cheap
-    * codegen kernels (JumpHash, VecDot, ZOrder, ...) live in the same
-    * package, and binding a conjunct over one of those would wrap a
-    * scan-pushable predicate into exists() — forfeiting its
-    * PushedFilter for no per-row saving. Only the chains whose
-    * repetition IS the measured defect tag here. */
-  private def isDerivationKernel(e: Expression): Boolean = e match {
-    case _: StringSplit => true
-    case _: Sentences => true
-    case _: RegExpExtractAll => true
-    case _: graft.functions.WordGrams => true
-    case _: graft.functions.CharGrams => true
-    case _: graft.functions.FrameFeats => true
-    case _: graft.functions.WinnowFps => true
-    case _: graft.functions.WordCensusExpr => true
-    case _: graft.functions.WordStats => true
-    case _: graft.functions.MetaphoneExpr => true
-    case _: graft.functions.PorterStem => true
-    case _ => false
-  }
-
-  private def isExpensive(e: Expression): Boolean = e.exists(isDerivationKernel)
+  /** A candidate must contain a text→array derivation kernel, from the
+    * one list `graft.functions.DerivationKernel` keeps: binding a
+    * conjunct over a cheap codegen kernel (JumpHash, VecDot, ZOrder, ...)
+    * would wrap a scan-pushable predicate into exists() — forfeiting its
+    * PushedFilter for no per-row saving (the r17 advice). */
+  private def isExpensive(e: Expression): Boolean = e.exists(DerivationKernel.matches)
 
   private def nodeCount(e: Expression): Int = 1 + e.children.map(nodeCount).sum
 

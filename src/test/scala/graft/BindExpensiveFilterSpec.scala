@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, sources}
+import org.apache.spark.sql.catalyst.expressions.ArrayExists
+import org.apache.spark.sql.execution.FilterExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -51,23 +53,18 @@ class BindExpensiveFilterSpec extends AnyFunSuite with TempDirs {
     try body finally spark.experimental.extraOptimizations = saved
   }
 
-  private def filterLines(df: DataFrame): Seq[String] = {
-    df.collect()
-    df.queryExecution.executedPlan.toString.linesIterator
-      .filter(l => l.contains("Filter") || l.contains("DataFilters")).toSeq
-  }
+  /** Some FilterExec binds its condition through exists(). */
+  private def binds(s: Shape): Boolean =
+    s.all[FilterExec].exists(_.condition.exists(_.isInstanceOf[ArrayExists]))
 
-  private def occ(l: String, k: String): Int =
-    l.split(java.util.regex.Pattern.quote(k), -1).length - 1
+  /** KernelFilterSpec's predicate: no derivation kernel repeats inside
+    * one filter condition or one scan's dataFilters. */
+  private def noRepeat(s: Shape): Boolean = KernelFilterAudit.repeats(s.plan).isEmpty
 
   test("the rule binds a twice-inlined tokenize chain to one evaluation") {
-    val df = slowSpelling(corpus)
-    val lines = filterLines(df)
-    assert(lines.nonEmpty)
-    assert(lines.forall(l => occ(l, "split(") <= 1),
-      s"chain must appear at most once per filter line:\n${lines.mkString("\n")}")
-    assert(lines.exists(_.contains("exists(")),
-      s"expected the exists binding in:\n${lines.mkString("\n")}")
+    val s = shape(slowSpelling(corpus))
+    assert(noRepeat(s), s"chain must appear at most once per filter:\n$s")
+    assert(binds(s), s"expected the exists binding in:\n$s")
   }
 
   test("bound and unbound plans return identical rows (incl. NULL/empty text)") {
@@ -75,8 +72,9 @@ class BindExpensiveFilterSpec extends AnyFunSuite with TempDirs {
     val unbound = withoutRule {
       val df = slowSpelling(corpus)
       // sanity: without the rule the chain really is duplicated
-      assert(filterLines(df).exists(l => occ(l, "split(") >= 2),
-        "control plan must carry the duplicated chain")
+      val s = shape(df)
+      assert(KernelFilterAudit.repeats(s.plan).exists(_._2 == "split"),
+        s"control plan must carry the duplicated chain:\n$s")
       df.collect().map(_.toSeq).sortBy(_.head.toString)
     }
     assert(bound.toSeq == unbound.toSeq)
@@ -84,13 +82,10 @@ class BindExpensiveFilterSpec extends AnyFunSuite with TempDirs {
   }
 
   test("cheap conjuncts stay outside the binding and keep pushing to the scan") {
-    val df = slowSpelling(corpus.filter(col("doc_id") > 1))
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("PushedFilters:") && p.contains("GreaterThan(doc_id,1)"),
-      s"cheap conjunct must still reach the scan:\n$p")
-    assert(p.linesIterator.filter(l => l.contains("Filter"))
-      .forall(l => occ(l, "split(") <= 1), s"binding must still apply:\n$p")
+    val s = shape(slowSpelling(corpus.filter(col("doc_id") > 1)))
+    assert(s.pushed.contains(sources.GreaterThan("doc_id", 1L)),
+      s"cheap conjunct must still reach the scan:\n$s")
+    assert(noRepeat(s), s"binding must still apply:\n$s")
   }
 
   test("a single-occurrence expensive filter is left untouched") {
@@ -99,10 +94,8 @@ class BindExpensiveFilterSpec extends AnyFunSuite with TempDirs {
       .withColumn("tf_a", expr("size(filter(toks, x -> x = 'merge'))"))
       .filter(col("tf_a") > 0)
       .select(col("doc_id"), col("tf_a"))
-    df.collect()
-    val lines = filterLines(df)
-    assert(lines.forall(l => !l.contains("exists(")),
-      s"no binding expected for a single occurrence:\n${lines.mkString("\n")}")
+    val s = shape(df)
+    assert(!binds(s), s"no binding expected for a single occurrence:\n$s")
     assert(df.collect().map(_.getLong(0)).sorted sameElements Array(1L, 3L, 6L))
   }
 
@@ -124,9 +117,8 @@ class BindExpensiveFilterSpec extends AnyFunSuite with TempDirs {
            AND tf_a >= (SELECT min(doc_id) FROM bind_corpus)""")
     val rows = df.collect().map(_.getLong(0)).sorted
     assert(rows sameElements Array(1L, 6L))
-    val lines = filterLines(df)
-    assert(lines.forall(l => !l.contains("exists(")),
-      s"the rewrite must not fire next to a subquery conjunct:\n${lines.mkString("\n")}")
+    val s = shape(df)
+    assert(!binds(s), s"the rewrite must not fire next to a subquery conjunct:\n$s")
   }
 
   test("a repeated CHEAP graft kernel does not tag as a derivation (r17 advice: no blanket)") {
@@ -136,10 +128,8 @@ class BindExpensiveFilterSpec extends AnyFunSuite with TempDirs {
     val df = corpus
       .filter(expr("jump_hash(doc_id, 8) >= 0 AND jump_hash(doc_id, 8) <= 7"))
       .select(col("doc_id"))
-    df.collect()
-    val lines = filterLines(df)
-    assert(lines.forall(l => !l.contains("exists(")),
-      s"cheap kernels must not bind:\n${lines.mkString("\n")}")
+    val s = shape(df)
+    assert(!binds(s), s"cheap kernels must not bind:\n$s")
     assert(df.collect().length == 6)
   }
 

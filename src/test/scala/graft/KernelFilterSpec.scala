@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The f09 substitution class as a FAILING TEST (r16 verdict #3): for
   * every text / dedup / chunking / multimodal / similarity query,
   * assert no text-derivation kernel (split/sentences/word_grams/
-  * porter_stem/...) appears twice in a single Filter or DataFilters
-  * line of the executed plan. Predicate pushdown substitutes aliases
+  * porter_stem/...) appears twice in one FilterExec condition or one
+  * scan's dataFilters of the executed plan (`KernelFilterAudit.repeats`,
+  * the predicate BindExpensiveFilterSpec checks too). Predicate pushdown substitutes aliases
   * into pushed filters with no cost guard, so a `.filter` referencing
   * a text-derived column k times re-evaluates the tokenize chain k
   * times per corpus row — a constant factor the length-axis scaling
@@ -33,21 +34,21 @@ class KernelFilterSpec extends AnyFunSuite {
 
   for (n <- KernelFilterAudit.auditedNames) {
     test(s"$n: no derivation kernel repeats in one Filter line") {
-      val p = try {
+      val (plan, found) = try {
         val df = SparkEntry.queries(n)(spark, Sf)
         df.queryExecution.toRdd.count() // settle AQE
-        df.queryExecution.executedPlan.toString
+        val plan = df.queryExecution.executedPlan
+        (plan, KernelFilterAudit.repeats(plan))
       } finally Harness.hygiene(spark) // no later query (in ANY suite) runs under its state
-      if (KernelFilterAudit.hasSignature(p)) {
+      if (found.nonEmpty) {
         allow.get(n) match {
           case Some(reason) => info(s"allowlisted: $reason")
           case None =>
-            val lines = KernelFilterAudit.filterKernelCounts(p).filter(_._2 >= 2)
-              .map { case (k, c, l) => s"$k x$c in: ${l.trim.take(300)}" }
+            val lines = found.map { case (node, k, c) => s"$k x$c in: ${node.simpleString(25).take(300)}" }
             fail(s"f09 substitution signature (re-evaluated text kernel " +
               s"in a pushed filter) — bind the derived column once " +
               s"(exists(array(col), t -> P(t))) or filter on a cheap " +
-              s"pushable equivalent:\n${lines.mkString("\n")}")
+              s"pushable equivalent:\n${lines.mkString("\n")}\n$plan")
         }
       }
     }
