@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 
 /** The one session and session-state discipline every main and the test
@@ -86,6 +86,61 @@ object Harness {
     rules.AqumvRule.clear()
   }
 
+  /** One query's run: its seconds and what the action returned, or the
+    * error the query threw. */
+  final case class Run[T](seconds: Double, result: Either[Throwable, T])
+
+  /** [[run]]'s default action: the query's own executed plan run to
+    * completion (see [[Bench]] for why not `df.count()`). */
+  val execute: DataFrame => Long = _.queryExecution.toRdd.count()
+
+  /** Run one `SparkEntry` query: the loop body every main shares. The
+    * timed window opens before the query's builder makes its frame (the
+    * spools and fixpoint actions a builder runs belong to the query) and
+    * closes when `action` returns. A failure is reported on stderr and
+    * returned, not thrown. [[hygiene]] runs after the window, whether or
+    * not the query failed. */
+  def run[T](spark: SparkSession, sf: String, name: String, action: DataFrame => T): Run[T] = {
+    val t0 = System.nanoTime()
+    def seconds = (System.nanoTime() - t0) / 1e9
+    try {
+      val result = action(SparkEntry.queries(name)(spark, sf))
+      Run(seconds, Right(result))
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[harness] $name @ $sf FAILED: ${e.getMessage}")
+        Run(seconds, Left(e))
+    } finally hygiene(spark)
+  }
+
+  /** [[run]] with the default action, [[execute]]. */
+  def run(spark: SparkSession, sf: String, name: String): Run[Long] = run(spark, sf, name, execute)
+
+  /** One timed query of a sweep: `name` at `sf`, run after `conf` is set. */
+  final case class Cell(sf: String, name: String, conf: Map[String, String] = Map.empty)
+
+  /** `passes` separated sweeps over `cells`, each pass running every cell
+    * once in order, so the passes of one cell are a whole sweep apart
+    * (Bench's contention rule). Returns each cell's seconds per pass, -1
+    * for a failed pass; [[official]] reduces them to the one number. */
+  def sweeps(spark: SparkSession, cells: Seq[Cell], passes: Int): Map[Cell, Seq[Double]] =
+    (1 to passes).flatMap(_ => cells.map { c =>
+      c.conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      val r = run(spark, c.sf, c.name)
+      c -> (if (r.result.isRight) r.seconds else -1.0)
+    }).groupMap(_._1)(_._2)
+
+  /** The official time over separated sweeps: the min, -1 if any failed. */
+  def official(times: Seq[Double]): Double = if (times.exists(_ < 0)) -1.0 else times.min
+
+  /** The `env` record of a timing artifact. `cpus` is the REQUESTED
+    * $SPARK_GRAFT_CPUS, which `local[$cpus]` is built from: reporting
+    * availableProcessors there made an 8-cpu run read cpus:32, as if the
+    * env var were ignored. The box's processor count ships separately
+    * for auditing; load at start and end as in [[loadAvg]]. */
+  def env(cpus: String, loadStart: Double): String =
+    s"""{"cpus":$cpus,"available_processors":${Runtime.getRuntime.availableProcessors},"load_avg_start":$loadStart,"load_avg_end":$loadAvg}"""
+
   /** The box's 1-minute load average, -1 where the OS doesn't report it.
     * Environment audit trail (r4–r6: official runs measured 2-3.5× the
     * committed runs of identical code): load before a JVM's own work
@@ -108,8 +163,8 @@ object Harness {
   *    query's OWN executed plan to completion via `queryExecution.toRdd`
   *    (RDD count does not re-optimize the logical plan, so all projected
   *    columns are actually computed, codegen included).
-  *  - Failures are NOT swallowed into -1s: a failing query records
-  *    "error" and the process exits nonzero so the driver sees it.
+  *  - Failures are NOT swallowed: a failing query records -1, counts in
+  *    `n_failed`, and the process exits nonzero.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -119,11 +174,8 @@ object Bench {
     val spark = Harness.session(cpus)
     // JVM/codegen warmup on the smallest query so the first measured
     // query doesn't absorb one-time session costs.
-    try SparkEntry.queries.get("q13_region_nation_matrix")
-      .foreach(fn => fn(spark, sfDir).queryExecution.toRdd.count())
-    catch { case e: Throwable => System.err.println(s"[bench] warmup failed (non-fatal): ${e.getMessage}") }
+    Harness.run(spark, sfDir, "q13_region_nation_matrix")
     Harness.prepare(spark, sfDir)
-    var failed = List.empty[String]
     // Every query is timed in TWO FULL SWEEPS over the whole set, and the
     // official per-query number is the MIN of its two sweep times (r6
     // verdict #1): the sandbox the driver benches in suffers transient
@@ -136,25 +188,11 @@ object Bench {
     // in both adjacent passes while provably fast in isolation), but
     // lands on DIFFERENT queries in separated sweeps, so the min removes
     // it. Both raw sweeps ship in the artifact for auditing.
-    def sweep(): Map[String, Double] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).queryExecution.toRdd.count()
-          name -> (System.nanoTime() - t0) / 1e9
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            failed ::= name
-            name -> -1.0
-        } finally Harness.hygiene(spark) // cleanup cost excluded: t1 computed inside try
-      }.toMap
-    val s1 = sweep()
-    val s2 = sweep()
-    val results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
-      val (p1, p2) = (s1(name), s2(name))
-      val official = if (p1 < 0 || p2 < 0) -1.0 else math.min(p1, p2)
-      (name, official, p1, p2)
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    val times = Harness.sweeps(spark, names.map(Harness.Cell(sfDir, _)), passes = 2)
+    val results = names.map { name =>
+      val ts = times(Harness.Cell(sfDir, name))
+      (name, Harness.official(ts), ts(0), ts(1))
     }
     def jmap(f: ((String, Double, Double, Double)) => Double) =
       results.map(r => "\"" + r._1 + "\":" + f(r)).mkString("{", ",", "}")
@@ -162,17 +200,12 @@ object Bench {
     val raw1 = jmap(_._3)
     val raw2 = jmap(_._4)
     val total = results.collect { case (_, v, _, _) if v >= 0 => v }.sum
-    val loadEnd = Harness.loadAvg
-    // env.cpus = the REQUESTED $SPARK_GRAFT_CPUS (r18 verdict #1: the
-    // driver's 8-cpu scaling run recorded cpus:32 because this reported
-    // availableProcessors, making the artifact look like the env var was
-    // ignored — it isn't, master/local[$cpus] is built from it above).
-    // The box's processor count ships separately for auditing.
+    val nFailed = results.count(_._2 < 0)
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","n_failed":${failed.distinct.size},"timing":"min_of_2_passes","queries_pass1":$raw1,"queries_pass2":$raw2,"env":{"cpus":$cpus,"available_processors":${Runtime.getRuntime.availableProcessors},"load_avg_start":$loadStart,"load_avg_end":$loadEnd}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","n_failed":$nFailed,"timing":"min_of_2_passes","queries_pass1":$raw1,"queries_pass2":$raw2,"env":${Harness.env(cpus, loadStart)}}"""
     Files.writeString(Paths.get("bench_out.json"), line + "\n")
     println(line)
     spark.stop()
-    if (failed.nonEmpty) sys.exit(1)
+    if (nFailed > 0) sys.exit(1)
   }
 }

@@ -79,6 +79,10 @@ object PlanDump {
       Some(if (s.dataFilters.nonEmpty) "scan.file.filtered" else "scan.file")
     case _: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
       Some("scan.v2")
+    // AQE replaced a subtree it proved empty (a join with an empty side,
+    // an anti join against a non-empty broadcast): the subtree's joins
+    // and exchanges are gone from the plan, so count that they went
+    case _: EmptyRelationExec => Some("empty_relation")
     case _ => None
   }
 
@@ -96,32 +100,19 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     // same build-once DDL the bench runs outside its timed loop
     Harness.prepare(spark, dir)
-    val sb = new StringBuilder("{\n  \"sf\": \"").append(dir).append("\",\n  \"queries\": {\n")
-    var first = true
-    var nFailed = 0
-    for (n <- SparkEntry.queries.keys.toSeq.sorted
-           if subset.forall(_.contains(n))) {
-      try {
-        val df = SparkEntry.queries(n)(spark, dir)
-        df.queryExecution.toRdd.count() // settle AQE
-        val fp = fingerprint(df.queryExecution.executedPlan)
-        if (!first) sb.append(",\n")
-        first = false
-        sb.append(s"""    "$n": {""")
-        sb.append(fp.toSeq.sortBy(_._1)
-          .map { case (k, v) => s""""$k": $v""" }.mkString(", "))
-        sb.append("}")
-      } catch { case e: Throwable =>
-        nFailed += 1
-        System.err.println(s"[plandump] $n FAILED: ${e.getMessage.take(120)}")
-      } finally Harness.hygiene(spark) // no query plans under another's state
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(n => subset.forall(_.contains(n)))
+    val rows = names.flatMap { n =>
+      Harness.run(spark, dir, n, { df =>
+        Harness.execute(df) // settle AQE
+        fingerprint(df.queryExecution.executedPlan)
+      }).result.toOption.map { fp =>
+        s"""    "$n": {""" + fp.toSeq.sortBy(_._1).map { case (k, v) => s""""$k": $v""" }.mkString(", ") + "}"
+      }
     }
-    sb.append("\n  }\n}\n")
+    val nFailed = names.size - rows.size
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      sb.toString.getBytes("UTF-8"))
-    val nRun = subset.map(s => SparkEntry.queries.keys.count(s.contains))
-      .getOrElse(SparkEntry.queries.size)
-    println(s"[plandump] wrote $out (${nRun - nFailed} queries, $nFailed failed)")
+      s"""{\n  "sf": "$dir",\n  "queries": {\n${rows.mkString(",\n")}\n  }\n}\n""".getBytes("UTF-8"))
+    println(s"[plandump] wrote $out (${rows.size} queries, $nFailed failed)")
     spark.stop()
     if (nFailed > 0) sys.exit(1)
   }

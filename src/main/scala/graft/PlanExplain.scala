@@ -10,8 +10,8 @@ import java.nio.file.{Files, Paths}
   * Usage: runMain graft.PlanExplain <sfDir> <outDir> <suffix> <q1,q2,...>
   *
   * Writes <outDir>/<query>_<suffix>.txt. Uses Bench's session, build-once
-  * step and per-query hygiene, so the plans match what the bench
-  * executes. The formatted plan is the INITIAL plan (AQE
+  * step and `Harness.run`, so the plans match what the bench executes.
+  * It is the one plan-text dump. The formatted plan is the INITIAL plan (AQE
   * isFinalPlan=false) plus, appended, the post-execution final plan
   * string — both shapes matter: the initial one shows join strategy /
   * pushdown decisions, the final one shows what AQE actually ran.
@@ -40,36 +40,37 @@ object PlanExplain {
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    names.foreach { name =>
+    val failed = names.filter { name =>
       // listener events are delivered async on the listener bus: drain it
       // so earlier work's events (build-once, the previous query) are
       // dropped, and again so every build-phase action has landed before
       // snapshotting
       ListenerBus.drain(spark.sparkContext)
       spoolPlans.clear()
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      ListenerBus.drain(spark.sparkContext)
-      val built = {
-        import scala.jdk.CollectionConverters._
-        spoolPlans.asScala.toVector
-      }
-      val formatted = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      df.queryExecution.toRdd.count() // settle AQE
-      val finalPlan = df.queryExecution.executedPlan.toString
-      val buildSection =
-        if (built.isEmpty) ""
-        else built.zipWithIndex.map { case ((fn, p), i) =>
-          s"== build-phase action ${i + 1}/${built.size} ($fn) ==\n$p\n"
-        }.mkString
-      Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
-        s"== explain(formatted), initial plan ==\n$formatted\n" +
-          s"== executed plan after AQE ==\n$finalPlan\n" + buildSection)
-      println(s"[plan] wrote $outDir/${name}_$suffix.txt" +
-        (if (built.nonEmpty) s" (+${built.size} build-phase plans)" else ""))
-      Harness.hygiene(spark)
+      Harness.run(spark, sfDir, name, { df =>
+        ListenerBus.drain(spark.sparkContext)
+        val built = {
+          import scala.jdk.CollectionConverters._
+          spoolPlans.asScala.toVector
+        }
+        val formatted = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        Harness.execute(df) // settle AQE
+        val finalPlan = df.queryExecution.executedPlan.toString
+        val buildSection =
+          if (built.isEmpty) ""
+          else built.zipWithIndex.map { case ((fn, p), i) =>
+            s"== build-phase action ${i + 1}/${built.size} ($fn) ==\n$p\n"
+          }.mkString
+        Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
+          s"== explain(formatted), initial plan ==\n$formatted\n" +
+            s"== executed plan after AQE ==\n$finalPlan\n" + buildSection)
+        println(s"[plan] wrote $outDir/${name}_$suffix.txt" +
+          (if (built.nonEmpty) s" (+${built.size} build-phase plans)" else ""))
+      }).result.isLeft
     }
     spark.listenerManager.unregister(listener)
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,43 +1,42 @@
 package graft
 
-/** Single-query profiler: times one named SparkEntry query N times at a
-  * given SF dir and prints the executed plan, so a slow bench entry can
-  * be attributed to plan cost vs environment noise without a full sweep.
+/** Idle profiler: times named SparkEntry queries over N passes at a given
+  * SF dir, so a slow bench entry can be attributed to plan cost vs
+  * environment noise without a full sweep, and a conf change can be
+  * A/B'd in one JVM. `graft.PlanExplain` dumps the plans.
   *
-  * Usage: runMain graft.Prof <sfDir> <queryName>[,name2,...] [passes=3] [--plan]
+  * Usage: runMain graft.Prof <sfDir> <queryName>[,name2,...] [passes=3] [--conf key=valueA,valueB]
   *
-  * Several comma-separated names share one JVM: each pass sweeps all of
-  * them in order (so the two measurements of a query are separated in
-  * time, like Bench's two-sweep rule), and the per-query summary prints
-  * min of passes 2+ — pass 1 absorbs codegen/JIT warmup.
+  * Runs `Harness.prepare` first, then `Harness.sweeps`: each pass sweeps
+  * every name in order (so the passes of a query are separated in time,
+  * like Bench's two-sweep rule), and the per-query summary prints min of
+  * passes 2+ — pass 1 absorbs codegen/JIT warmup. With `--conf`, each
+  * pass runs the batch once per value of the conf, ALTERNATING the arms
+  * in one JVM so session drift can't masquerade as a delta (the
+  * q71-fusion / ds65-spool protocol, PROF_r14 §3b, PROF_r16).
   */
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val name = args(1)
-    val passes = args.drop(2).find(!_.startsWith("--")).map(_.toInt).getOrElse(3)
-    val showPlan = args.contains("--plan")
+    val names = args(1).split(",").toSeq
+    val passes = args.lift(2).filterNot(_.startsWith("--")).fold(3)(_.toInt)
+    val arms = args.indexOf("--conf") match {
+      case -1 => Seq(Map.empty[String, String])
+      case i =>
+        val Array(key, values) = args(i + 1).split("=", 2)
+        values.split(",").toSeq.map(v => Map(key -> v))
+    }
     val spark = Harness.session()
-    val names = name.split(",").toSeq
-    val fns = names.map(n => n -> SparkEntry.queries(n))
     // same build-once DDL the bench runs outside its timed loop
     Harness.prepare(spark, sfDir)
-    val times = scala.collection.mutable.Map.empty[String, List[Double]]
-    for (i <- 1 to passes; (n, fn) <- fns) {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).queryExecution.toRdd.count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      times(n) = times.getOrElse(n, Nil) :+ dt
-      println(f"[prof] $n pass$i: $dt%.3f s")
-      Harness.hygiene(spark)
-    }
-    for (n <- names; ts <- times.get(n); if ts.size > 1)
-      println(f"[prof] $n idle_min_p2plus: ${ts.drop(1).min}%.3f s  raw: ${ts.map(t => f"$t%.3f").mkString("/")}")
-    if (showPlan) fns.foreach { case (n, fn) =>
-      println(s"== plan: $n ==")
-      println(fn(spark, sfDir).queryExecution.executedPlan.toString)
-      Harness.hygiene(spark)
+    val cells = for (arm <- arms; n <- names) yield Harness.Cell(sfDir, n, arm)
+    val times = Harness.sweeps(spark, cells, passes)
+    for (c <- cells; ts = times(c) if ts.size > 1) {
+      val arm = c.conf.map { case (k, v) => s" $k=$v" }.mkString
+      println(f"[prof] ${c.name}$arm idle_min_p2plus: ${Harness.official(ts.drop(1))}%.3f s  raw: " +
+        ts.map(t => f"$t%.3f").mkString("/"))
     }
     spark.stop()
+    if (times.values.exists(_.exists(_ < 0))) sys.exit(1)
   }
 }

@@ -19,10 +19,11 @@ import java.nio.file.{Files, Paths}
   * O(L²) kernel shows up as ~64×. This is the axis that caught r9's m08
   * (per-frame substring walk) — the bound is MaxLenRatio.
   *
-  * Methodology mirrors Bench.scala: each query runs its executed plan to
-  * completion via queryExecution.toRdd.count(), two separated sweeps per
+  * Methodology is Bench.scala's, through the same `Harness.sweeps`: each
+  * query runs its executed plan to completion, two separated sweeps per
   * scale, official time = min of the two (strips transient sandbox
-  * contention), session hygiene between queries. The growth bound is
+  * contention), session hygiene between queries, and each dir's
+  * build-once DDL (`Harness.prepare`) before its sweeps. The growth bound is
   * ratio ≤ 13× for 10× data (linear + a generous constant for stage
   * overheads that amortize at real scale); queries exceeding it are
   * listed in the artifact under "superlinear" — the gate is the
@@ -131,126 +132,75 @@ object Scaling {
     * allowance as the verbatim length axis. */
   val MaxHeapsRatio = 2.5
 
+  /** One axis: each target's (query, base seconds, other seconds, ratio),
+    * the targets whose ratio is over the axis bound, and the
+    * `query@dir` runs that failed. */
+  private final case class Axis(rows: Seq[(String, Double, Double, Double)],
+      superlinear: Seq[String], failed: Seq[String])
+
+  /** Every target at `base` and at `other` over two sweeps that alternate
+    * the dirs, so the two passes of a query are minutes apart
+    * (Bench.scala's contention rule). */
+  private def axis(spark: org.apache.spark.sql.SparkSession, base: String, other: String,
+      targets: Seq[String], bound: Double): Axis = {
+    // warmup (codegen + JVM) on a small query, then the build-once DDL
+    // (i17/i18's persisted span state: the measured window must contain
+    // only the O(Δ) probe)
+    Seq(base, other).foreach { dir =>
+      Harness.run(spark, dir, "t21_word_entropy")
+      Harness.prepare(spark, dir)
+    }
+    val cells = for (dir <- Seq(base, other); n <- targets) yield Harness.Cell(dir, n)
+    val times = Harness.sweeps(spark, cells, passes = 2).map { case (c, ts) => c -> Harness.official(ts) }
+    val rows = targets.map { n =>
+      val (tb, to) = (times(Harness.Cell(base, n)), times(Harness.Cell(other, n)))
+      (n, tb, to, if (tb > 0 && to > 0) to / tb else -1.0)
+    }
+    Axis(rows, rows.collect { case (n, _, _, r) if r > bound => n },
+      cells.filter(times(_) < 0).map(c => s"${c.name}@${c.sf}"))
+  }
+
   def main(args: Array[String]): Unit = {
-    val smallDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val bigDir = args.lift(1).getOrElse("testdata_sf1")
-    val outPath = args.lift(2).getOrElse("SCALING_r10.json")
+    require(args.length >= 3,
+      "usage: graft.Scaling <smallDir> <bigDir> <out.json> [longDir] [heapsDir]")
+    val Array(smallDir, bigDir, outPath) = args.take(3)
     val longDir = args.lift(3).getOrElse("testdata_longdoc")
     val heapsDir = args.lift(4).getOrElse("testdata_longdoc_heaps")
-    val spark = Harness.session()
+    val cpus = Harness.envCpus
+    val spark = Harness.session(cpus)
     val loadStart = Harness.loadAvg
 
-    // warmup (codegen + JVM) on a small query at each dir; i17/i18's
-    // persisted span state builds here too (state build is DDL — the
-    // measured window must contain only the O(Δ) probe)
-    def warmDerived(dir: String): Unit = {
-      operators.Dedup.ensureSpanState(spark, dir, baseSlice = true)
-      operators.Dedup.ensureSpanState(spark, dir, baseSlice = false)
-    }
-    Seq(smallDir, bigDir).foreach { dir =>
-      try {
-        SparkEntry.queries("t21_word_entropy")(spark, dir).queryExecution.toRdd.count()
-        warmDerived(dir)
-      }
-      catch { case e: Throwable => System.err.println(s"[scaling] warmup $dir failed: ${e.getMessage}") }
-      Harness.hygiene(spark)
-    }
-
-    var failed = List.empty[String]
-    def sweep(dir: String, targets: Seq[String] = Targets): Map[String, Double] =
-      targets.map { name =>
-        val t0 = System.nanoTime()
-        try {
-          SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
-          name -> (System.nanoTime() - t0) / 1e9
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[scaling] $name @ $dir FAILED: ${e.getMessage}")
-            failed ::= s"$name@$dir"
-            name -> -1.0
-        } finally Harness.hygiene(spark)
-      }.toMap
-
-    // two separated sweeps per scale, alternating scales so the two
-    // passes of a query are minutes apart (Bench.scala's contention rule)
-    val small1 = sweep(smallDir)
-    val big1 = sweep(bigDir)
-    val small2 = sweep(smallDir)
-    val big2 = sweep(bigDir)
-    def official(m1: Map[String, Double], m2: Map[String, Double])(n: String): Double =
-      if (m1(n) < 0 || m2(n) < 0) -1.0 else math.min(m1(n), m2(n))
-
-    val rows = Targets.map { n =>
-      val ts = official(small1, small2)(n)
-      val tb = official(big1, big2)(n)
-      val ratio = if (ts > 0 && tb > 0) tb / ts else -1.0
-      (n, ts, tb, ratio)
-    }
-    val superlinear = rows.collect { case (n, _, _, r) if r > MaxRatio => n }
-
-    // LENGTH axis: short (sf0.1) vs long-doc corpus, same min-of-2
-    // alternating-sweep discipline
-    try {
-      SparkEntry.queries("t21_word_entropy")(spark, longDir).queryExecution.toRdd.count()
-      warmDerived(longDir)
-    }
-    catch { case e: Throwable => System.err.println(s"[scaling] warmup $longDir failed: ${e.getMessage}") }
-    Harness.hygiene(spark)
-    val lenShort1 = sweep(smallDir, LenTargets)
-    val lenLong1 = sweep(longDir, LenTargets)
-    val lenShort2 = sweep(smallDir, LenTargets)
-    val lenLong2 = sweep(longDir, LenTargets)
-    val lenRows = LenTargets.map { n =>
-      val ts = official(lenShort1, lenShort2)(n)
-      val tl = official(lenLong1, lenLong2)(n)
-      val ratio = if (ts > 0 && tl > 0) tl / ts else -1.0
-      (n, ts, tl, ratio)
-    }
-    val lenSuper = lenRows.collect { case (n, _, _, r) if r > MaxLenRatio => n }
-
+    val row = axis(spark, smallDir, bigDir, Targets, MaxRatio)
+    // LENGTH axis: short (sf0.1) vs long-doc corpus
+    val len = axis(spark, smallDir, longDir, LenTargets, MaxLenRatio)
     // HEAPS axis: short (sf0.1) vs vocabulary-growing long-doc corpus
-    try SparkEntry.queries("t21_word_entropy")(spark, heapsDir).queryExecution.toRdd.count()
-    catch { case e: Throwable => System.err.println(s"[scaling] warmup $heapsDir failed: ${e.getMessage}") }
-    Harness.hygiene(spark)
-    val hShort1 = sweep(smallDir, HeapsTargets)
-    val hLong1 = sweep(heapsDir, HeapsTargets)
-    val hShort2 = sweep(smallDir, HeapsTargets)
-    val hLong2 = sweep(heapsDir, HeapsTargets)
-    val heapsRows = HeapsTargets.map { n =>
-      val ts = official(hShort1, hShort2)(n)
-      val tl = official(hLong1, hLong2)(n)
-      val ratio = if (ts > 0 && tl > 0) tl / ts else -1.0
-      (n, ts, tl, ratio)
-    }
-    val heapsSuper = heapsRows.collect { case (n, _, _, r) if r > MaxHeapsRatio => n }
+    val heaps = axis(spark, smallDir, heapsDir, HeapsTargets, MaxHeapsRatio)
+    val axes = Seq(row, len, heaps)
+    val nFailed = axes.flatMap(_.failed).distinct.size
 
     def fmt(d: Double) = f"$d%.3f"
-    val qjson = rows.map { case (n, ts, tb, r) =>
-      s""""$n":{"sf0_1_sec":${fmt(ts)},"sf1_sec":${fmt(tb)},"ratio":${fmt(r)}}"""
-    }.mkString("{", ",", "}")
-    val lenJson = lenRows.map { case (n, ts, tl, r) =>
-      s""""$n":{"short_sec":${fmt(ts)},"long_sec":${fmt(tl)},"ratio":${fmt(r)}}"""
-    }.mkString("{", ",", "}")
-    val heapsJson = heapsRows.map { case (n, ts, tl, r) =>
-      s""""$n":{"short_sec":${fmt(ts)},"long_sec":${fmt(tl)},"ratio":${fmt(r)}}"""
-    }.mkString("{", ",", "}")
+    def json(a: Axis, baseKey: String, otherKey: String) =
+      a.rows.map { case (n, tb, to, r) =>
+        s""""$n":{"$baseKey":${fmt(tb)},"$otherKey":${fmt(to)},"ratio":${fmt(r)}}"""
+      }.mkString("{", ",", "}")
+    def names(ns: Seq[String]) = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line =
       s"""{"metric":"scaleup","data_factor":10,"max_ratio":$MaxRatio,""" +
-      s""""small_dir":"$smallDir","big_dir":"$bigDir","queries":$qjson,""" +
-      s""""superlinear":[${superlinear.map("\"" + _ + "\"").mkString(",")}],""" +
+      s""""small_dir":"$smallDir","big_dir":"$bigDir","queries":${json(row, "sf0_1_sec", "sf1_sec")},""" +
+      s""""superlinear":${names(row.superlinear)},""" +
       s""""length_axis":{"length_factor":64,"total_chars":"~constant",""" +
       s""""expected_linear_ratio":1.0,"max_ratio":$MaxLenRatio,"long_dir":"$longDir",""" +
-      s""""queries":$lenJson,""" +
-      s""""superlinear":[${lenSuper.map("\"" + _ + "\"").mkString(",")}]},""" +
+      s""""queries":${json(len, "short_sec", "long_sec")},""" +
+      s""""superlinear":${names(len.superlinear)}},""" +
       s""""heaps_axis":{"length_factor":64,"vocab":"grows_with_length",""" +
       s""""expected_linear_ratio":1.0,"max_ratio":$MaxHeapsRatio,"heaps_dir":"$heapsDir",""" +
-      s""""queries":$heapsJson,""" +
-      s""""superlinear":[${heapsSuper.map("\"" + _ + "\"").mkString(",")}]},""" +
-      s""""n_failed":${failed.distinct.size},"timing":"min_of_2_alternating_sweeps",""" +
-      s""""env":{"cpus":${Runtime.getRuntime.availableProcessors},"load_avg_start":$loadStart,"load_avg_end":${Harness.loadAvg}}}"""
+      s""""queries":${json(heaps, "short_sec", "long_sec")},""" +
+      s""""superlinear":${names(heaps.superlinear)}},""" +
+      s""""n_failed":$nFailed,"timing":"min_of_2_alternating_sweeps",""" +
+      s""""env":${Harness.env(cpus, loadStart)}}"""
     Files.writeString(Paths.get(outPath), line + "\n")
     println(line)
     spark.stop()
-    if (failed.nonEmpty || superlinear.nonEmpty || lenSuper.nonEmpty || heapsSuper.nonEmpty) sys.exit(1)
+    if (nFailed > 0 || axes.exists(_.superlinear.nonEmpty)) sys.exit(1)
   }
 }

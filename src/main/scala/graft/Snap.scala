@@ -9,11 +9,11 @@ object Snap {
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    for (n <- names) {
-      val df = SparkEntry.queries(n)(spark, sf)
-      println(s"""SNAP|$n|${df.count()}|${df.columns.mkString(",")}""")
-      Harness.hygiene(spark) // as QueriesSpec resets after each query
+    val failed = names.filter { n =>
+      Harness.run(spark, sf, n, df => println(s"""SNAP|$n|${df.count()}|${df.columns.mkString(",")}"""))
+        .result.isLeft
     }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

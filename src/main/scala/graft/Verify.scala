@@ -14,6 +14,18 @@ import java.nio.file.{Files, Paths}
   *  - ARRAY columns don't hash — emit array_join(...) strings or explode.
   */
 object Verify {
+  /** Dump each named query's result to `outDir/<name>` as parquet and
+    * return the names that failed. The directory an earlier run left is
+    * deleted first, so a failed query leaves no output for the compare
+    * to hash as current. */
+  def dump(spark: org.apache.spark.sql.SparkSession, sfDir: String, outDir: String,
+      names: Seq[String]): Seq[String] =
+    names.filter { name =>
+      val out = new java.io.File(outDir, name)
+      Derived.delete(out)
+      Harness.run(spark, sfDir, name, _.coalesce(1).write.parquet(out.getPath)).result.isLeft
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
@@ -22,15 +34,8 @@ object Verify {
     val only = args.drop(2).toSet
     val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally Harness.hygiene(spark) // no dump runs under another query's session state
-    }
+    val failed = dump(spark, sfDir, outDir,
+      SparkEntry.queries.keys.toSeq.sorted.filter(n => only.isEmpty || only(n)))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -47,5 +52,6 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -46,6 +46,12 @@ object PgFunctions {
       s"$what must be a string literal, got $other")
   }
 
+  private def intLit(e: Expression, what: String): Int = e match {
+    case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
+    case other => throw new IllegalArgumentException(
+      s"$what must be an int literal, got $other")
+  }
+
   private def longLit(e: Expression, what: String): Long = e match {
     case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v.toLong
     case Literal(v: Long, org.apache.spark.sql.types.LongType) => v
@@ -170,11 +176,7 @@ object PgFunctions {
     // folds at registration like pair_emit's cap
     "metaphone" -> { args =>
       require(args.length == 2, "metaphone(word, maxlen) takes 2 arguments")
-      val maxLen = args(1) match {
-        case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-        case other => throw new IllegalArgumentException(
-          s"metaphone maxlen must be an int literal, got $other")
-      }
+      val maxLen = intLit(args(1), "metaphone maxlen")
       require(maxLen > 0, "metaphone: Requested output length must be > 0")
       MetaphoneExpr(Cast(args(0), org.apache.spark.sql.types.StringType), maxLen)
     },
@@ -221,11 +223,7 @@ object PgFunctions {
     "word_grams31" -> { args =>
       require(args.length == 3,
         "word_grams31(text, n, empty_on_short) takes 3 arguments")
-      val n = args(1) match {
-        case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-        case other => throw new IllegalArgumentException(
-          s"word_grams31 n must be an int literal, got $other")
-      }
+      val n = intLit(args(1), "word_grams31 n")
       val emptyOnShort = args(2) match {
         case Literal(v: Boolean, org.apache.spark.sql.types.BooleanType) => v
         case other => throw new IllegalArgumentException(
@@ -236,62 +234,23 @@ object PgFunctions {
     // jump_hash(key, n): the cdbhash row->segment mapper; n folds at
     // registration like pair_emit's cap
     "jump_hash" -> { args =>
-      val n = args(1) match {
-        case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-        case other => throw new IllegalArgumentException(
-          s"jump_hash buckets must be an int literal, got $other")
-      }
-      JumpHash(Cast(args(0), org.apache.spark.sql.types.LongType), n)
-    },
+      JumpHash(Cast(args(0), org.apache.spark.sql.types.LongType), intLit(args(1), "jump_hash buckets")) },
     "unicode_normalize" -> { args =>
       UnicodeNorm(Cast(args(0), org.apache.spark.sql.types.StringType),
         Cast(args(1), org.apache.spark.sql.types.StringType)) },
     // pair_emit(ds, cap): sorted posting list -> candidate pairs,
     // star-degraded past cap (the literal is folded at registration)
-    "pair_emit" -> { args =>
-      val cap = args(1) match {
-        case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-        case other => throw new IllegalArgumentException(
-          s"pair_emit cap must be an int literal, got $other")
-      }
-      PairEmit(args(0), cap)
-    },
-    "pair_emit_sized" -> { args =>
-      val cap = args(1) match {
-        case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-        case other => throw new IllegalArgumentException(
-          s"pair_emit_sized cap must be an int literal, got $other")
-      }
-      PairEmitSized(args(0), cap)
-    },
-    "pair_emit_sized_all" -> { args =>
-      val cap = args(1) match {
-        case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-        case other => throw new IllegalArgumentException(
-          s"pair_emit_sized_all cap must be an int literal, got $other")
-      }
-      PairEmitSizedAll(args(0), cap)
-    },
+    "pair_emit" -> { args => PairEmit(args(0), intLit(args(1), "pair_emit cap")) },
+    "pair_emit_sized" -> { args => PairEmitSized(args(0), intLit(args(1), "pair_emit_sized cap")) },
+    "pair_emit_sized_all" -> { args => PairEmitSizedAll(args(0), intLit(args(1), "pair_emit_sized_all cap")) },
     "crc24" -> { args =>
       Crc24(Cast(args(0), org.apache.spark.sql.types.BinaryType)) },
     // frame_sums/frame_energy(text, width): per-frame codepoint folds,
     // one O(L) compiled pass per document (m06/m08 kernels)
     "frame_sums" -> { args =>
-      args(1) match {
-        case Literal(w: Int, org.apache.spark.sql.types.IntegerType) =>
-          FrameFeats(args(0), w, energy = false)
-        case other => throw new IllegalArgumentException(
-          s"frame_sums width must be an int literal, got $other")
-      }
-    },
+      FrameFeats(args(0), intLit(args(1), "frame_sums width"), energy = false) },
     "frame_energy" -> { args =>
-      args(1) match {
-        case Literal(w: Int, org.apache.spark.sql.types.IntegerType) =>
-          FrameFeats(args(0), w, energy = true)
-        case other => throw new IllegalArgumentException(
-          s"frame_energy width must be an int literal, got $other")
-      }
-    },
+      FrameFeats(args(0), intLit(args(1), "frame_energy width"), energy = true) },
     // scene_census(frame_sums(text, w), threshold) / voiced_runs(
     // frame_energy(text, w), threshold): one segmentation walk over a
     // document's frame features (m08/m09 and m06 kernels)
@@ -300,24 +259,10 @@ object PgFunctions {
     "voiced_runs" -> { args =>
       VoicedRuns(frameArray(args(0), "voiced_runs"), longLit(args(1), "voiced_runs threshold")) },
     // char_grams(text, n): all character n-grams in one O(L·n) pass
-    "char_grams" -> { args =>
-      args(1) match {
-        case Literal(n: Int, org.apache.spark.sql.types.IntegerType) =>
-          CharGrams(args(0), n)
-        case other => throw new IllegalArgumentException(
-          s"char_grams n must be an int literal, got $other")
-      }
-    },
+    "char_grams" -> { args => CharGrams(args(0), intLit(args(1), "char_grams n")) },
     // winnow_fps(text, k, w): winnowed k-gram fingerprint set (d13)
     "winnow_fps" -> { args =>
-      (args(1), args(2)) match {
-        case (Literal(k: Int, org.apache.spark.sql.types.IntegerType),
-              Literal(w: Int, org.apache.spark.sql.types.IntegerType)) =>
-          WinnowFps(args(0), k, w)
-        case other => throw new IllegalArgumentException(
-          s"winnow_fps k/w must be int literals, got $other")
-      }
-    },
+      WinnowFps(args(0), intLit(args(1), "winnow_fps k"), intLit(args(2), "winnow_fps w")) },
     // word_census(text): (tok, cnt) per distinct space-delimited token
     "word_census" -> { args =>
       WordCensusExpr(Cast(args(0), org.apache.spark.sql.types.StringType)) },

@@ -201,10 +201,14 @@ class FunctionsSpec extends AnyFunSuite {
         .filter(col("o_totalprice") > 400000.0)
       val joined = li.join(filteredOrders, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
-      val optimized = joined.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("bloom_filter") || optimized.contains("BloomFilter")
-        || optimized.contains("might_contain"),
-        s"expected a runtime bloom filter in the optimized plan:\n$optimized")
+      val optimized = joined.queryExecution.optimizedPlan
+      val probes = optimized.collect { case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        f.condition.collect {
+          case m: org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain => m
+        }
+      }.flatten
+      assert(probes.exists(_.valueExpression.references.exists(_.name == "l_orderkey")),
+        s"expected a runtime bloom filter on the lineitem probe side in the optimized plan:\n$optimized")
     } finally saved.foreach {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None) => conf.unset(k)
@@ -237,8 +241,9 @@ class FunctionsSpec extends AnyFunSuite {
     // position-keyed sampler stays exercised here (nodeSamplescan.c's
     // PRNG path): plan contains Sample and the draw is within ±4σ
     val df = Tables.df(spark, Sf, "orders").sample(withReplacement = false, 0.1, seed = 42)
-    assert(df.queryExecution.executedPlan.toString.contains("Sample"),
-      "native .sample must plan a Sample node")
+    val plan = df.queryExecution.executedPlan
+    assert(PlanDump.nodes(plan).exists(_.isInstanceOf[org.apache.spark.sql.execution.SampleExec]),
+      s"native .sample must plan a Sample node:\n$plan")
     val n = df.count().toDouble
     val total = Tables.df(spark, Sf, "orders").count().toDouble
     val sigma = math.sqrt(total * 0.1 * 0.9)

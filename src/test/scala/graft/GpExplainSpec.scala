@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.{BroadcastQueryStageExec, ShuffleQueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** EXPLAIN-dialect rendering: a migrated Cloudberry user must see the
@@ -36,9 +37,12 @@ class GpExplainSpec extends AnyFunSuite {
   test("every rendered Motion corresponds to one exchange in the executed plan") {
     val df = SparkEntry.queries("q03_shipping_priority")(spark, Sf)
     val out = GpExplain.explain(df)
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = df.queryExecution.executedPlan
     val motions = "(Redistribute|Broadcast) Motion".r.findAllIn(out).length
-    val exchanges = "(ShuffleQueryStage|BroadcastQueryStage)".r.findAllIn(plan).length
+    val exchanges = PlanDump.nodes(plan).count {
+      case _: ShuffleQueryStageExec | _: BroadcastQueryStageExec => true
+      case _ => false
+    }
     assert(motions == exchanges,
       s"rendered $motions motions but the plan has $exchanges exchanges:\n$out\n$plan")
   }

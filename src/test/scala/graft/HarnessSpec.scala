@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The session state every main plans a query under: after
-  * `Harness.hygiene` (between queries) and after `Harness.prepare`
+  * `Harness.hygiene` (between queries, which `Harness.run` calls whether
+  * or not the query failed) and after `Harness.prepare`
   * (build-once DDL, before the first query) the session holds no spool,
   * no cached plan, no matview and no RLS policy, and the confs queries
   * flip sit at the bench's values — so no query is planned under
@@ -64,6 +65,30 @@ class HarnessSpec extends AnyFunSuite with TempDirs {
       for ((k, v) <- benchConfs)
         assert(spark.conf.getOption(k).exists(_ != v), s"$k is not flipped")
     } finally Harness.hygiene(spark)
+    assertBenchState()
+  }
+
+  test("run returns a throwing query's error and still leaves the bench state") {
+    val boom = new RuntimeException("boom")
+    // x07 registers an RLS policy and i10 a matview before the action throws
+    for (n <- Seq("x07_rls_policy", "i10_aqumv_filter")) {
+      val r = Harness.run(spark, Sf, n, { df => Harness.execute(df); throw boom })
+      assert(r.result == Left(boom), n)
+      assert(r.seconds > 0, n)
+      assertBenchState()
+    }
+    val missing = Harness.run(spark, "/nonexistent/sf", "q01_pricing_summary")
+    assert(missing.result.isLeft)
+    assertBenchState()
+  }
+
+  test("Verify deletes a query's earlier dump before it runs, and reports the failure") {
+    val out = tempDir("graft_verify").toFile
+    val stale = new java.io.File(out, "q01_pricing_summary")
+    assert(new java.io.File(stale, "part-0.parquet").mkdirs())
+    val failed = Verify.dump(spark, "/nonexistent/sf", out.getPath, Seq("q01_pricing_summary"))
+    assert(failed == Seq("q01_pricing_summary"))
+    assert(!stale.exists(), "a failed query left an earlier run's output behind")
     assertBenchState()
   }
 

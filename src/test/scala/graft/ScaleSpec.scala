@@ -171,8 +171,11 @@ class ScaleSpec extends AnyFunSuite with TempDirs {
       val joined = left.join(right, Seq("k"))
       val n = joined.collect().length // run THIS plan to its final adaptive form
       assert(n == 201000, s"join row count $n")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("skew=true"), s"no skew-join split in plan:\n$plan")
+      val plan = joined.queryExecution.executedPlan
+      assert(PlanDump.nodes(plan).exists {
+        case j: org.apache.spark.sql.execution.joins.ShuffledJoin => j.isSkewJoin
+        case _ => false
+      }, s"no skew-join split in plan:\n$plan")
     } finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
